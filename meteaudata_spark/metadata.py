@@ -18,9 +18,16 @@ from __future__ import annotations
 import datetime
 import enum
 import inspect
-from typing import Any, Optional, Union
+from typing import IO, Any, Optional, Union
 
+import yaml
 from pydantic import BaseModel, ConfigDict, Field
+
+# libyaml's C emitter/parser when PyYAML was built with it: same
+# objects out as the pure-Python classes, several times faster on a
+# manifest of a few tens of kB
+_YAML_DUMPER = getattr(yaml, "CSafeDumper", yaml.SafeDumper)
+_YAML_LOADER = getattr(yaml, "CSafeLoader", yaml.SafeLoader)
 
 
 class ProcessingType(enum.Enum):
@@ -171,3 +178,13 @@ def dedup_steps(steps: list[ProcessingStep]) -> list[ProcessingStep]:
         if not any(step == s for s in seen):
             seen.append(step)
     return seen
+
+
+def dump_yaml(obj: Any, stream: IO[str]) -> None:
+    """``yaml.safe_dump`` (key order kept) through libyaml if present."""
+    yaml.dump(obj, stream, Dumper=_YAML_DUMPER, sort_keys=False)
+
+
+def load_yaml(stream: IO[str]) -> Any:
+    """``yaml.safe_load`` through libyaml if present."""
+    return yaml.load(stream, Loader=_YAML_LOADER)

@@ -30,7 +30,12 @@ from meteaudata_spark.metadata import (
     dedup_steps,
 )
 from meteaudata_spark import naming
-from meteaudata_spark.timeseries import INDEX_COL, VALUE_COL, TimeSeries
+from meteaudata_spark.timeseries import (
+    INDEX_COL,
+    VALUE_COL,
+    TimeSeries,
+    pairs_data_equal,
+)
 
 
 class SignalTransformFunctionProtocol(Protocol):
@@ -363,8 +368,11 @@ class Signal:
             or set(self.time_series) != set(other.time_series)
         ):
             return False
-        return all(
-            self.time_series[k] == other.time_series[k] for k in self.time_series
+        # all metadata first (no job), then every series of both sides
+        # in one collect per schema
+        pairs = [(ts, other.time_series[k]) for k, ts in self.time_series.items()]
+        return all(a.metadata_equal(b) for a, b in pairs) and pairs_data_equal(
+            pairs
         )
 
     def __repr__(self) -> str:

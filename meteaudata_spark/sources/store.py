@@ -18,6 +18,30 @@ reference (types.py:125-173) is only needed on the CSV interop path.
 Series names contain ``#`` (illegal in Hadoop path URIs — it starts a
 fragment), so directory names are percent-encoded.
 
+Writes are batched: ``save_signal`` and ``save_dataset`` run ONE
+Parquet write per distinct series schema, not one per series — a
+``UNION ALL`` of the series tagged by their ordinal ``__s``,
+``partitionBy("__s")`` (then ``__tpart`` for ``partition_by_time``),
+into a staging dir whose name starts with ``_`` (hidden from Spark's
+listing; under the Signal's ``data/``, or the Dataset's dir).  After
+the write commits, each ``__s=i`` dir is renamed to its series'
+``data/{encoded_name}``, so readers, the streaming sink and stores
+written before batching all see the same tree.  Upstreams the series
+share run once (exchange reuse).  The rename is a local-filesystem
+``os.rename``, as the manifest I/O already assumes a local path.  A
+series with no rows gets an empty directory (``partitionBy`` writes
+none for it), so a missing series dir still means an incomplete save
+and fails the load.  Manifests are written after the data, so a save
+cut off earlier leaves no new manifest.  The old series dirs are
+replaced only after the write commits, so a Signal cannot be saved
+over the dirs its own series read from: the save refuses that up
+front.
+
+The manifest's ``series_schemas`` holds each series' DDL schema: the
+loader hands it to ``spark.read.schema``, so a load runs no
+schema-inference job (an empty dir reads as an empty frame).
+Manifests without it still load by inference.
+
 Interop paths (deliberately driver-side, documented non-scalable):
   * CSV  — one ``{series}.csv`` per series, index as column 0
            (reference types.py:766-774 / 357-359);
@@ -38,21 +62,33 @@ import zipfile
 from typing import Optional
 
 import pandas as pd
-import yaml
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from meteaudata_spark.dataset import Dataset
+from meteaudata_spark.metadata import dump_yaml, load_yaml
 from meteaudata_spark.signal import Signal
-from meteaudata_spark.timeseries import INDEX_COL, VALUE_COL, TimeSeries
+from meteaudata_spark.timeseries import (
+    INDEX_COL,
+    SERIES_COL,
+    VALUE_COL,
+    TimeSeries,
+    union_by_schema,
+)
 from meteaudata_spark.functions.indexmeta import reconstruct_index
+
+_TIME_FORMATS = {"D": "yyyy-MM-dd", "M": "yyyy-MM", "Y": "yyyy"}
 
 
 def _enc(name: str) -> str:
     return urllib.parse.quote(name, safe="")
 
 
-def _read_series_dir(spark: SparkSession, target: str):
+def _read_series_dir(
+    spark: SparkSession, target: str, schema: Optional[str] = None
+):
     """Read a series' Parquet dir regardless of layout.
+
+    ``schema`` (a DDL string) skips Spark's schema-inference job.
 
     Three layouts exist: flat files (plain save), ``__tpart=``/
     ``__batch=`` Hive partitions (time-partitioned save / streaming
@@ -61,6 +97,7 @@ def _read_series_dir(spark: SparkSession, target: str):
     inference rejects the mixed case, so detect it and fall back to a
     recursive file listing (partition columns are derived values; the
     canonical (timestamp, value) columns live in every file)."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
     has_root_files = any(
         f.endswith(".parquet") for f in os.listdir(target)
     ) if os.path.isdir(target) else False
@@ -69,9 +106,9 @@ def _read_series_dir(spark: SparkSession, target: str):
         for f in os.listdir(target)
     ) if os.path.isdir(target) else False
     if has_root_files and has_part_dirs:
-        df = spark.read.option("recursiveFileLookup", "true").parquet(target)
+        df = reader.option("recursiveFileLookup", "true").parquet(target)
     else:
-        df = spark.read.parquet(target)
+        df = reader.parquet(target)
     internal = [c for c in df.columns if c.startswith("__")]
     return df.drop(*internal) if internal else df
 
@@ -92,48 +129,123 @@ def save_signal(
     that time bucket so time-range reads prune whole directories.  The
     right choice for huge series; pointless for small ones (one file
     per partition).
+
+    Raises ``ValueError`` if a series reads from the dirs this save
+    would replace (a Signal loaded from ``path``, or derived from one):
+    save it to another path.
     """
+    sig_dir, manifest, series = _signal_manifest(
+        signal, path, data_format, partition_by_time
+    )
+    _write_series(series, os.path.join(sig_dir, "data"), partition_by_time)
+    _write_signal_manifest(signal, sig_dir, manifest)
+    return sig_dir
+
+
+def _signal_manifest(
+    signal: Signal,
+    path: str,
+    data_format: str,
+    partition_by_time: Optional[str],
+) -> tuple[str, dict, list[tuple[DataFrame, str]]]:
+    """Make the Signal's dirs.  Return the Signal's dir, its manifest
+    and the (frame, target dir) of each series to write as Parquet."""
+    if data_format not in ("parquet", "csv"):
+        raise ValueError(f"Unknown data_format {data_format!r}")
     sig_dir = os.path.join(path, _enc(signal.name))
-    os.makedirs(sig_dir, exist_ok=True)
+    data_dir = os.path.join(sig_dir, "data")
+    os.makedirs(data_dir, exist_ok=True)
     manifest = signal.metadata_dict()
     manifest["data_format"] = data_format
     manifest["partition_by_time"] = partition_by_time
     manifest["series_dirs"] = {
         name: _enc(name) for name in signal.all_time_series
     }
-    with open(os.path.join(sig_dir, "manifest.yaml"), "w") as fh:
-        yaml.safe_dump(manifest, fh, sort_keys=False)
-    data_dir = os.path.join(sig_dir, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    fmt = {"D": "yyyy-MM-dd", "M": "yyyy-MM", "Y": "yyyy"}.get(
-        (partition_by_time or "").upper()
-    )
-    for name, ts in signal.time_series.items():
-        target = os.path.join(data_dir, _enc(name))
-        if data_format == "parquet":
-            if fmt is not None:
-                from pyspark.sql import functions as F
+    series: list[tuple[DataFrame, str]] = []
+    if data_format == "parquet":
+        manifest["series_schemas"] = {
+            name: ts.df.schema.toDDL() for name, ts in signal.time_series.items()
+        }
+        series = [
+            (ts.df, os.path.join(data_dir, _enc(name)))
+            for name, ts in signal.time_series.items()
+        ]
+    return sig_dir, manifest, series
 
-                (
-                    ts.df.withColumn(
-                        "__tpart", F.date_format(INDEX_COL, fmt)
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy("__tpart")
-                    .parquet(target)
+
+def _write_signal_manifest(signal: Signal, sig_dir: str, manifest: dict) -> None:
+    """Write the Signal's CSV data, if that is its format, then its
+    manifest — after the data, so a save cut off earlier leaves no
+    manifest that names missing or stale data."""
+    if manifest["data_format"] == "csv":
+        for name, ts in signal.time_series.items():
+            _series_to_csv(ts, os.path.join(sig_dir, "data", f"{name}.csv"))
+    with open(os.path.join(sig_dir, "manifest.yaml"), "w") as fh:
+        dump_yaml(manifest, fh)
+
+
+def _write_series(
+    series: list[tuple[DataFrame, str]],
+    staging_parent: str,
+    partition_by_time: Optional[str] = None,
+) -> None:
+    """Write each (frame, target dir) as that dir's Parquet data: one
+    write per distinct schema into a staging dir under
+    ``staging_parent``, then a rename of each series' ``__s=i`` dir to
+    its target (see the module docstring)."""
+    if not series:
+        return
+    from pyspark.sql import functions as F
+
+    fmt = _TIME_FORMATS.get((partition_by_time or "").upper())
+    unions = union_by_schema([df for df, _ in series])
+    _check_not_reading_targets(unions, [target for _, target in series])
+    staging = tempfile.mkdtemp(prefix="_staging-", dir=staging_parent)
+    try:
+        for g, (members, union) in enumerate(unions):
+            parts = [SERIES_COL]
+            if fmt is not None:
+                union = union.withColumn(
+                    "__tpart", F.date_format(INDEX_COL, fmt)
                 )
-            else:
-                ts.df.write.mode("overwrite").parquet(target)
-        elif data_format == "csv":
-            _series_to_csv(ts, os.path.join(data_dir, f"{name}.csv"))
-        else:
-            raise ValueError(f"Unknown data_format {data_format!r}")
-    return sig_dir
+                parts.append("__tpart")
+            out = os.path.join(staging, str(g))
+            union.write.mode("overwrite").partitionBy(*parts).parquet(out)
+            for i in members:
+                target = series[i][1]
+                shutil.rmtree(target, ignore_errors=True)
+                written = os.path.join(out, f"{SERIES_COL}={i}")
+                if os.path.isdir(written):
+                    os.rename(written, target)
+                else:
+                    # no rows: an empty dir, so a missing one means an
+                    # incomplete save
+                    os.makedirs(target)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _check_not_reading_targets(
+    unions: list[tuple[list[int], DataFrame]], targets: list[str]
+) -> None:
+    """Raise if any series reads a file under a dir the save replaces:
+    the rename would delete the files behind the caller's frames (and
+    a later schema group could read a dir an earlier one replaced).
+    ``inputFiles`` lists the scans' files and runs no job."""
+    prefixes = tuple(os.path.abspath(t) + os.sep for t in targets)
+    for _, union in unions:
+        for uri in union.inputFiles():
+            path = urllib.parse.unquote(urllib.parse.urlparse(uri).path)
+            if path.startswith(prefixes):
+                raise ValueError(
+                    f"cannot save over {os.path.dirname(path)!r}: a series "
+                    f"being saved reads from it; save to another path"
+                )
 
 
 def load_signal(spark: SparkSession, sig_dir: str) -> Signal:
     with open(os.path.join(sig_dir, "manifest.yaml")) as fh:
-        manifest = yaml.safe_load(fh)
+        manifest = load_yaml(fh)
     return _signal_from_manifest(spark, sig_dir, manifest)
 
 
@@ -143,12 +255,14 @@ def _signal_from_manifest(spark: SparkSession, sig_dir: str, manifest: dict) -> 
     from meteaudata_spark.metadata import DataProvenance
 
     data_format = manifest.get("data_format", "parquet")
-    partitioned = manifest.get("partition_by_time") is not None
+    schemas = manifest.get("series_schemas", {})
     series: dict[str, TimeSeries] = {}
     for name, ts_meta in manifest["time_series"].items():
         if data_format == "parquet":
             df = _read_series_dir(
-                spark, os.path.join(sig_dir, "data", manifest["series_dirs"][name])
+                spark,
+                os.path.join(sig_dir, "data", manifest["series_dirs"][name]),
+                schemas.get(name),
             )
             ts = TimeSeries.from_metadata_dict(df, ts_meta)
         else:
@@ -169,15 +283,23 @@ def _signal_from_manifest(spark: SparkSession, sig_dir: str, manifest: dict) -> 
 # Dataset
 # ----------------------------------------------------------------------
 def save_dataset(dataset: Dataset, path: str, data_format: str = "parquet") -> str:
+    """Write ``{path}/{dataset.name}/``: the dataset manifest plus one
+    Signal dir per signal.  The series of every signal are written
+    together, one Parquet write per distinct schema."""
     ds_dir = os.path.join(path, _enc(dataset.name))
     os.makedirs(ds_dir, exist_ok=True)
     manifest = dataset.metadata_dict()
     manifest["data_format"] = data_format
     manifest["signal_dirs"] = {name: _enc(name) for name in dataset.all_signals}
-    for name, sig in dataset.signals.items():
-        save_signal(sig, ds_dir, data_format=data_format)
+    prepared = [
+        (sig, *_signal_manifest(sig, ds_dir, data_format, None))
+        for sig in dataset.signals.values()
+    ]
+    _write_series([s for *_, series in prepared for s in series], ds_dir)
+    for sig, sig_dir, sig_manifest, _ in prepared:
+        _write_signal_manifest(sig, sig_dir, sig_manifest)
     with open(os.path.join(ds_dir, "manifest.yaml"), "w") as fh:
-        yaml.safe_dump(manifest, fh, sort_keys=False)
+        dump_yaml(manifest, fh)
     return ds_dir
 
 
@@ -185,12 +307,12 @@ def load_dataset(spark: SparkSession, ds_dir: str) -> Dataset:
     import datetime
 
     with open(os.path.join(ds_dir, "manifest.yaml")) as fh:
-        manifest = yaml.safe_load(fh)
+        manifest = load_yaml(fh)
     signals: dict[str, Signal] = {}
     for name, sub in manifest["signal_dirs"].items():
         sig_dir = os.path.join(ds_dir, sub)
         with open(os.path.join(sig_dir, "manifest.yaml")) as fh:
-            sig_manifest = yaml.safe_load(fh)
+            sig_manifest = load_yaml(fh)
         signals[name] = _signal_from_manifest(spark, sig_dir, sig_manifest)
     return Dataset(
         name=manifest["name"],
@@ -435,7 +557,7 @@ def save_dataset_long(
     if layout == "bucketed":
         manifest["n_buckets"] = n_buckets
     with open(os.path.join(ds_dir, "manifest.yaml"), "w") as fh:
-        yaml.safe_dump(manifest, fh, sort_keys=False)
+        dump_yaml(manifest, fh)
     data_dir = os.path.join(ds_dir, "data")
     if layout == "bucketed":
         (
@@ -490,7 +612,7 @@ def load_dataset_long(spark: SparkSession, ds_dir: str) -> Dataset:
     from meteaudata_spark.metadata import DataProvenance
 
     with open(os.path.join(ds_dir, "manifest.yaml")) as fh:
-        manifest = yaml.safe_load(fh)
+        manifest = load_yaml(fh)
     variant = manifest.get("layout_variant", "sorted")
     n_buckets = manifest.get("n_buckets")
     data = spark.read.parquet(os.path.join(ds_dir, "data"))

@@ -17,17 +17,20 @@ execution (SURVEY §7.1).
 from __future__ import annotations
 
 import datetime
+from functools import reduce
 from typing import Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
 
 from meteaudata_spark.metadata import (
     IndexMetadata,
     ProcessingStep,
     dedup_steps,
+    load_yaml,
 )
 from meteaudata_spark.functions.epoch import epoch_seconds
 from meteaudata_spark.functions.indexmeta import (
@@ -40,6 +43,9 @@ from meteaudata_spark.functions.indexmeta import (
 
 INDEX_COL = "timestamp"
 VALUE_COL = "value"
+# the series ordinal that tags each row of a batched multi-series
+# collect or write (``union_by_schema``)
+SERIES_COL = "__s"
 
 
 class TimeSeries:
@@ -120,8 +126,10 @@ class TimeSeries:
     # export / materialization (the only places that run a job)
     # ------------------------------------------------------------------
     def to_pandas(self) -> pd.Series:
-        """Collect (ordered by index) and rebuild the pandas Series."""
-        pdf = self.df.orderBy(INDEX_COL).toPandas()
+        """Collect (ordered by index, then value) and rebuild the pandas
+        Series.  The sort runs on the driver (``collect_sorted``), so
+        the collect is one job with no range-partition sampling."""
+        pdf = collect_sorted([self.df])[0]
         index = reconstruct_index(pdf[INDEX_COL], self.index_metadata)
         values = pdf[VALUE_COL].values
         dtype = self.values_dtype if self.values_dtype != "str" else "object"
@@ -271,13 +279,16 @@ class TimeSeries:
     def __eq__(self, other: object) -> bool:  # pragma: no cover - thin
         if not isinstance(other, TimeSeries):
             return NotImplemented
-        if self.values_dtype != other.values_dtype:
-            return False
-        if self.index_metadata != other.index_metadata:
-            return False
-        if self.processing_steps != other.processing_steps:
-            return False
-        return series_data_equal(self, other)
+        return self.metadata_equal(other) and series_data_equal(self, other)
+
+    def metadata_equal(self, other: "TimeSeries") -> bool:
+        """The driver-side half of ``==``: dtype, index metadata and
+        lineage.  Runs no job."""
+        return (
+            self.values_dtype == other.values_dtype
+            and self.index_metadata == other.index_metadata
+            and self.processing_steps == other.processing_steps
+        )
 
     def __repr__(self) -> str:
         return (
@@ -329,10 +340,8 @@ class TimeSeries:
 
     def load_metadata_from_file(self, file_path: str) -> "TimeSeries":
         """YAML metadata restore (reference types.py:351)."""
-        import yaml
-
         with open(file_path) as fh:
-            self.load_metadata_from_dict(yaml.safe_load(fh))
+            self.load_metadata_from_dict(load_yaml(fh))
         return self
 
     def load_data_fom_file(
@@ -382,6 +391,85 @@ def _step_dump(step: ProcessingStep) -> dict:
     return step.model_dump(mode="json")
 
 
+# value types pandas cannot sort (Row, dict, ndarray, bytearray cells)
+_UNSORTABLE = (ArrayType, BinaryType, MapType, StructType)
+
+
+def union_by_schema(
+    frames: list[DataFrame],
+) -> list[tuple[list[int], DataFrame]]:
+    """Group series frames by schema.  Per group, return the positions
+    of its frames in ``frames`` and the ``UNION ALL`` of those frames,
+    each row tagged with its frame's position in ``SERIES_COL``.  One
+    action on a union runs every series of the group in one job, and
+    upstreams the series share run once (exchange reuse)."""
+    groups: dict[str, list[int]] = {}
+    for i, df in enumerate(frames):
+        groups.setdefault(df.schema.simpleString(), []).append(i)
+    unions = []
+    for members in groups.values():
+        tagged = [
+            frames[i].select(F.lit(i).alias(SERIES_COL), INDEX_COL, VALUE_COL)
+            for i in members
+        ]
+        unions.append((members, reduce(DataFrame.unionAll, tagged)))
+    return unions
+
+
+def collect_sorted(frames: list[DataFrame]) -> list[pd.DataFrame]:
+    """Collect many series at once: one ``toPandas`` (one job) per
+    distinct schema, over a ``UNION ALL`` of the frames tagged by
+    their position.  Each returned frame has the columns
+    ``(timestamp, value)`` and a fresh RangeIndex, sorted on the driver
+    by (timestamp, value) — a total order, so rows that share a
+    timestamp compare equal whatever order the executors sent them
+    in.  Values pandas cannot order (struct, map, array, binary) sort
+    by timestamp only, stably; such a timestamp column (an
+    IntervalIndex's struct) is ordered by Spark instead.
+
+    Driver memory holds every frame passed at once; callers pass one
+    Signal's series (both sides of one ``==``) at most, never a whole
+    Dataset's."""
+    out: dict[int, pd.DataFrame] = {}
+    for members, union in union_by_schema(frames):
+        schema = frames[members[0]].schema
+        if isinstance(schema[INDEX_COL].dataType, _UNSORTABLE):
+            # an IntervalIndex's (left, right) struct: Spark orders it,
+            # pandas cannot, so keep Spark's order
+            union = union.orderBy(SERIES_COL, INDEX_COL)
+            keys = [SERIES_COL]
+        elif isinstance(schema[VALUE_COL].dataType, _UNSORTABLE):
+            keys = [SERIES_COL, INDEX_COL]
+        else:
+            keys = [SERIES_COL, INDEX_COL, VALUE_COL]
+        pdf = _sort_stable(union.toPandas(), keys)
+        tags = pdf.pop(SERIES_COL).to_numpy()
+        starts = np.searchsorted(tags, members, side="left")
+        ends = np.searchsorted(tags, members, side="right")
+        for i, lo, hi in zip(members, starts, ends):
+            out[i] = pdf.iloc[lo:hi].reset_index(drop=True)
+    return [out[i] for i in range(len(frames))]
+
+
+def _sort_stable(pdf: pd.DataFrame, keys: list[str]) -> pd.DataFrame:
+    """``pdf`` sorted stably by ``keys`` (series tag first).  Rows that
+    arrive with nondecreasing tags and, within a tag, strictly
+    increasing timestamps are already in that order (no tie is left
+    for the value to break), so they skip the sort: the common case of
+    a series collected partition by partition.  Numeric and datetime
+    keys sort with ``np.lexsort``, others (strings) with pandas."""
+    cols = [pdf[k].to_numpy() for k in keys]
+    if any(c.dtype.kind not in "biufmM" for c in cols):
+        return pdf.sort_values(keys, kind="stable")
+    tags = cols[0]
+    same = tags[1:] == tags[:-1]
+    if len(cols) > 1:
+        same &= cols[1][1:] > cols[1][:-1]
+    if (same | (tags[1:] > tags[:-1])).all():
+        return pdf
+    return pdf.take(np.lexsort(cols[::-1]))
+
+
 def series_data_equal(
     a: TimeSeries, b: TimeSeries, rtol: float = 1e-9, atol: float = 1e-12
 ) -> bool:
@@ -389,10 +477,34 @@ def series_data_equal(
 
     This is the correctness-oracle hook (SURVEY §2.11/E1): NaN⇄null are
     normalized at the comparison boundary, numeric values compared with
-    tolerance, everything else exactly.
+    tolerance, everything else exactly.  Both series are collected in
+    one job (``collect_sorted``) and held in driver memory together.
+    ``Signal.__eq__`` batches all its pairs the same way
+    (``pairs_data_equal``), so driver memory then holds one Signal's
+    series at once; ``Dataset.__eq__`` goes one Signal at a time.
     """
-    pa = a.df.orderBy(INDEX_COL).toPandas()
-    pb = b.df.orderBy(INDEX_COL).toPandas()
+    return pairs_data_equal([(a, b)], rtol=rtol, atol=atol)
+
+
+def pairs_data_equal(
+    pairs: list[tuple[TimeSeries, TimeSeries]],
+    rtol: float = 1e-9,
+    atol: float = 1e-12,
+) -> bool:
+    """``series_data_equal`` for every pair, with all series collected
+    by one ``collect_sorted`` call: one job per distinct schema however
+    many pairs there are.  Driver memory holds every series of every
+    pair at once — pass one Signal's worth."""
+    frames = collect_sorted([ts.df for pair in pairs for ts in pair])
+    return all(
+        _sorted_frames_equal(frames[2 * i], frames[2 * i + 1], rtol, atol)
+        for i in range(len(pairs))
+    )
+
+
+def _sorted_frames_equal(
+    pa: pd.DataFrame, pb: pd.DataFrame, rtol: float, atol: float
+) -> bool:
     if len(pa) != len(pb):
         return False
     if not pa[INDEX_COL].equals(pb[INDEX_COL]):
