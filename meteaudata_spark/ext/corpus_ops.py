@@ -21,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from meteaudata_spark.ext.dedup import _docs, _h60, _shingles, _H60_DUCK
-from meteaudata_spark.sources.tables import load_table
+from meteaudata_spark.ext.dedup import _h60, _shingles, _H60_DUCK
+from meteaudata_spark.sources.tables import _docs, load_table
 
 # regexes kept to the syntax subset Java regex (Spark) and RE2
 # (DuckDB) treat identically
@@ -189,7 +189,7 @@ def _contam_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meteaudata_spark.plans.opcache import memo_relation
 
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("contam_grams5", sf_dir),
         lambda: _shingles(_docs(spark, sf_dir), 5).distinct(),
     )

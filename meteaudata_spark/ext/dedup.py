@@ -23,43 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meteaudata_spark.plans.opcache import cache_intermediate, memo_relation
+from meteaudata_spark.sources.tables import _docs, _spread
 
 # Mersenne prime 2^31-1: universal-hash modulus small enough that
 # a·h+b never overflows a signed 64-bit long under ANSI arithmetic
 _MERSENNE = (1 << 31) - 1
-
-
-def _docs(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFrame:
-    # r14 added an unconditional scale-adaptive parallelism floor
-    # (see _spread) here; r15 (VERDICT r14 #4) makes it OPT-IN per
-    # call site: the floor is a measured win only where the
-    # downstream chain is compute-heavy (shingle/hash explodes,
-    # Bloom builds), while ~57 cheap rows paid the extra exchange at
-    # single-split test SFs for nothing.  Heavy sites pass
-    # spread=True; ``_shingles`` keeps its own floor.
-    from meteaudata_spark.sources.tables import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    return _spread(df) if spread else df
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism floor for the corpus tokenize /
-    shingle chains (r14 optimization, guide §2.5 input skew).
-
-    The documents parquet of a small test SF has a single row group,
-    so Spark plans ONE input split and every narrow shingle chain —
-    split, n-gram transform, md5 hashing — runs on one core while the
-    rest idle (measured 1.6 s single-core for the sf0.1 5-gram
-    explode alone).  Repartition round-robin to the session's default
-    parallelism, but ONLY when the upstream yields fewer partitions:
-    on a production corpus (thousands of splits) the condition is
-    false and no shuffle is ever added.  The shuffled bytes are the
-    slim pre-tokenization rows (doc_id + text), paid once per scan."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,7 +286,7 @@ def doc_minhash_lsh_pairs(
     once per session is the compose-don't-recompute contract.
     """
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("minhash_pairs", sf_dir, num_hashes, bands, threshold, n),
         lambda: minhash_lsh_pairs(
             _docs(spark, sf_dir),
@@ -584,7 +552,7 @@ def doc_incremental_dedup(
         return out
 
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("incremental_dedup", sf_dir, n_shards, num_hashes, bands, threshold, n),
         _build,
     )
@@ -753,7 +721,7 @@ def doc_simhash_near_pairs(
     ``doc_dedup_consensus`` (compose, don't recompute).
     """
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("simhash_near_pairs", sf_dir, bits, k),
         lambda: simhash_near_pairs(doc_simhash(spark, sf_dir, bits), bits, k),
     )
@@ -1060,7 +1028,7 @@ def doc_minhash_calibration(
         spark, sf_dir, num_hashes, bands, threshold, n
     )
     sigs = memo_relation(
-        spark,
+        spark, sf_dir,
         ("minhash_sigs", sf_dir, num_hashes, n),
         lambda: minhash_signatures(_docs(spark, sf_dir), num_hashes, n),
     )
@@ -1220,7 +1188,7 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     component finder (localCheckpoint per round) is the expensive
     part worth computing once."""
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("dedup_clusters", sf_dir),
         lambda: dedup_clusters(doc_minhash_lsh_pairs(spark, sf_dir)),
     )

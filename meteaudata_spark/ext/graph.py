@@ -111,7 +111,7 @@ def doc_domain_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meteaudata_spark.plans.opcache import memo_relation
 
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("domain_pagerank", sf_dir),
         lambda: _domain_pagerank_build(spark, sf_dir),
     )

@@ -43,7 +43,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from meteaudata_spark.sources.tables import load_table
+from meteaudata_spark.sources.tables import _spread, load_table
 
 ASSET_SCHEMA = StructType(
     [
@@ -75,26 +75,6 @@ FEATURE_SCHEMA = StructType(
         StructField("mean_byte", StringType()),
     ]
 )
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive parallelism floor for compute-heavy Python-map
-    chains (r14 optimization, guide §2.5 input skew / §4).
-
-    The synthesized-asset fixtures feed per-row codec work (encode +
-    decode + numpy feature extraction) into ``mapInPandas``; their
-    upstream is a SMALL parquet scan whose file has a single row
-    group, so Spark plans ONE input split and the entire Python stage
-    runs on one core while the other 31 idle.  Repartition round-robin
-    to the session's default parallelism — but ONLY when the scan
-    yields fewer partitions, so on a real deployment (thousands of
-    input splits) this is a no-op and no shuffle is ever added.  The
-    shuffled bytes here are the slim pre-synthesis rows (ids +
-    digests), never the payloads."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
 
 # deterministic fake codec: payload = "FAKE:" + repeated byte pattern.
 # Real deployments replace _decode_payload with PIL / librosa / pyav.
@@ -563,7 +543,10 @@ def sample_video_frames(assets: DataFrame, every_n: int = 2) -> DataFrame:
                         rows["frame_no"].append(f)
                         rows["frame_payload"].append(encode_jpeg(frames[f]))
                     continue
-                n_frames = (row["meta"]["n_frames"] or 1)
+                # Arrow hands the nullable INT back as a float (NaN
+                # when null), and ``NaN or 1`` is NaN
+                n_frames = row["meta"]["n_frames"]
+                n_frames = 1 if pd.isna(n_frames) else int(n_frames)
                 body = _decode_payload(payload)
                 chunk = max(1, len(body) // n_frames)
                 for f in range(0, n_frames, every_n):

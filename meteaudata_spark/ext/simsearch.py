@@ -21,7 +21,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from meteaudata_spark.sources.tables import load_table
+from meteaudata_spark.plans.opcache import memo, memo_relation
+from meteaudata_spark.sources.tables import _spread, load_table
 
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -30,16 +31,13 @@ _DOT = (
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14: scale-adaptive parallelism floor (dedup._spread) — the
+    # r14: scale-adaptive parallelism floor (tables._spread) — the
     # embedding queries' expensive work (norms, 2^20 quantization,
     # broadcast-join dot products) is all NARROW off this scan, and
     # the single-row-group test parquet pins it to one core.  No-op on
     # any multi-split production store.  r15: the base loader is the
     # session-memoized lazy plan (tables.py) — the partition probe and
     # footer read amortize to once per session.
-    from meteaudata_spark.ext.dedup import _spread
-    from meteaudata_spark.sources.tables import load_table
-
     return _spread(load_table(spark, sf_dir, "embeddings"))
 
 
@@ -89,10 +87,8 @@ def _exact_topk_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized exact cosine top-20 of the 10 fixed eval
     queries — the shared upstream every exact-vs-approx evaluation row
     filters (compose, don't recompute)."""
-    from meteaudata_spark.plans.opcache import memo_relation
-
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("exact_topk_core", sf_dir, _EXACT_CORE_QUERIES, _EXACT_CORE_K),
         lambda: _cosine_topk_build(
             spark, sf_dir, _EXACT_CORE_QUERIES, _EXACT_CORE_K
@@ -436,15 +432,9 @@ def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Corpus cardinality, memoized per (session, sf_dir) — the only
     driver-side scalar the knob-less LSH derive needs (a metadata-only
     parquet count, paid once per corpus per session)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _EMB_COUNT_CACHE.get(key)
-    if n is None:
-        n = _emb(spark, sf_dir).count()
-        _EMB_COUNT_CACHE[key] = n
-    return n
-
-
-_EMB_COUNT_CACHE: dict = {}
+    return memo(
+        spark, sf_dir, ("emb_count", sf_dir), lambda: _emb(spark, sf_dir).count()
+    )
 
 
 def emb_lsh_near_pairs(
@@ -484,11 +474,9 @@ def emb_lsh_near_pairs(
     # gate's 0.35) share one bucketize + candidate join + verify pass
     # and differ only in the final cheap filter (VERDICT r8 #3:
     # compose, don't recompute).
-    from meteaudata_spark.plans.opcache import memo_relation
-
     n_tables, n_planes = derive_lsh_params(_emb_count(spark, sf_dir))
     scored = memo_relation(
-        spark,
+        spark, sf_dir,
         ("lsh_scored_pairs", sf_dir, n_tables, n_planes),
         lambda: lsh_scored_pairs(
             _emb(spark, sf_dir),
@@ -676,10 +664,8 @@ def _ivf_topk_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized IVF top-10 of the 10 fixed eval queries at the
     standard (16 centroids, 4 probes) geometry — the approximate twin
     of ``_exact_topk_core``."""
-    from meteaudata_spark.plans.opcache import memo_relation
-
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("ivf_topk_core", sf_dir, _IVF_CORE_QUERIES, _IVF_CORE_K, 16, 4),
         lambda: _ivf_topk_build(
             spark, sf_dir, _IVF_CORE_QUERIES, _IVF_CORE_K, 16, 4
@@ -907,7 +893,6 @@ EMB_LSH_NEAR_PAIRS_SQL = _lsh_near_pairs_sql()
 # ----------------------------------------------------------------------
 # k-means (one deterministic Lloyd refinement)
 # ----------------------------------------------------------------------
-_REFINE_CENTS_MEMO: dict = {}
 
 
 def emb_kmeans_refine(
@@ -920,13 +905,12 @@ def emb_kmeans_refine(
     r14 (guide §5): the UPDATE step's two collects (seeds + exact
     centroid sums) executed eagerly during DataFrame construction on
     every call; the refined centroid list (k×64 exact numbers) is now
-    session-memoized per (applicationId, sf_dir, k) — the
+    session-memoized per (session, sf_dir, k) — the
     trainer-core pattern — and the final re-assignment (the row's
     search tail) still recomputes from the parquet scan on every
-    action.  r15 (ADVICE r14): the key includes the Spark application
-    id, mirroring ``memo_relation``, so centroids can never leak
-    across sessions or survive a fixture rewrite at a reused path
-    within one process."""
+    action.  The memo keys on the application id and the corpus
+    directory's file listing, so centroids never leak across sessions
+    or survive a fixture rewrite at a reused path."""
     return kmeans_refine(
         _emb(spark, sf_dir),
         n_clusters=n_clusters,
@@ -941,14 +925,12 @@ def _kmeans_refine_centroids(
     the MODEL artifact behind ``emb_kmeans_refine`` (its two eager
     collects run during DataFrame construction); warmable directly so
     the one-time cost lands in ``warm_build_sec``."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_clusters)
-    if key not in _REFINE_CENTS_MEMO:
-        _REFINE_CENTS_MEMO[key] = _refined_centroids(
-            _refine_emb(_emb(spark, sf_dir)), n_clusters
-        )
-        while len(_REFINE_CENTS_MEMO) > 8:  # bounded, ULM-memo style
-            _REFINE_CENTS_MEMO.pop(next(iter(_REFINE_CENTS_MEMO)))
-    return _REFINE_CENTS_MEMO[key]
+    return memo(
+        spark,
+        sf_dir,
+        ("kmeans_refine_centroids", sf_dir, n_clusters),
+        lambda: _refined_centroids(_refine_emb(_emb(spark, sf_dir)), n_clusters),
+    )
 
 
 def kmeans_refine(
@@ -1405,10 +1387,8 @@ def _pq_codes_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent applied to the flat-PQ rows, which re-ran the map-only
     assignment (corpus × subs × 16 centroid distances) on every
     gate-row call."""
-    from meteaudata_spark.plans.opcache import memo_relation
-
     return memo_relation(
-        spark, ("pq_codes", sf_dir), lambda: pq_assign(_emb(spark, sf_dir))
+        spark, sf_dir, ("pq_codes", sf_dir), lambda: pq_assign(_emb(spark, sf_dir))
     )
 
 
@@ -1846,29 +1826,28 @@ def _ivfpq_search_relations(
     )
 
 
-_DISK_CB_MEMO: dict = {}
-
-
 def _disk_codebooks(spark: SparkSession, path: str):
     """Session-memoized loaders of a persisted index's FROZEN
     codebooks (coarse + residual PQ) and their in-row array forms
     (r15, guide §5 driver cost): every ``append_ivfpq_delta`` /
     ``ivfpq_search`` call — one per STREAMING micro-batch — re-read
     the two tiny parquet footers and rebuilt the array plans (~0.2 s
-    of driver work per batch).  Codebooks are frozen by the index
-    contract (appends/deletes never touch them); ``build_ivfpq_index``
-    invalidates the entry when it overwrites a path."""
-    key = (spark.sparkContext.applicationId, path)
-    hit = _DISK_CB_MEMO.get(key)
-    if hit is None:
+    of driver work per batch).  The memo keys on the listings of
+    ``coarse`` and ``codebook`` only, so appends under ``codes`` and
+    the delete marker keep the entry while a rebuild (or any other
+    rewrite of the codebooks) replaces it."""
+
+    def _load():
         coarse = spark.read.parquet(f"{path}/coarse")
         rcb = spark.read.parquet(f"{path}/codebook")
-        cb_arr, rcb_arr = _ivfpq_cb_arrays(coarse, rcb)
-        hit = (coarse, rcb, cb_arr, rcb_arr)
-        _DISK_CB_MEMO[key] = hit
-        while len(_DISK_CB_MEMO) > 16:
-            _DISK_CB_MEMO.pop(next(iter(_DISK_CB_MEMO)))
-    return hit
+        return (coarse, rcb) + tuple(_ivfpq_cb_arrays(coarse, rcb))
+
+    return memo(
+        spark,
+        (f"{path}/coarse", f"{path}/codebook"),
+        ("ivfpq_disk_codebooks", path),
+        _load,
+    )
 
 
 def ivfpq_topk(
@@ -1932,11 +1911,6 @@ def build_ivfpq_index(emb: DataFrame, path: str) -> None:
     codes.write.mode("overwrite").partitionBy("centroid_id").parquet(
         f"{path}/codes"
     )
-    # a rebuild replaces the codebooks: drop the session memo for
-    # this path so later appends/searches read the new ones
-    _DISK_CB_MEMO.pop(
-        (emb.sparkSession.sparkContext.applicationId, path), None
-    )
 
 
 def ivfpq_search(
@@ -1997,8 +1971,6 @@ def _ivfpq_index_for(spark: SparkSession, sf_dir: str, variant: str = "full"):
     ``_ivfpq_encode`` subtree) on every call only for the memo
     lookups to discard them on a hit; profiling charged ~0.3-0.5 s of
     per-call Python plan construction to every IVF-PQ row."""
-    from meteaudata_spark.plans.opcache import memo_relation
-
     built: dict = {}
 
     def _part(i: int):
@@ -2015,9 +1987,9 @@ def _ivfpq_index_for(spark: SparkSession, sf_dir: str, variant: str = "full"):
         return _build
 
     return (
-        memo_relation(spark, ("ivfpq_coarse", variant, sf_dir), _part(0)),
-        memo_relation(spark, ("ivfpq_rcb", variant, sf_dir), _part(1)),
-        memo_relation(spark, ("ivfpq_codes", variant, sf_dir), _part(2)),
+        memo_relation(spark, sf_dir, ("ivfpq_coarse", variant, sf_dir), _part(0)),
+        memo_relation(spark, sf_dir, ("ivfpq_rcb", variant, sf_dir), _part(1)),
+        memo_relation(spark, sf_dir, ("ivfpq_codes", variant, sf_dir), _part(2)),
     )
 
 
@@ -2309,8 +2281,6 @@ def _ivfpq_delta_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-list: "codes").  The 8-subspace residual explode ×
     256-codeword argmin encodes once per session; warmable directly
     so its one-time cost lands in ``warm_build_sec``."""
-    from meteaudata_spark.plans.opcache import memo_relation
-
     def _build_delta():
         emb = _emb(spark, sf_dir)
         is_delta = (F.col("vec_id") % 4 == 3) & (F.col("vec_id") >= 200)
@@ -2324,7 +2294,9 @@ def _ivfpq_delta_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             rcb_arr,
         )
 
-    return memo_relation(spark, ("ivfpq_codes_delta", sf_dir), _build_delta)
+    return memo_relation(
+        spark, sf_dir, ("ivfpq_codes_delta", sf_dir), _build_delta
+    )
 
 
 def emb_ivfpq_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3272,10 +3244,8 @@ def emb_incremental_semdedup(
             out = out.unionByName(nxt)
         return out
 
-    from meteaudata_spark.plans.opcache import memo_relation
-
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("incremental_semdedup", sf_dir, n_shards, threshold),
         _build,
     )
@@ -4807,8 +4777,6 @@ def emb_ivf_topics(
     asg = _assign_to_centroids(emb, cents).select(
         F.col("vec_id").alias("doc_id"), "centroid_id"
     )
-    from meteaudata_spark.ext.dedup import _spread
-
     docs = _spread(
         load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
@@ -4962,10 +4930,8 @@ def emb_kmeans_train(
     trains the codebook once per corpus and serves it; re-running the
     3-round assign/update DAG on every call re-paid both the large
     plan construction and the per-round corpus windows."""
-    from meteaudata_spark.plans.opcache import memo_relation
-
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("kmeans_train", sf_dir, n_clusters, rounds),
         lambda: _emb_kmeans_train_build(spark, sf_dir, n_clusters, rounds),
     )

@@ -34,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from meteaudata_spark.ext.dedup import _docs, _h60, _shingles, _H60_DUCK
-from meteaudata_spark.sources.tables import load_table
+from meteaudata_spark.ext.dedup import _h60, _shingles, _H60_DUCK
+from meteaudata_spark.sources.tables import _docs, load_table
 
 _M = 256  # registers (p = 8)
 _ALPHA_M = 0.7213 / (1.0 + 1.079 / _M)  # standard bias constant

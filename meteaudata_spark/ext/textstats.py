@@ -13,21 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meteaudata_spark.ext.dedup import _h60
-from meteaudata_spark.plans.opcache import cache_intermediate, memo_relation
-
-
-def _docs(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFrame:
-    # r15 (VERDICT r14 #4): the r14 parallelism floor is now OPT-IN
-    # per call site — it pays rent only where the downstream chain is
-    # compute-heavy (tokenize/hash explodes over the whole corpus);
-    # the unconditional version taxed every cheap row ~0.1-0.5 s at
-    # single-split test SFs.  No-op on any real multi-split corpus
-    # either way.
-    from meteaudata_spark.ext.dedup import _spread
-    from meteaudata_spark.sources.tables import load_table
-
-    df = load_table(spark, sf_dir, "documents")
-    return _spread(df) if spread else df
+from meteaudata_spark.plans.opcache import cache_intermediate, memo, memo_relation
+from meteaudata_spark.sources.tables import _docs
 
 
 def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,7 +258,7 @@ def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return d.select("doc_id", score.alias("quality_score"))
 
-    return memo_relation(spark, ("quality_score", sf_dir), _build)
+    return memo_relation(spark, sf_dir, ("quality_score", sf_dir), _build)
 
 
 DOC_QUALITY_SQL = """
@@ -1103,7 +1090,7 @@ def _bm25_single_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     composer-side upstream (nDCG / hybrid), never served as the
     search row's own output."""
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("bm25_single", sf_dir, 20),
         lambda: bm25_search(_docs(spark, sf_dir), _BM25_QUERY, k=20),
     )
@@ -1843,7 +1830,7 @@ def bm25_multi_candidates(spark: SparkSession, sf_dir: str, k: int = 10) -> Data
     set — the shared upstream for every reranking/eval row (MMR here;
     the corpus pass runs once per session, not once per consumer)."""
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("bm25_multi_candidates", sf_dir, k),
         lambda: bm25_multi_search(
             _docs(spark, sf_dir), _multi_query_df(spark), k=k
@@ -2930,9 +2917,6 @@ def _bpe_train_loop(
     return merges, cur
 
 
-_BPE_MEMO: dict = {}
-
-
 def _bpe_core_for(spark: SparkSession, sf_dir: str):
     """Session-memoized BPE trainer core at the gate defaults
     (n_merges=10, full final apply, word kept): the learned merge
@@ -2942,17 +2926,14 @@ def _bpe_core_for(spark: SparkSession, sf_dir: str):
     The merge list is independent of ``keep_word``/``apply_last``, so
     train and encode read the SAME core (values unchanged —
     re-verified vs DuckDB)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    core = _BPE_MEMO.get(key)
-    if core is None:
-        core = _bpe_train_loop(
-            _docs(spark, sf_dir), "text", 10, keep_word=True,
-            apply_last=True,
-        )
-        _BPE_MEMO[key] = core
-        while len(_BPE_MEMO) > 8:
-            _BPE_MEMO.pop(next(iter(_BPE_MEMO)))
-    return core
+    return memo(
+        spark,
+        sf_dir,
+        ("bpe_core", sf_dir),
+        lambda: _bpe_train_loop(
+            _docs(spark, sf_dir), "text", 10, keep_word=True, apply_last=True
+        ),
+    )
 
 
 def doc_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4324,10 +4305,8 @@ def doc_heaps_fit(
     # DataFrame CONSTRUCTION on every call (~1.3 s/call at sf0.1
     # before any action), the same recompute class as the memoized
     # minhash signature table.
-    from meteaudata_spark.plans.opcache import memo_relation
-
     occ = memo_relation(
-        spark,
+        spark, sf_dir,
         ("heaps_occ", sf_dir),
         lambda: toks.groupBy("lang", "token", "doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
@@ -4610,23 +4589,18 @@ def _ulm_vocab_table(core: dict) -> DataFrame:
     )
 
 
-_ULM_MEMO: dict = {}
-
-
 def _unigram_lm_core_for(spark: SparkSession, sf_dir: str) -> dict:
     """Session-memoized trainer core at the gate defaults: the
     trained vocabulary is the shared upstream of the train AND encode
     gate rows (the ``memo_relation`` compose-don't-recompute
     contract; the core's relations are localCheckpointed, so reuse
     costs nothing beyond the first build)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    core = _ULM_MEMO.get(key)
-    if core is None:
-        core = _unigram_lm_core(_docs(spark, sf_dir))
-        _ULM_MEMO[key] = core
-        while len(_ULM_MEMO) > 8:
-            _ULM_MEMO.pop(next(iter(_ULM_MEMO)))
-    return core
+    return memo(
+        spark,
+        sf_dir,
+        ("ulm_core", sf_dir),
+        lambda: _unigram_lm_core(_docs(spark, sf_dir)),
+    )
 
 
 def _unigram_lm_core(
@@ -4846,7 +4820,7 @@ def _ulm_word_tokens_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail, which stays in the timed region) differs between them."""
     core = _unigram_lm_core_for(spark, sf_dir)
     return memo_relation(
-        spark, ("ulm_word_tokens", sf_dir), lambda: _ulm_word_table(core)
+        spark, sf_dir, ("ulm_word_tokens", sf_dir), lambda: _ulm_word_table(core)
     )
 
 

@@ -1895,7 +1895,7 @@ def _pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meteaudata_spark.plans.opcache import memo_relation
 
     return memo_relation(
-        spark,
+        spark, sf_dir,
         ("ts_bucket_pairs", sf_dir),
         lambda: _bucket_pairs(_events(spark, sf_dir)),
     )

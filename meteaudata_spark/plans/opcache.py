@@ -1,96 +1,128 @@
-"""Bounded registry for operator-internal caches.
+"""Operator-side caches: one session memo registry and a bounded
+per-query persist FIFO.
 
-Some operators (minhash/Jaccard dedup) reuse an intermediate DataFrame
-across several plan branches; persisting it avoids recomputing a
-corpus scan per branch.  But a bare ``df.persist()`` inside an
-operator leaks: the returned plan is lazy, so there is no safe point
-for the operator itself to unpersist (ADVICE r1).
+Memo registry (``memo`` / ``memo_relation``).  Every value the library
+reuses across calls in a Spark session lives in the one registry
+``_memo``: a table's lazy loader DataFrame, a corpus count, trained
+centroids, a tokenizer trainer core, a persisted index's frozen
+codebooks, a persisted shared relation.
 
-``cache_intermediate`` registers each persisted intermediate in a
-small FIFO registry and evicts (unpersists) the oldest entry beyond a
-cap, so a long-lived driver running many operator calls holds a
-bounded number of cache entries instead of one per call.  Evicting an
-entry that a still-live lazy plan references is safe — Spark silently
-recomputes that subplan on next execution.
+* Key: ``(applicationId, *key)``, so a restarted session never reads
+  another session's entries.  ``key`` starts with a tag naming the
+  value and carries every parameter it depends on.
+* Fingerprint: beside each value the registry keeps the fingerprint of
+  the files it was built from: ``(st_ino, st_mtime_ns, st_size)`` of
+  each ``source`` path and of each of that path's direct children (one
+  ``stat`` plus one ``scandir`` per path).  A hit whose stored
+  fingerprint differs from the current one is stale: the entry is
+  dropped (unpersisted if the memo persisted it) and rebuilt.  A table
+  rewritten in place with ``mode("overwrite")`` is therefore read
+  afresh, and so is everything memoized on top of it.  A path with no
+  local ``stat`` (e.g. an object-store URI) fingerprints as absent and
+  never goes stale.
+* Bound: ``_MEMO_CAP`` entries, evicted oldest first; an evicted
+  relation is unpersisted.
 
-``release_operator_caches()`` drops everything immediately (used by
-benchmarks / tests that need a cold cache).
+``memo_relation`` is ``memo`` plus a ``persist()`` of the built
+DataFrame, and re-persists a hit whose persist was dropped externally.
+
+Per-query intermediates (``cache_intermediate``).  Some operators
+reuse an intermediate DataFrame across several plan branches of ONE
+call.  The returned plan is lazy, so the operator has no safe point to
+unpersist it; the FIFO unpersists the oldest entry beyond
+``_MAX_ACTIVE`` instead.  Evicting an entry that a live lazy plan
+still references is safe: Spark recomputes that subplan.  Inside
+``pin_caches()`` entries are pinned and exempt from the FIFO.
+
+``release_operator_caches()`` empties everything: every memo entry
+(table frames included) and every per-query or pinned persist.
 """
 
 from __future__ import annotations
 
+import os
+import stat
 from collections import OrderedDict
 from typing import Optional
 
 from pyspark.sql import DataFrame
 
-# Per-QUERY intermediates only (r14 batch 4).  The registry history:
-# round 10 measured the FIFO at 8 evicting prewarmed shared relations
-# mid-pass (doc_minhash_lsh_pairs 0.08 s → 1.31 s); round 11 re-measured
-# the same failure at 24 and raised it to 48 + PINNED the warm
-# relations; round 14 first raised it to 96 when the 231-row gate's
-# churn evicted non-pinned memo persists once per pass.  96 then
-# produced the OPPOSITE failure, measured in the post-batch-3 bench:
-# up to 96 persisted per-query intermediates (token/shingle/window
-# explodes, tens of MB each) stayed alive across the whole pass inside
-# the one local-mode JVM — storage pressure + GC taxed every row ~0.3-
-# 0.7 s, and the churn STILL evicted memoized cores between a query's
-# bench runs (doc_heaps_fit 1.4 s → 4.0 s in-pass, 1.38 s isolated).
-# The structural fix: memo-backed persists now live in their own
-# registry (``_memo`` below) that per-query churn can never touch, so
-# this FIFO only needs to outlive ONE query's bench runs (≤ ~5
-# registrations per call × 3 runs; 24 gives 60% headroom) instead of
-# holding the whole pass's history.
+# Per-query intermediates only: memo persists live in ``_memo``, which
+# per-query churn never touches, so this FIFO only has to outlive one
+# query's bench runs (<= ~5 registrations per call x 3 runs; 24 gives
+# 60% headroom).  A cap of 96 kept tens of MB per token/shingle explode
+# alive across a whole pass and taxed every row 0.3-0.7 s in GC.
 _MAX_ACTIVE = 24
 _active: "OrderedDict[int, DataFrame]" = OrderedDict()
 _pinned: "OrderedDict[int, DataFrame]" = OrderedDict()
 _pin_mode = False
 
-# Above the count of DISTINCT memo keys a full 231-row gate pass
-# touches (~26 after the r14 batch-3 shared rankers); overflow
-# unpersists + rebuilds the evicted core on its next use.
+# Above the count of distinct keys a full 231-row gate pass creates
+# (tables, relations and trainer cores together; see CHANGES.md), so
+# that pass runs with 0 evictions.
 _MEMO_CAP = 64
-_memo: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+_memo: "OrderedDict[tuple, tuple]" = OrderedDict()  # key -> (value, fp)
 
 
-def memo_relation(spark, key: tuple, build) -> DataFrame:
-    """Per-(session, key) memo of a shared intermediate relation, so
-    COMPOSITIONS reuse their upstream instead of recomputing it
-    (VERDICT r8 #3: ``doc_dedup_keep_best`` re-ran pair mining +
-    clustering + scoring on every call).
+def _fingerprint(source) -> tuple:
+    """``(path, st_ino, st_mtime_ns, st_size)`` of each ``source`` path
+    (one path or a tuple of paths) and of its direct children."""
+    fp = []
+    for p in (source,) if isinstance(source, str) else source:
+        try:
+            st = os.stat(p)
+            fp.append((p, st.st_ino, st.st_mtime_ns, st.st_size))
+            if stat.S_ISDIR(st.st_mode):
+                with os.scandir(p) as it:
+                    for e in sorted(it, key=lambda e: e.name):
+                        c = e.stat()
+                        fp.append((e.name, c.st_ino, c.st_mtime_ns, c.st_size))
+        except OSError:
+            fp.append((p, None))
+    return tuple(fp)
 
-    The built DataFrame is persisted and registered in the MEMO
-    registry itself (r14 batch 4) — NOT the per-query FIFO — so
-    per-query ``cache_intermediate`` churn can never evict a memoized
-    core (the round-14 batch-3 bench measured exactly that: non-pinned
-    cores evicted between a query's bench runs rebuilt once per run,
-    doc_heaps_fit 1.4 s → 4.0 s in-pass).  The memo is FIFO-bounded at
-    ``_MEMO_CAP``; an overflowing entry is unpersisted on eviction.
-    Keys include the Spark application id so a memo never leaks across
-    sessions.
 
-    SELF-HEAL (VERDICT r11 nit / r12 watch item — the
-    ``doc_dedup_agreement`` 4-15× memo-read drift): a memo HIT whose
-    persist was dropped externally (``release_operator_caches`` /
-    manual unpersist) is re-persisted, so a dropped relation recomputes
-    at most once and is cached again.  Pinned by
-    tests/test_opcache_memo.py::test_memo_hit_heals_evicted_persist."""
+def _release(value) -> None:
+    """Unpersist ``value`` if it is a persisted DataFrame."""
+    if isinstance(value, DataFrame) and value.is_cached:
+        try:
+            value.unpersist(blocking=False)
+        except Exception:
+            pass  # session may already be stopped
+
+
+def memo(spark, source, key: tuple, build):
+    """Session memo of ``build()`` under ``(applicationId, *key)``,
+    rebuilt when the fingerprint of ``source`` (the paths the value is
+    built from) changes.  See the module docstring."""
     k = (spark.sparkContext.applicationId,) + tuple(key)
-    df = _memo.get(k)
-    if df is None:
-        df = build()
-        df.persist()
-        _memo[k] = df
-        while len(_memo) > _MEMO_CAP:
-            _, old = _memo.popitem(last=False)
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass  # session may already be stopped
-    else:
-        sl = df.storageLevel
-        if not (sl.useMemory or sl.useDisk or sl.useOffHeap):
-            df.persist()  # dropped externally: re-persist
+    fp = _fingerprint(source)
+    hit = _memo.get(k)
+    if hit is not None:
+        if hit[1] == fp:
+            return hit[0]
+        del _memo[k]
+        _release(hit[0])  # stale: its source changed
+    value = build()
+    _memo[k] = (value, fp)
+    while len(_memo) > _MEMO_CAP:
+        _release(_memo.popitem(last=False)[1][0])
+    return value
+
+
+def memo_relation(spark, source, key: tuple, build) -> DataFrame:
+    """``memo`` of a shared intermediate relation, persisted, so
+    compositions reuse their upstream instead of recomputing it.
+
+    Memo persists live in the memo registry, never in the per-query
+    FIFO, so ``cache_intermediate`` churn cannot evict a memoized core.
+    A hit whose persist was dropped externally (manual unpersist) is
+    re-persisted, so it recomputes at most once (pinned by
+    tests/test_opcache_memo.py::test_memo_hit_heals_externally_dropped_persist)."""
+    df = memo(spark, source, key, lambda: build().persist())
+    sl = df.storageLevel
+    if not (sl.useMemory or sl.useDisk or sl.useOffHeap):
+        df.persist()  # dropped externally: re-persist
     return df
 
 
@@ -108,11 +140,7 @@ def cache_intermediate(df: DataFrame, max_active: Optional[int] = None) -> DataF
     cap = _MAX_ACTIVE if max_active is None else max_active
     _active[id(df)] = df
     while len(_active) > cap:
-        _, old = _active.popitem(last=False)
-        try:
-            old.unpersist(blocking=False)
-        except Exception:
-            pass  # session may already be stopped
+        _release(_active.popitem(last=False)[1])
     return df
 
 
@@ -134,14 +162,12 @@ class pin_caches:
 
 
 def release_operator_caches() -> int:
-    """Unpersist every registered intermediate (pinned and memoized
-    included); returns how many."""
+    """Unpersist every per-query and pinned intermediate and drop every
+    memo entry; returns how many entries were held."""
     n = len(_active) + len(_pinned) + len(_memo)
-    for reg in (_active, _pinned, _memo):
+    for reg in (_active, _pinned):
         while reg:
-            _, old = reg.popitem(last=False)
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass
+            _release(reg.popitem(last=False)[1])
+    while _memo:
+        _release(_memo.popitem(last=False)[1][0])
     return n

@@ -46,6 +46,7 @@ per-element list conversion).
 
 from __future__ import annotations
 
+from functools import lru_cache
 from typing import Iterator, Tuple
 
 import numpy as np
@@ -84,18 +85,11 @@ _CLUSTER_STATE_SCHEMA = StructType(
 )
 
 
-_TRI_CACHE: dict = {}
-
-
+@lru_cache(maxsize=8)
 def _tri_mask(nb: int) -> np.ndarray:
     """Strictly-lower-triangular bool mask, cached per chunk size (the
     chunk loop re-allocated it ~39k times per 10M-row batch)."""
-    m = _TRI_CACHE.get(nb)
-    if m is None:
-        m = np.tri(nb, k=-1, dtype=bool)
-        if len(_TRI_CACHE) < 8:
-            _TRI_CACHE[nb] = m
-    return m
+    return np.tri(nb, k=-1, dtype=bool)
 
 
 def _update_cluster(

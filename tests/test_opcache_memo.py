@@ -5,6 +5,9 @@ precomputed inputs.  Pins both the reuse (same DataFrame object → same
 persisted relation, no re-mining) and result equality between the
 default and precomputed-input paths."""
 
+import os
+import shutil
+
 import pandas as pd
 import pytest
 
@@ -94,7 +97,7 @@ def test_memo_is_fifo_bounded(spark):
     base = len(opcache._memo)
     for i in range(opcache._MEMO_CAP + 5):
         opcache.memo_relation(
-            spark, ("bounded-test", i), lambda: spark.range(1)
+            spark, SF, ("bounded-test", i), lambda: spark.range(1)
         )
     assert len(opcache._memo) <= opcache._MEMO_CAP
 
@@ -131,8 +134,8 @@ def test_memo_isolated_per_application(spark):
         builds.append(1)
         return spark.range(3).selectExpr("id AS v")
 
-    a = opcache.memo_relation(spark, ("restart_probe", "x"), build)
-    a2 = opcache.memo_relation(spark, ("restart_probe", "x"), build)
+    a = opcache.memo_relation(spark, SF, ("restart_probe", "x"), build)
+    a2 = opcache.memo_relation(spark, SF, ("restart_probe", "x"), build)
     assert a is a2 and len(builds) == 1
 
     class _RestartedCtx:
@@ -141,7 +144,9 @@ def test_memo_isolated_per_application(spark):
     class _RestartedSession:
         sparkContext = _RestartedCtx()
 
-    b = opcache.memo_relation(_RestartedSession(), ("restart_probe", "x"), build)
+    b = opcache.memo_relation(
+        _RestartedSession(), SF, ("restart_probe", "x"), build
+    )
     assert len(builds) == 2, "restarted session must rebuild"
     assert b is not a
     # and the two sessions' entries coexist under distinct keys
@@ -190,14 +195,14 @@ def test_memo_persist_immune_to_query_churn(spark):
         builds.append(1)
         return spark.range(7).selectExpr("id AS v")
 
-    a = opcache.memo_relation(spark, ("heal_probe", "x"), build)
+    a = opcache.memo_relation(spark, SF, ("heal_probe", "x"), build)
     a.count()
     assert a.storageLevel.useMemory and len(builds) == 1
     # churn the per-query FIFO far past its cap
     for i in range(opcache._MAX_ACTIVE + 5):
         opcache.cache_intermediate(spark.range(i + 100))
     assert a.storageLevel.useMemory, "memo persist must survive churn"
-    b = opcache.memo_relation(spark, ("heal_probe", "x"), build)
+    b = opcache.memo_relation(spark, SF, ("heal_probe", "x"), build)
     assert b is a and len(builds) == 1
 
 
@@ -215,11 +220,11 @@ def test_memo_hit_heals_externally_dropped_persist(spark):
         builds.append(1)
         return spark.range(7).selectExpr("id AS v")
 
-    a = opcache.memo_relation(spark, ("heal_probe2", "x"), build)
+    a = opcache.memo_relation(spark, SF, ("heal_probe2", "x"), build)
     a.count()
     a.unpersist(blocking=True)
     assert not a.storageLevel.useMemory, "precondition: persist dropped"
-    b = opcache.memo_relation(spark, ("heal_probe2", "x"), build)
+    b = opcache.memo_relation(spark, SF, ("heal_probe2", "x"), build)
     assert b is a and len(builds) == 1
     b.count()  # one recompute re-materializes the cache...
     assert a.storageLevel.useMemory
@@ -232,13 +237,13 @@ def test_memo_overflow_unpersists_evicted_relation(spark):
 
     opcache.release_operator_caches()
     first = opcache.memo_relation(
-        spark, ("overflow_probe", -1), lambda: spark.range(3)
+        spark, SF, ("overflow_probe", -1), lambda: spark.range(3)
     )
     first.count()
     assert first.storageLevel.useMemory
     for i in range(opcache._MEMO_CAP + 1):
         opcache.memo_relation(
-            spark, ("overflow_probe", i), lambda: spark.range(1)
+            spark, SF, ("overflow_probe", i), lambda: spark.range(1)
         )
     assert len(opcache._memo) <= opcache._MEMO_CAP
     import time
@@ -249,3 +254,112 @@ def test_memo_overflow_unpersists_evicted_relation(spark):
         time.sleep(0.1)
     assert not first.storageLevel.useMemory
     opcache.release_operator_caches()
+
+
+# -- source fingerprints: a memo entry goes stale when its input files
+# change, and is rebuilt --------------------------------------------------
+
+
+def _sf_copy(tmp_path) -> str:
+    """A writable copy of the sf0.001 fixture."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    for name in os.listdir(SF):
+        shutil.copyfile(f"{SF}/{name}", d / name)
+    return str(d)
+
+
+def _rewrite_documents(spark, sf: str, max_doc_id: int) -> int:
+    """Rewrite ``documents`` in place with ``mode("overwrite")``,
+    keeping the docs below ``max_doc_id``; returns the new row count."""
+    path = f"{sf}/documents.parquet"
+    pdf = pd.read_parquet(path)
+    kept = pdf[pdf.doc_id < max_doc_id]
+    spark.createDataFrame(kept).write.mode("overwrite").parquet(path)
+    return len(kept)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_load_table_reads_table_rewritten_in_place(spark, tmp_path):
+    from meteaudata_spark.sources.tables import load_table
+
+    sf = _sf_copy(tmp_path)
+    assert load_table(spark, sf, "documents").count() == 500
+    n = _rewrite_documents(spark, sf, 200)
+    assert 0 < n < 500
+    assert load_table(spark, sf, "documents").count() == n
+
+
+def test_memoized_relation_rebuilt_after_source_rewrite(spark, tmp_path):
+    from meteaudata_spark.ext import dedup
+    from meteaudata_spark.plans.opcache import release_operator_caches
+
+    sf = _sf_copy(tmp_path)
+    a = dedup.doc_minhash_lsh_pairs(spark, sf)
+    before = _rows(a)
+    _rewrite_documents(spark, sf, 250)
+    b = dedup.doc_minhash_lsh_pairs(spark, sf)
+    assert b is not a
+    got = _rows(b)
+    release_operator_caches()
+    assert got == _rows(dedup.doc_minhash_lsh_pairs(spark, sf))
+    assert got != before  # the rewrite dropped some pairs
+
+
+def test_ivfpq_search_reads_codebooks_replaced_on_disk(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from meteaudata_spark.ext.simsearch import build_ivfpq_index, ivfpq_search
+    from meteaudata_spark.plans.opcache import release_operator_caches
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    idx, other = str(tmp_path / "idx"), str(tmp_path / "other")
+    build_ivfpq_index(emb, idx)
+    # same vectors under rotated ids: the codebook samples (fixed
+    # vec_id ranges) pick different vectors
+    build_ivfpq_index(
+        emb.select(((F.col("vec_id") + 37) % 500).alias("vec_id"), "embedding"),
+        other,
+    )
+    queries = emb.filter(F.col("vec_id") < 3)
+    before = _rows(ivfpq_search(spark, idx, queries))
+    for part in ("coarse", "codebook"):
+        shutil.rmtree(f"{idx}/{part}")
+        shutil.copytree(f"{other}/{part}", f"{idx}/{part}")
+    got = _rows(ivfpq_search(spark, idx, queries))
+    release_operator_caches()
+    assert got == _rows(ivfpq_search(spark, idx, queries))
+    assert got != before
+
+
+def test_ivfpq_append_keeps_codebook_memo(spark, tmp_path):
+    """Streaming appends write under ``codes`` only, so the frozen
+    codebook entry survives them: one codebook load per index, not
+    one per micro-batch."""
+    from pyspark.sql import functions as F
+
+    from meteaudata_spark.ext import simsearch
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    idx = str(tmp_path / "idx")
+    simsearch.build_ivfpq_index(emb, idx)
+    cb = simsearch._disk_codebooks(spark, idx)
+    simsearch.append_ivfpq_delta(
+        spark,
+        idx,
+        emb.select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"),
+    )
+    assert simsearch._disk_codebooks(spark, idx) is cb
+
+
+def test_release_drops_table_frames(spark):
+    from meteaudata_spark.plans.opcache import release_operator_caches
+    from meteaudata_spark.sources.tables import load_table
+
+    a = load_table(spark, SF, "documents")
+    assert load_table(spark, SF, "documents") is a
+    release_operator_caches()
+    assert load_table(spark, SF, "documents") is not a

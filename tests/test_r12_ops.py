@@ -99,7 +99,7 @@ def _py_unigram(words, L=4, seed=80, rounds=3, target_multi=24,
 def _word_counts(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from meteaudata_spark.ext.textstats import _docs
+    from meteaudata_spark.sources.tables import _docs
 
     rows = (
         _docs(spark, sf_dir)
@@ -176,10 +176,8 @@ def test_unigram_lm_encode_matches_python_reference(spark):
     trainer's final-vocab Viterbi paths."""
     from pyspark.sql import functions as F
 
-    from meteaudata_spark.ext.textstats import (
-        _docs,
-        doc_unigram_lm_encode,
-    )
+    from meteaudata_spark.ext.textstats import doc_unigram_lm_encode
+    from meteaudata_spark.sources.tables import _docs
 
     got = doc_unigram_lm_encode(spark, SF).toPandas()
 
@@ -266,7 +264,8 @@ def test_tokenizer_eval_matches_python_reference(spark):
     single-token share per lang with exact integer floor-division."""
     from pyspark.sql import functions as F
 
-    from meteaudata_spark.ext.textstats import _docs, doc_tokenizer_eval
+    from meteaudata_spark.ext.textstats import doc_tokenizer_eval
+    from meteaudata_spark.sources.tables import _docs
 
     got = (
         doc_tokenizer_eval(spark, SF)

@@ -310,7 +310,8 @@ def test_continuation_pairs_recover_planted_links(spark):
     """Every planted (doc_id % 97 == 0) -> successor link is
     recovered, and each recovered pair's boundary phrases really
     match (first/last k words equality re-checked in pandas)."""
-    from meteaudata_spark.ext.dedup import _docs, doc_continuation_pairs
+    from meteaudata_spark.ext.dedup import doc_continuation_pairs
+    from meteaudata_spark.sources.tables import _docs
 
     pairs = doc_continuation_pairs(spark, SF).toPandas()
     docs = {

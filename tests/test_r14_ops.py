@@ -442,7 +442,8 @@ def test_tokenizer_roundtrip_matches_python_reference(spark):
     """doc_tokenizer_roundtrip vs the plain-Python reference on the
     real corpus: train with _py_unigram, segment + decode every word
     occurrence in Python, aggregate per lang."""
-    from meteaudata_spark.ext.textstats import _docs, doc_tokenizer_roundtrip
+    from meteaudata_spark.ext.textstats import doc_tokenizer_roundtrip
+    from meteaudata_spark.sources.tables import _docs
 
     got = {
         r["lang"]: (

@@ -1,10 +1,11 @@
 """Dump `.explain("formatted")` physical plans for named gate rows
-into plans/r15/<query>_<suffix>.txt — the judge-facing before/after
-plan evidence for the optimization round.
+into plans/<tag>/<query>_<suffix>.txt — before/after plan evidence
+for an optimization change.
 
-Usage: python tools/dump_r15_plans.py <suffix> <query> [query ...]
-       (suffix is `before` or `after`; sf dir fixed at sf0.001 —
-       plan SHAPE does not depend on data volume)
+Usage: python tools/dump_query_plans.py <tag> <suffix> <query> [query ...]
+       (tag names the output dir, e.g. `r15`; suffix is `before` or
+       `after`; sf dir defaults to sf0.001 — plan SHAPE does not
+       depend on data volume)
 """
 
 from __future__ import annotations
@@ -18,16 +19,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    tag, suffix = sys.argv[1:3]
+    names = sys.argv[3:]
     import __spark_entry__ as entry
     from meteaudata_spark.ext import warm
     from meteaudata_spark.session import get_spark
 
-    spark = get_spark("dump_r15_plans")
+    spark = get_spark("dump_query_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
-    os.makedirs("plans/r15", exist_ok=True)
+    os.makedirs(f"plans/{tag}", exist_ok=True)
     # Prewarm the session-memoized cores so each dumped plan is the
     # plan the bench's marginal (post-warm) timing actually executes.
     warm.warm_pair_relations(spark, SF_DIR)
@@ -36,7 +37,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = f"plans/r15/{name}_{suffix}.txt"
+        path = f"plans/{tag}/{name}_{suffix}.txt"
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan)} chars)")
