@@ -4,6 +4,12 @@ Reference semantics: ``types.py:1203-1428``.  Dataset-level transforms
 (``DatasetTransformFunctionProtocol``, types.py:1180-1200) take whole
 Signals and return new Signals; the Dataset versions their names and
 merges lineage exactly like Signal.process does for series.
+
+The batch helpers (``resample_all``, ``interpolate_all``,
+``smooth_all``) run the univariate operator through the owning
+Signal's ``process`` once per series, so lineage is per series: each
+output carries its own input's steps plus the operator's step, the
+same record ``Signal.process`` makes.
 """
 
 from __future__ import annotations
@@ -12,8 +18,10 @@ import datetime
 from typing import Any, Optional, Protocol
 
 from meteaudata_spark import naming
-from meteaudata_spark.metadata import ProcessingStep, dedup_steps
+from meteaudata_spark.metadata import dedup_steps
+from meteaudata_spark.operators import univariate
 from meteaudata_spark.signal import Signal
+from meteaudata_spark.timeseries import TimeSeries, long_dataframe
 
 
 class DatasetTransformFunctionProtocol(Protocol):
@@ -57,17 +65,15 @@ class Dataset:
     # naming (reference: types.py:1233-1267)
     # ------------------------------------------------------------------
     def max_name_number(self) -> dict[str, int]:
-        out: dict[str, int] = {}
-        for full in self.signals:
-            base, num = naming.parse_version(full)
-            if num is not None:
-                out[base] = max(out.get(base, 0), num)
-        return out
+        names = self.all_signals
+        return {
+            base: naming.max_version_number(names, base)
+            for base, num in map(naming.parse_version, names)
+            if num is not None
+        }
 
     def update_numbered_name(self, name: str) -> str:
-        base, _ = naming.parse_version(name)
-        nxt = self.max_name_number().get(base, 0) + 1
-        return naming.with_version(base, nxt)
+        return naming.next_version_name(self.all_signals, name)
 
     def add(self, signal: Signal) -> None:
         new_name = self.update_numbered_name(signal.name)
@@ -97,6 +103,10 @@ class Dataset:
         for sig in self.signals.values():
             names.extend(sig.all_time_series)
         return names
+
+    def _series(self, full_name: str) -> TimeSeries:
+        signal_part, _ = naming.split_full_name(full_name)
+        return self.signals[signal_part].time_series[full_name]
 
     # ------------------------------------------------------------------
     # processing (reference: types.py:1366-1428)
@@ -135,13 +145,11 @@ class Dataset:
             # merge lineage: every output series inherits all input series'
             # steps, then its own, deduped (reference: types.py:1408-1428)
             for ts in out_sig.time_series.values():
-                inherited: list[ProcessingStep] = []
-                for full in input_time_series_names:
-                    signal_part, _ = naming.split_full_name(full)
-                    src = self.signals[signal_part].time_series[full]
-                    inherited.extend(
-                        s.model_copy(deep=True) for s in src.processing_steps
-                    )
+                inherited = [
+                    s.model_copy(deep=True)
+                    for full in input_time_series_names
+                    for s in self._series(full).processing_steps
+                ]
                 ts.processing_steps = dedup_steps(
                     inherited + ts.processing_steps
                 )
@@ -153,152 +161,40 @@ class Dataset:
         self.last_updated = datetime.datetime.now()
 
     # ------------------------------------------------------------------
-    # one-job batch processing over many series (scale path)
+    # batch processing: one univariate operator over many series
     # ------------------------------------------------------------------
     def to_long_dataframe(self, names: Optional[list[str]] = None):
         """Union of all (or named) series tagged by full series name:
-        ``(series_name, timestamp, value)`` — the layout where one
-        partitioned kernel processes every series in a single job."""
-        from pyspark.sql import functions as F
-
+        ``(series_name, timestamp, value)``."""
         names = names or self.all_series_names()
-        long_df = None
-        for full in names:
-            signal_part, _ = naming.split_full_name(full)
-            ts = self.signals[signal_part].time_series[full]
-            part = ts.df.select(
-                F.lit(full).alias("series_name"),
-                F.col("timestamp"),
-                F.col("value"),
-            )
-            long_df = part if long_df is None else long_df.unionByName(part)
-        if long_df is None:
-            raise ValueError("Dataset has no series")
-        return long_df
+        return long_dataframe({n: self._series(n) for n in names})
 
-    def process_long(
-        self,
-        kernel,
-        suffix: str,
-        processing_type,
-        description: str,
-        parameters=None,
-        names: Optional[list[str]] = None,
-        function_name: Optional[str] = None,
+    def _process_each(
+        self, names: Optional[list[str]], transform_function, *args: Any
     ) -> "Dataset":
-        """Apply a partitioned kernel to every (or named) series in ONE
-        Spark job plan.
-
-        ``Signal.process`` builds one plan per series — correct, but N
-        series mean N jobs.  Here all series go through a single long
-        DataFrame with ``partition_cols=["series_name"]``: one shuffle
-        covers the whole dataset, and each output series is a pruned
-        filter view over the shared plan (Catalyst pushes the
-        series_name predicate down to the union branches).
-
-        ``kernel(df_long, partition_cols=["series_name"]) -> df_long``
-        must preserve the (series_name, timestamp, value) schema.
-        Lineage is recorded per output series exactly like
-        ``Signal.process``.
-        """
-        import datetime as _dt
-
-        from pyspark.sql import functions as F
-
-        from meteaudata_spark.metadata import FunctionInfo, ProcessingStep
-        from meteaudata_spark.timeseries import TimeSeries
-
-        names = names or self.all_series_names()
-        long_df = self.to_long_dataframe(names)
-        out_long = kernel(long_df, partition_cols=["series_name"])
-
-        for full in names:
+        """``Signal.process([name], transform_function, *args)`` on the
+        owning Signal of each (default: every existing) series."""
+        for full in names or self.all_series_names():
             signal_part, _ = naming.split_full_name(full)
-            sig = self.signals[signal_part]
-            src = sig.time_series[full]
-            step = ProcessingStep(
-                type=processing_type,
-                description=description,
-                run_datetime=_dt.datetime.now(),
-                requires_calibration=False,
-                function_info=FunctionInfo(
-                    name=function_name or getattr(kernel, "__name__", "kernel"),
-                    version="0.1",
-                    author="meteaudata-spark",
-                ),
-                parameters=parameters,
-                suffix=suffix,
-                input_series_names=[full],
-            )
-            out_df = out_long.filter(
-                F.col("series_name") == full
-            ).select("timestamp", "value")
-            out_ts = TimeSeries(
-                df=out_df,
-                index_metadata=src.index_metadata.model_copy(deep=True),
-                values_dtype="float64",
-                name=f"{signal_part}_{suffix}",
-            )
-            out_ts.processing_steps = dedup_steps(
-                [s.model_copy(deep=True) for s in src.processing_steps] + [step]
-            )
-            out_ts.name = sig.update_numbered_ts_name(out_ts.name)
-            sig.time_series[out_ts.name] = out_ts
+            self.signals[signal_part].process([full], transform_function, *args)
         self._touch()
         return self
 
     def resample_all(self, frequency: str, names: Optional[list[str]] = None) -> "Dataset":
-        """Resample every series in one job (A1 across the dataset)."""
-        from functools import partial
-
-        from meteaudata_spark.metadata import Parameters, ProcessingType
-        from meteaudata_spark.operators import kernels
-
-        return self.process_long(
-            partial(kernels.resample_mean, freq=frequency),
-            suffix="RESAMPLED",
-            processing_type=ProcessingType.RESAMPLING,
-            description="A simple processing function that resamples a series to a given frequency",
-            parameters=Parameters(frequency=frequency),
-            names=names,
-            function_name="resample",
-        )
+        """``univariate.resample`` on every (or each named) series."""
+        return self._process_each(names, univariate.resample, frequency)
 
     def smooth_all(
         self, alpha: float = 0.3, names: Optional[list[str]] = None
     ) -> "Dataset":
-        """EWMA-smooth every series in one job (SMOOTHING across the
-        dataset; grouped-pandas kernel, parallel per series)."""
-        from functools import partial
-
-        from meteaudata_spark.metadata import Parameters, ProcessingType
-        from meteaudata_spark.operators import kernels
-
-        return self.process_long(
-            partial(kernels.ewma, alpha=alpha),
-            suffix="EWMA",
-            processing_type=ProcessingType.SMOOTHING,
-            description=f"Exponential smoothing with alpha={alpha}",
-            parameters=Parameters(alpha=alpha),
-            names=names,
-            function_name="exponential_smoothing",
-        )
+        """``univariate.exponential_smoothing`` (EWMA) on every (or each
+        named) series."""
+        return self._process_each(names, univariate.exponential_smoothing, alpha)
 
     def interpolate_all(self, names: Optional[list[str]] = None) -> "Dataset":
-        """Linear-interpolate every series in one job (W1 across the
-        dataset)."""
-        from meteaudata_spark.metadata import Parameters, ProcessingType
-        from meteaudata_spark.operators import kernels
-
-        return self.process_long(
-            kernels.interpolate_linear,
-            suffix="LIN-INT",
-            processing_type=ProcessingType.GAP_FILLING,
-            description="A simple processing function that linearly interpolates a series",
-            parameters=Parameters(),
-            names=names,
-            function_name="linear interpolation",
-        )
+        """``univariate.linear_interpolation`` on every (or each named)
+        series."""
+        return self._process_each(names, univariate.linear_interpolation)
 
     # ------------------------------------------------------------------
     # persistence (reference: Dataset.save/load, types.py:1293-1364)
@@ -350,6 +246,21 @@ class Dataset:
                 name: sig.metadata_dict() for name, sig in self.signals.items()
             },
         }
+
+    @classmethod
+    def from_metadata_dict(cls, meta: dict, signals: dict[str, Signal]) -> "Dataset":
+        """Inverse of ``metadata_dict``: ``meta``'s ``signals`` entry is
+        ignored; the Signals are passed in."""
+        return cls(
+            name=meta["name"],
+            description=meta["description"],
+            owner=meta["owner"],
+            purpose=meta["purpose"],
+            project=meta["project"],
+            signals=signals,
+            created_on=datetime.datetime.fromisoformat(meta["created_on"]),
+            last_updated=datetime.datetime.fromisoformat(meta["last_updated"]),
+        )
 
 
 def _copy_signal(sig: Signal) -> Signal:

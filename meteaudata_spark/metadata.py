@@ -23,6 +23,8 @@ from typing import IO, Any, Optional, Union
 import yaml
 from pydantic import BaseModel, ConfigDict, Field
 
+from meteaudata_spark.naming import validate_suffix
+
 # libyaml's C emitter/parser when PyYAML was built with it: same
 # objects out as the pure-Python classes, several times faster on a
 # manifest of a few tens of kB
@@ -132,11 +134,7 @@ class ProcessingStep(BaseModel):
     input_series_names: list[str] = Field(default_factory=list)
 
     def model_post_init(self, __context: Any) -> None:
-        if "_" in self.suffix:
-            raise ValueError(
-                f"Processing-step suffix {self.suffix!r} may not contain '_' "
-                "(it would break the series-name grammar; use '-' to join words)"
-            )
+        validate_suffix(self.suffix)
 
 
 class ProcessingConfig(BaseModel):

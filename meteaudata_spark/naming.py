@@ -53,11 +53,6 @@ def split_full_name(full_name: str) -> tuple[str, str]:
     return m.group("signal"), m.group("series")
 
 
-def strip_version(name: str) -> str:
-    """``"RESAMPLED#2"`` -> ``"RESAMPLED"``; no-op when unversioned."""
-    return name.split(VERSION_SEP)[0]
-
-
 def parse_version(name: str) -> tuple[str, int | None]:
     """``"RESAMPLED#2"`` -> ``("RESAMPLED", 2)``; unversioned -> None."""
     if VERSION_SEP not in name:

@@ -289,15 +289,9 @@ def replace_ranges(
 
 
 # ----------------------------------------------------------------------
-# sort / dedup (ProcessingType.SORTING, REMOVE_DUPLICATES — declared by
-# the reference enum but never shipped; we ship them, SURVEY §2.6)
+# dedup (ProcessingType.REMOVE_DUPLICATES — declared by the reference
+# enum but never shipped; we ship it, SURVEY §2.6)
 # ----------------------------------------------------------------------
-def sort_by_index(
-    df: DataFrame, ts_col: str = "timestamp", partition_cols: Sequence[str] = ()
-) -> DataFrame:
-    return df.orderBy(*list(partition_cols), ts_col)
-
-
 def drop_duplicate_timestamps(
     df: DataFrame,
     ts_col: str = "timestamp",

@@ -3,12 +3,14 @@
 
 Two execution modes:
 
-* ``wrap_pandas_transform`` — grouped execution via ``applyInPandas``:
-  the series flows through Arrow to ONE python worker as a whole
-  (a univariate pandas transform needs its full series).  This is the
-  compat path for legacy functions; it parallelizes across *series*,
-  not within one.  Scale ceiling = one series per worker's memory —
-  document, don't hide.
+* ``wrap_pandas_transform`` — driver-side execution: each input series
+  is collected to the driver through Arrow, the pandas function runs
+  there unchanged, and its outputs are re-ingested as Spark
+  DataFrames.  This is the compat path for legacy functions; nothing
+  runs in parallel.  Scale ceiling = every input series in driver
+  memory — document, don't hide.  (``apply_pandas_kernel_grouped`` is
+  the executor-side ``applyInPandas`` path for pandas logic over many
+  series.)
 
 * native operators (``operators/univariate.py``) — the scale path;
   use them unless you genuinely need unchanged pandas code.
@@ -26,7 +28,7 @@ from typing import Any, Callable
 import pandas as pd
 
 from meteaudata_spark.metadata import ProcessingStep
-from meteaudata_spark.timeseries import INDEX_COL, VALUE_COL, TimeSeries
+from meteaudata_spark.timeseries import TimeSeries
 
 
 def wrap_pandas_transform(

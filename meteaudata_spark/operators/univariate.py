@@ -17,9 +17,11 @@ Reference parity targets:
 from __future__ import annotations
 
 import datetime
-from typing import Any, Optional, Sequence
+from typing import Any, Callable, Optional, Sequence
 
 import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from meteaudata_spark.metadata import (
     FunctionInfo,
@@ -45,9 +47,35 @@ def _require_time_index(ts: TimeSeries) -> None:
         )
 
 
-def _out_name(ts: TimeSeries, suffix: str) -> str:
-    signal_part, _ = split_full_name(ts.name)
-    return f"{signal_part}_{suffix}"
+def _outputs(
+    input_series: list[TimeSeries],
+    step: ProcessingStep,
+    build: Callable[[DataFrame], DataFrame],
+    dtype: Optional[str] = None,
+    frequency: Optional[str] = None,
+    time_index: bool = True,
+) -> list[tuple[TimeSeries, list[ProcessingStep]]]:
+    """One output per input series: ``build(ts.df)`` named
+    ``{signal}_{step.suffix}``, with the input's index metadata
+    (``frequency`` replaces its frequency when given) and ``dtype``
+    (``None`` keeps the input's).  ``time_index`` requires a
+    Datetime/Timedelta index first."""
+    outputs = []
+    for ts in input_series:
+        if time_index:
+            _require_time_index(ts)
+        meta = ts.index_metadata.model_copy(deep=True)
+        if frequency is not None:
+            meta.frequency = frequency
+        signal_part, _ = split_full_name(ts.name)
+        out = TimeSeries(
+            df=build(ts.df),
+            index_metadata=meta,
+            values_dtype=dtype or ts.values_dtype,
+            name=f"{signal_part}_{step.suffix}",
+        )
+        outputs.append((out, [step]))
+    return outputs
 
 
 def _make_step(
@@ -92,20 +120,10 @@ def resample(
         Parameters(frequency=frequency),
         func=resample,
     )
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        new_df = kernels.resample_mean(ts.df, frequency)
-        meta = ts.index_metadata.model_copy(deep=True)
-        meta.frequency = frequency
-        out = TimeSeries(
-            df=new_df,
-            index_metadata=meta,
-            values_dtype="float64",
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(
+        input_series, step, lambda df: kernels.resample_mean(df, frequency),
+        dtype="float64", frequency=frequency,
+    )
 
 
 def linear_interpolation(
@@ -121,18 +139,7 @@ def linear_interpolation(
         Parameters(),
         func=linear_interpolation,
     )
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        new_df = kernels.interpolate_linear(ts.df)
-        out = TimeSeries(
-            df=new_df,
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype=ts.values_dtype,
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(input_series, step, kernels.interpolate_linear)
 
 
 def forward_fill(
@@ -150,18 +157,7 @@ def forward_fill(
         Parameters(),
         func=forward_fill,
     )
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        new_df = kernels.locf(ts.df)
-        out = TimeSeries(
-            df=new_df,
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype=ts.values_dtype,
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(input_series, step, kernels.locf)
 
 
 def replace_ranges(
@@ -191,17 +187,11 @@ def replace_ranges(
         ),
         func=replace_ranges,
     )
-    outputs = []
-    for ts in input_series:
-        new_df = kernels.replace_ranges(ts.df, index_pairs, replace_with)
-        out = TimeSeries(
-            df=new_df,
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype=ts.values_dtype,
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(
+        input_series, step,
+        lambda df: kernels.replace_ranges(df, index_pairs, replace_with),
+        time_index=False,
+    )
 
 
 def predict_previous_point(
@@ -221,17 +211,7 @@ def predict_previous_point(
         step_distance=1,
         func=predict_previous_point,
     )
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        out = TimeSeries(
-            df=ts.df,
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype=ts.values_dtype,
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(input_series, step, lambda df: df)
 
 
 def moving_average(
@@ -249,17 +229,10 @@ def moving_average(
         Parameters(window=window),
         func=moving_average,
     )
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        out = TimeSeries(
-            df=kernels.rolling_mean(ts.df, window),
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype="float64",
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(
+        input_series, step, lambda df: kernels.rolling_mean(df, window),
+        dtype="float64",
+    )
 
 
 def detect_gaps(
@@ -273,7 +246,6 @@ def detect_gaps(
     spacing from the previous point exceeds ``max_gap``, else 0.0 —
     a fault-indicator series that flows through the normal lineage."""
     from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
 
     from meteaudata_spark.functions.freq import to_seconds
 
@@ -287,25 +259,14 @@ def detect_gaps(
         Parameters(max_gap=max_gap),
         func=detect_gaps,
     )
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        w = W.orderBy("timestamp")
-        delta = epoch_seconds(F.col("timestamp")) - epoch_seconds(
-            F.lag(F.col("timestamp")).over(w)
-        )
-        flagged = ts.df.select(
-            "timestamp",
-            F.when(delta > gap_sec, 1.0).otherwise(0.0).alias("value"),
-        )
-        out = TimeSeries(
-            df=flagged,
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype="float64",
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    delta = epoch_seconds(F.col("timestamp")) - epoch_seconds(
+        F.lag(F.col("timestamp")).over(W.orderBy("timestamp"))
+    )
+    flag = F.when(delta > gap_sec, 1.0).otherwise(0.0).alias("value")
+    return _outputs(
+        input_series, step, lambda df: df.select("timestamp", flag),
+        dtype="float64",
+    )
 
 
 def transform_values(
@@ -320,8 +281,6 @@ def transform_values(
     declarative column expression, e.g. ``transform_values(ts,
     "value * 2")``.  Stays JVM-side (no Python per row); arbitrary
     Python belongs in operators/pandas_compat instead."""
-    from pyspark.sql import functions as F
-
     step = _make_step(
         ProcessingType.TRANSFORMATION,
         f"Applies the scalar expression {expression!r} to each value",
@@ -331,16 +290,11 @@ def transform_values(
         Parameters(expression=expression, suffix=suffix),
         func=transform_values,
     )
-    outputs = []
-    for ts in input_series:
-        out = TimeSeries(
-            df=ts.df.withColumn("value", F.expr(expression)),
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype=ts.values_dtype,
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(
+        input_series, step,
+        lambda df: df.withColumn("value", F.expr(expression)),
+        time_index=False,
+    )
 
 
 def sort_index(
@@ -357,19 +311,10 @@ def sort_index(
         Parameters(ascending=ascending),
         func=sort_index,
     )
-    outputs = []
-    for ts in input_series:
-        from pyspark.sql import functions as F
-
-        col = F.col("timestamp").asc() if ascending else F.col("timestamp").desc()
-        out = TimeSeries(
-            df=ts.df.orderBy(col),
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype=ts.values_dtype,
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    col = F.col("timestamp").asc() if ascending else F.col("timestamp").desc()
+    return _outputs(
+        input_series, step, lambda df: df.orderBy(col), time_index=False
+    )
 
 
 def remove_duplicates(
@@ -386,16 +331,11 @@ def remove_duplicates(
         Parameters(keep=keep),
         func=remove_duplicates,
     )
-    outputs = []
-    for ts in input_series:
-        out = TimeSeries(
-            df=kernels.drop_duplicate_timestamps(ts.df, keep=keep),
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype=ts.values_dtype,
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(
+        input_series, step,
+        lambda df: kernels.drop_duplicate_timestamps(df, keep=keep),
+        time_index=False,
+    )
 
 
 def exponential_smoothing(
@@ -424,23 +364,15 @@ def exponential_smoothing(
         Parameters(alpha=alpha, chunk_seconds=chunk_seconds),
         func=exponential_smoothing,
     )
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        if chunk_seconds is not None:
-            out_df = kernels.ewma_distributed(
-                ts.df, alpha=alpha, chunk_seconds=chunk_seconds
-            )
-        else:
-            out_df = kernels.ewma(ts.df, alpha=alpha)
-        out = TimeSeries(
-            df=out_df,
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype="float64",
-            name=_out_name(ts, step.suffix),
+
+    def build(df):
+        if chunk_seconds is None:
+            return kernels.ewma(df, alpha=alpha)
+        return kernels.ewma_distributed(
+            df, alpha=alpha, chunk_seconds=chunk_seconds
         )
-        outputs.append((out, [step]))
-    return outputs
+
+    return _outputs(input_series, step, build, dtype="float64")
 
 
 def detect_outliers(
@@ -462,17 +394,10 @@ def detect_outliers(
         Parameters(k=k),
         func=detect_outliers,
     )
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        out = TimeSeries(
-            df=kernels.detect_outliers_iqr(ts.df, k=k),
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype="float64",
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+    return _outputs(
+        input_series, step, lambda df: kernels.detect_outliers_iqr(df, k=k),
+        dtype="float64",
+    )
 
 
 def double_exponential_smoothing(
@@ -498,20 +423,10 @@ def double_exponential_smoothing(
         Parameters(alpha=alpha, beta=beta),
         func=double_exponential_smoothing,
     )
-    from pyspark.sql import functions as F
-
-    outputs = []
-    for ts in input_series:
-        _require_time_index(ts)
-        sm = kernels.holt(ts.df, alpha=alpha, beta=beta)
-        out_df = sm.select(
+    return _outputs(
+        input_series, step,
+        lambda df: kernels.holt(df, alpha=alpha, beta=beta).select(
             "timestamp", F.col("__level").alias("value")
-        )
-        out = TimeSeries(
-            df=out_df,
-            index_metadata=ts.index_metadata.model_copy(deep=True),
-            values_dtype="float64",
-            name=_out_name(ts, step.suffix),
-        )
-        outputs.append((out, [step]))
-    return outputs
+        ),
+        dtype="float64",
+    )

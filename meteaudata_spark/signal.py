@@ -19,7 +19,7 @@ version numbers on registration.
 from __future__ import annotations
 
 import datetime
-from typing import Any, Callable, Optional, Protocol
+from typing import Any, Optional, Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +34,7 @@ from meteaudata_spark.timeseries import (
     INDEX_COL,
     VALUE_COL,
     TimeSeries,
+    long_dataframe,
     pairs_data_equal,
 )
 
@@ -75,8 +76,6 @@ class Signal:
         elif spark is not None:
             # reference parity (types.py:554-560): a Signal created with
             # no data gets an empty placeholder series {name}_RAW#1
-            import pandas as pd
-
             self._ingest(pd.Series(name="RAW", dtype=object))
 
     # ------------------------------------------------------------------
@@ -136,21 +135,21 @@ class Signal:
     def all_time_series(self) -> list[str]:
         return list(self.time_series.keys())
 
+    def _series_parts(self) -> list[str]:
+        return [naming.split_full_name(n)[1] for n in self.time_series]
+
     def max_ts_name_number(self) -> dict[str, int]:
-        out: dict[str, int] = {}
-        for full in self.all_time_series:
-            _, series_part = naming.split_full_name(full)
-            base, num = naming.parse_version(series_part)
-            if num is not None:
-                out[base] = max(out.get(base, 0), num)
-        return out
+        parts = self._series_parts()
+        return {
+            base: naming.max_version_number(parts, base)
+            for base, num in map(naming.parse_version, parts)
+            if num is not None
+        }
 
     def update_numbered_ts_name(self, full_name: str) -> str:
-        existing = self.max_ts_name_number()
         signal_part, series_part = naming.split_full_name(full_name)
-        base, _ = naming.parse_version(series_part)
-        nxt = existing.get(base, 0) + 1
-        return f"{signal_part}{naming.PART_SEP}{naming.with_version(base, nxt)}"
+        nxt = naming.next_version_name(self._series_parts(), series_part)
+        return f"{signal_part}{naming.PART_SEP}{nxt}"
 
     def add(self, ts: TimeSeries) -> None:
         name = self.update_numbered_ts_name(self.new_ts_name(ts.name or "RAW"))
@@ -216,13 +215,13 @@ class Signal:
         """Point a step's input names at the highest-numbered existing
         series (reference: types.py:725-740 — minus its mutate-while-
         iterating bug)."""
-        existing = self.max_ts_name_number()
+        parts = self._series_parts()
         rewritten: list[str] = []
         for in_name in step.input_series_names:
             if naming.VERSION_SEP in in_name and naming.PART_SEP in in_name:
                 signal_part, series_part = naming.split_full_name(in_name)
                 base, _ = naming.parse_version(series_part)
-                num = existing.get(base, 1)
+                num = naming.max_version_number(parts, base) or 1
                 rewritten.append(
                     f"{signal_part}{naming.PART_SEP}{naming.with_version(base, num)}"
                 )
@@ -266,21 +265,8 @@ class Signal:
 
     def to_long_dataframe(self, names: Optional[list[str]] = None) -> DataFrame:
         """Union of series tagged by name: (series_name, timestamp, value)."""
-        from pyspark.sql import functions as F
-
         names = names or self.all_time_series
-        parts = [
-            self.time_series[n].df.select(
-                F.lit(n).alias("series_name"),
-                F.col(INDEX_COL),
-                F.col(VALUE_COL),
-            )
-            for n in names
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return long_dataframe({n: self.time_series[n] for n in names})
 
     def plot(self, names: Optional[list[str]] = None, max_points: int = 2000,
              title: Optional[str] = None):
@@ -395,6 +381,21 @@ class Signal:
                 name: ts.metadata_dict() for name, ts in self.time_series.items()
             },
         }
+
+    @classmethod
+    def from_metadata_dict(
+        cls, meta: dict, time_series: dict[str, TimeSeries]
+    ) -> "Signal":
+        """Inverse of ``metadata_dict``: ``meta``'s ``time_series`` entry
+        is ignored; the series are passed in, keyed by full name."""
+        return cls(
+            name=meta["name"],
+            units=meta["units"],
+            provenance=DataProvenance.model_validate(meta["provenance"]),
+            time_series=time_series,
+            created_on=datetime.datetime.fromisoformat(meta["created_on"]),
+            last_updated=datetime.datetime.fromisoformat(meta["last_updated"]),
+        )
 
 
 def _shallow_copy(ts: TimeSeries) -> TimeSeries:

@@ -250,10 +250,6 @@ def load_signal(spark: SparkSession, sig_dir: str) -> Signal:
 
 
 def _signal_from_manifest(spark: SparkSession, sig_dir: str, manifest: dict) -> Signal:
-    import datetime
-
-    from meteaudata_spark.metadata import DataProvenance
-
     data_format = manifest.get("data_format", "parquet")
     schemas = manifest.get("series_schemas", {})
     series: dict[str, TimeSeries] = {}
@@ -269,14 +265,7 @@ def _signal_from_manifest(spark: SparkSession, sig_dir: str, manifest: dict) -> 
             csv_path = os.path.join(sig_dir, "data", f"{name}.csv")
             ts = _series_from_csv(spark, csv_path, ts_meta)
         series[name] = ts
-    return Signal(
-        name=manifest["name"],
-        units=manifest["units"],
-        provenance=DataProvenance.model_validate(manifest["provenance"]),
-        time_series=series,
-        created_on=datetime.datetime.fromisoformat(manifest["created_on"]),
-        last_updated=datetime.datetime.fromisoformat(manifest["last_updated"]),
-    )
+    return Signal.from_metadata_dict(manifest, series)
 
 
 # ----------------------------------------------------------------------
@@ -304,8 +293,6 @@ def save_dataset(dataset: Dataset, path: str, data_format: str = "parquet") -> s
 
 
 def load_dataset(spark: SparkSession, ds_dir: str) -> Dataset:
-    import datetime
-
     with open(os.path.join(ds_dir, "manifest.yaml")) as fh:
         manifest = load_yaml(fh)
     signals: dict[str, Signal] = {}
@@ -314,16 +301,7 @@ def load_dataset(spark: SparkSession, ds_dir: str) -> Dataset:
         with open(os.path.join(sig_dir, "manifest.yaml")) as fh:
             sig_manifest = load_yaml(fh)
         signals[name] = _signal_from_manifest(spark, sig_dir, sig_manifest)
-    return Dataset(
-        name=manifest["name"],
-        description=manifest["description"],
-        owner=manifest["owner"],
-        purpose=manifest["purpose"],
-        project=manifest["project"],
-        signals=signals,
-        created_on=datetime.datetime.fromisoformat(manifest["created_on"]),
-        last_updated=datetime.datetime.fromisoformat(manifest["last_updated"]),
-    )
+    return Dataset.from_metadata_dict(manifest, signals)
 
 
 # ----------------------------------------------------------------------
@@ -425,23 +403,12 @@ def signal_to_json(signal: Signal) -> str:
 
 
 def signal_from_json(spark: SparkSession, blob: str) -> Signal:
-    import datetime
-
-    from meteaudata_spark.metadata import DataProvenance
-
     payload = json.loads(blob)
     series = {
         name: timeseries_from_json(spark, ts_blob)
         for name, ts_blob in payload["time_series_json"].items()
     }
-    return Signal(
-        name=payload["name"],
-        units=payload["units"],
-        provenance=DataProvenance.model_validate(payload["provenance"]),
-        time_series=series,
-        created_on=datetime.datetime.fromisoformat(payload["created_on"]),
-        last_updated=datetime.datetime.fromisoformat(payload["last_updated"]),
-    )
+    return Signal.from_metadata_dict(payload, series)
 
 
 def dataset_to_json(dataset: Dataset) -> str:
@@ -454,23 +421,12 @@ def dataset_to_json(dataset: Dataset) -> str:
 
 
 def dataset_from_json(spark: SparkSession, blob: str) -> Dataset:
-    import datetime
-
     payload = json.loads(blob)
     signals = {
         name: signal_from_json(spark, sig_blob)
         for name, sig_blob in payload["signals_json"].items()
     }
-    return Dataset(
-        name=payload["name"],
-        description=payload["description"],
-        owner=payload["owner"],
-        purpose=payload["purpose"],
-        project=payload["project"],
-        signals=signals,
-        created_on=datetime.datetime.fromisoformat(payload["created_on"]),
-        last_updated=datetime.datetime.fromisoformat(payload["last_updated"]),
-    )
+    return Dataset.from_metadata_dict(payload, signals)
 
 
 # ----------------------------------------------------------------------
@@ -605,11 +561,7 @@ def load_dataset_long(spark: SparkSession, ds_dir: str) -> Dataset:
     bucketed variant, a constant-foldable bucket predicate so the scan
     prunes to the series' one bucket DIRECTORY); nothing is read until
     a series is acted on."""
-    import datetime
-
     from pyspark.sql import functions as F
-
-    from meteaudata_spark.metadata import DataProvenance
 
     with open(os.path.join(ds_dir, "manifest.yaml")) as fh:
         manifest = load_yaml(fh)
@@ -632,23 +584,5 @@ def load_dataset_long(spark: SparkSession, ds_dir: str) -> Dataset:
                 )
             df = data.filter(cond).select(INDEX_COL, VALUE_COL)
             series[ts_name] = TimeSeries.from_metadata_dict(df, ts_meta)
-        signals[sig_name] = Signal(
-            name=sig_meta["name"],
-            units=sig_meta["units"],
-            provenance=DataProvenance.model_validate(sig_meta["provenance"]),
-            time_series=series,
-            created_on=datetime.datetime.fromisoformat(sig_meta["created_on"]),
-            last_updated=datetime.datetime.fromisoformat(
-                sig_meta["last_updated"]
-            ),
-        )
-    return Dataset(
-        name=manifest["name"],
-        description=manifest["description"],
-        owner=manifest["owner"],
-        purpose=manifest["purpose"],
-        project=manifest["project"],
-        signals=signals,
-        created_on=datetime.datetime.fromisoformat(manifest["created_on"]),
-        last_updated=datetime.datetime.fromisoformat(manifest["last_updated"]),
-    )
+        signals[sig_name] = Signal.from_metadata_dict(sig_meta, series)
+    return Dataset.from_metadata_dict(manifest, signals)

@@ -416,6 +416,18 @@ def union_by_schema(
     return unions
 
 
+def long_dataframe(series: dict[str, TimeSeries]) -> DataFrame:
+    """``(series_name, timestamp, value)``: the union of ``series``,
+    each row tagged with its series' key."""
+    if not series:
+        raise ValueError("no series to union")
+    parts = [
+        ts.df.select(F.lit(name).alias("series_name"), INDEX_COL, VALUE_COL)
+        for name, ts in series.items()
+    ]
+    return reduce(DataFrame.unionByName, parts)
+
+
 def collect_sorted(frames: list[DataFrame]) -> list[pd.DataFrame]:
     """Collect many series at once: one ``toPandas`` (one job) per
     distinct schema, over a ``UNION ALL`` of the frames tagged by

@@ -1,13 +1,15 @@
-"""One-job whole-Dataset processing: same semantics as per-series
-Signal.process, one shared Spark plan."""
+"""Dataset batch processing (resample_all / interpolate_all /
+smooth_all): the same outputs and lineage as per-series
+Signal.process."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from meteaudata_spark.dataset import Dataset
-from meteaudata_spark.operators.univariate import resample
+from meteaudata_spark.operators import univariate as uv
 from meteaudata_spark.signal import Signal
+from meteaudata_spark.timeseries import series_data_equal
 
 
 @pytest.fixture()
@@ -54,6 +56,42 @@ def test_chain_all_matches_pandas(multi_dataset):
         )
 
 
+def test_batch_chain_matches_signal_process(spark, provenance, multi_dataset):
+    """resample_all -> interpolate_all -> smooth_all records exactly
+    what the same chain through Signal.process records: data, dtype,
+    index metadata (the new frequency) and every step."""
+    ds, data = multi_dataset
+    names = ds.all_series_names()
+    for run in (
+        lambda n: ds.resample_all("5min", names=n),
+        lambda n: ds.interpolate_all(names=n),
+        lambda n: ds.smooth_all(0.3, names=n),
+    ):
+        before = set(ds.all_series_names())
+        run(names)
+        names = [n for n in ds.all_series_names() if n not in before]
+        assert len(names) == 3
+    assert names == [f"{n}#1_EWMA#1" for n in "ABC"]
+
+    for name in "ABC":
+        sig = Signal(input_data=data[name], name=name, units="mg/l",
+                     provenance=provenance, spark=spark)
+        full = f"{name}#1_RAW#1"
+        for fn, args in ((uv.resample, ("5min",)), (uv.linear_interpolation, ()),
+                         (uv.exponential_smoothing, (0.3,))):
+            sig.process([full], fn, *args)
+            full = sig.all_time_series[-1]
+            got = ds.signals[f"{name}#1"].time_series[full]
+            want = sig.time_series[full]
+            assert series_data_equal(got, want), full
+            assert got.values_dtype == want.values_dtype, full
+            assert got.index_metadata == want.index_metadata, full
+            assert got.index_metadata.frequency == "5min", full
+            assert [s.model_dump(exclude={"run_datetime"}) for s in got.processing_steps] == [
+                s.model_dump(exclude={"run_datetime"}) for s in want.processing_steps
+            ], full
+
+
 def test_rerun_bumps_versions(multi_dataset):
     ds, _ = multi_dataset
     ds.resample_all("5min")
@@ -62,9 +100,9 @@ def test_rerun_bumps_versions(multi_dataset):
 
 
 def test_long_store_feeds_one_job_processing(spark, provenance, tmp_path):
-    """The consolidated store composes with process_long: load the
-    long table lazily, resample every series in ONE job, and values
-    match the per-signal path."""
+    """The consolidated store composes with resample_all: load the
+    long table lazily, resample every series, and values match the
+    per-signal path."""
     import numpy as np
     import pandas as pd
 
