@@ -27,22 +27,13 @@ def main() -> None:
         sf = -1.0
 
     import __spark_entry__ as entrymod
+    from meteaudata_spark.ext.warm import warm_pair_relations, warm_session
     from meteaudata_spark.session import get_spark
 
     spark = get_spark("meteaudata-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # Session-startup warmup so the first measured query isn't charged
-    # for one-time costs: JVM/codegen, the vectorized parquet reader,
-    # and the Arrow Python-worker pool (first pandas UDF forks workers)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    try:
-        warm = spark.read.parquet(f"{sf_dir}/region.parquet")
-        warm.write.mode("overwrite").format("noop").save()
-        warm.mapInPandas(lambda it: it, warm.schema).write.mode(
-            "overwrite"
-        ).format("noop").save()
-    except Exception:  # noqa: BLE001 - warmup is best-effort
-        pass
+    # the first measured query must not pay the session's one-time costs
+    warm_session(spark, sf_dir)
 
     # Prewarm the session-memoized shared relations (LSH pairs,
     # MinHash pairs, clusters, ...) and record their one-time build
@@ -51,8 +42,6 @@ def main() -> None:
     # SPARK_GRAFT_BENCH_WARM=0 restores the cold mode.
     warm_builds: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_WARM", "1") != "0":
-        from meteaudata_spark.ext.warm import warm_pair_relations
-
         try:
             warm_builds = warm_pair_relations(spark, sf_dir)
         except Exception as exc:  # noqa: BLE001 - fall back to cold

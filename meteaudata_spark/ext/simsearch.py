@@ -1648,7 +1648,7 @@ def _ivfpq_encode_arrow(
     streaming ingest encode-bound (~2.4k rows/s).
 
     BIT-EXACT equal to the expression path (pinned by
-    tests/test_r14_ops.py): every quantity is an integer below 2⁵³
+    tests/test_simsearch.py): every quantity is an integer below 2⁵³
     (|q| ≤ 2²⁰ → x·c ≤ 2⁴⁰, 64-dim sums < 2⁴⁷), so float64 GEMM
     accumulation is exact in any order; ``argmin`` keeps the FIRST
     (= lowest id, both codebook arrays pre-sorted) index on ties —
@@ -2035,7 +2035,7 @@ def append_ivfpq_delta(spark: SparkSession, path: str, delta_emb: DataFrame) -> 
     Because the codebooks are frozen, (base index) + (delta append)
     is BIT-IDENTICAL to a full rebuild whenever the training rows
     (coarse sample + PQ training vectors) are in the base — the
-    equivalence ``tests/test_r13_ops.py`` pins and the
+    equivalence ``tests/test_simsearch.py`` pins and the
     ``emb_ivfpq_delta_topk`` gate row certifies against DuckDB's
     independent full-rebuild oracle.  Cost is one map-only encode of
     the delta (two tiny broadcasts) + an append of delta-sized
@@ -2089,7 +2089,7 @@ def delete_ivfpq_ids(spark: SparkSession, path: str, dead_ids: DataFrame) -> Non
     appears in ``dead_ids``, rewriting ONLY the inverted lists
     (centroid_id partitions) that actually hold deleted vectors —
     dynamic partition overwrite leaves the other lists' files
-    untouched (mtime-asserted in tests/test_r13_ops.py).
+    untouched (mtime-asserted in tests/test_simsearch.py).
 
     Codebooks are frozen, so (full index) − (deleted codes) is
     BIT-IDENTICAL to rebuilding from the surviving vectors whenever

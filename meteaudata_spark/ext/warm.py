@@ -21,6 +21,25 @@ import time
 from pyspark.sql import SparkSession
 
 
+def warm_session(spark: SparkSession, *sf_dirs: str) -> None:
+    """Pay a fresh session's one-time costs before anything is timed:
+    JVM start-up and codegen (a ``range`` sum), the vectorized parquet
+    reader (a noop write of each ``sf_dir``'s ``region`` table) and the
+    Arrow Python worker pool (a ``mapInPandas`` noop write).  The table
+    part is best-effort: a missing ``region`` skips it."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    try:
+        for sf_dir in sf_dirs:
+            region = spark.read.parquet(f"{sf_dir}/region.parquet")
+            region.write.mode("overwrite").format("noop").save()
+        if sf_dirs:
+            region.mapInPandas(lambda it: it, region.schema).write.mode(
+                "overwrite"
+            ).format("noop").save()
+    except Exception:  # noqa: BLE001 - warm-up is best-effort
+        pass
+
+
 def warm_pair_relations(spark: SparkSession, sf_dir: str) -> dict:
     """Build + materialize every session-memoized shared relation for
     ``sf_dir``; returns {relation: build_seconds}.

@@ -17,7 +17,7 @@ vectorized pandas pass per shard (concat state + batch, sort, shifted
 neighbours, integer fence compare), so Python fires n_shards times
 per batch regardless of series count.  Measured at 10M events / 200k
 series: 945k events/s vs the per-series keying's 12.5k (75×), state
-1,024 shard rows ≈ 15 MB (tools/scale_smoke_dipspike_stream.py).
+1,024 shard rows ≈ 15 MB (tools/scale_smoke.py stream_dip_spike).
 
 Semantics match the batch operator bit-for-bit: values micro-quantize
 to BIGINT on entry using Spark's HALF_UP rule (floor(|v|·1e6 + 0.5)

@@ -18,6 +18,15 @@ from pyspark.sql import functions as F
 from meteaudata_spark.functions.freq import to_spark_interval
 
 
+def _nan_to_null(df: DataFrame, val_col: str):
+    """``val_col`` with NaN mapped to null, so ``avg``/``count`` skip it
+    as the batch/pandas semantics do; non-float columns pass through."""
+    col = F.col(val_col)
+    if dict(df.dtypes)[val_col] in ("double", "float"):
+        return F.when(F.isnan(col), F.lit(None)).otherwise(col)
+    return col
+
+
 def stream_resample_mean(
     stream_df: DataFrame,
     freq: str,
@@ -34,11 +43,7 @@ def stream_resample_mean(
     null so the mean skips them, matching the batch/pandas semantics.
     """
     interval = to_spark_interval(freq)
-    clean = (
-        F.when(F.isnan(F.col(val_col)), F.lit(None)).otherwise(F.col(val_col))
-        if dict(stream_df.dtypes)[val_col] in ("double", "float")
-        else F.col(val_col)
-    )
+    clean = _nan_to_null(stream_df, val_col)
     grouped = (
         stream_df.withWatermark(ts_col, watermark)
         .groupBy(
@@ -51,31 +56,6 @@ def stream_resample_mean(
         *list(partition_cols),
         F.col("__w.start").alias(ts_col),
         F.col(val_col),
-    )
-
-
-def stream_sessionize(
-    stream_df: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "timestamp",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Session windows with a dynamic gap — the streaming analog of the
-    batch sessionize query (ext/timeseries_queries.py)."""
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.col(key_col),
-            F.session_window(F.col(ts_col), gap).alias("__s"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            key_col,
-            F.col("__s.start").alias("session_start"),
-            F.col("__s.end").alias("session_end"),
-            "n_events",
-        )
     )
 
 
@@ -95,11 +75,7 @@ def stream_sliding_mean(
     order to frame over)."""
     w = to_spark_interval(window)
     s = to_spark_interval(slide)
-    clean = (
-        F.when(F.isnan(F.col(val_col)), F.lit(None)).otherwise(F.col(val_col))
-        if dict(stream_df.dtypes)[val_col] in ("double", "float")
-        else F.col(val_col)
-    )
+    clean = _nan_to_null(stream_df, val_col)
     return (
         stream_df.withWatermark(ts_col, watermark)
         .groupBy(

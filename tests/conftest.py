@@ -1,3 +1,4 @@
+import uuid
 import warnings
 
 import numpy as np
@@ -14,6 +15,33 @@ def spark():
     spark = get_spark("meteaudata-tests")
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
+
+
+@pytest.fixture()
+def drain(spark):
+    """``drain(stream_df, mode="append")`` runs a streaming DataFrame to
+    completion (``trigger(availableNow=True)``) into a memory sink with a
+    unique name, asserts the query terminated, and returns the sink's
+    table.  A query that raises fails the test with its own error; one
+    still running after the timeout fails it instead of letting the test
+    read a partial table."""
+
+    def run(stream_df, mode="append"):
+        name = f"drain_{uuid.uuid4().hex}"
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        done = q.awaitTermination(300)
+        if not done:
+            q.stop()
+        assert done, f"stream query {name} did not terminate within 300 s"
+        return spark.table(name)
+
+    return run
 
 
 @pytest.fixture()

@@ -9,7 +9,7 @@ from meteaudata_spark.streaming.anomaly_stream import (
 )
 
 
-def test_stream_flags_match_batch_and_catch_spikes(spark, tmp_path):
+def test_stream_flags_match_batch_and_catch_spikes(spark, tmp_path, drain):
     hist_p = str(tmp_path / "hist")
     live_p = str(tmp_path / "live")
     # history: values ~ N-ish around 50 per type; live: same + spikes
@@ -46,16 +46,10 @@ def test_stream_flags_match_batch_and_catch_spikes(spark, tmp_path):
     stream = spark.readStream.schema(
         spark.read.parquet(live_p).schema
     ).parquet(live_p)
-    q = (
-        stream_anomaly_flags(stream, fences)
-        .writeStream.format("memory")
-        .queryName("anom")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["event_id"]: r["status"] for r in spark.table("anom").collect()}
+    got = {
+        r["event_id"]: r["status"]
+        for r in drain(stream_anomaly_flags(stream, fences)).collect()
+    }
 
     batch = {
         r["event_id"]: r["status"]

@@ -26,7 +26,7 @@ def _mk_events(spark, path):
     return ev
 
 
-def test_stream_attribution_matches_batch(spark, tmp_path):
+def test_stream_attribution_matches_batch(spark, tmp_path, drain):
     src = str(tmp_path / "ev")
     _mk_events(spark, src)
     schema = spark.read.parquet(src).schema
@@ -36,18 +36,11 @@ def test_stream_attribution_matches_batch(spark, tmp_path):
 
     clicks = read_stream().filter(F.col("event_type") == "click")
     purchases = read_stream().filter(F.col("event_type") == "purchase")
-    q = (
-        stream_attribution(clicks, purchases, "1 hour", "0 seconds")
-        .writeStream.format("memory")
-        .queryName("attrib")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["purchase_id"], r["click_id"]): r["lag_seconds"]
-        for r in spark.table("attrib").collect()
+        for r in drain(
+            stream_attribution(clicks, purchases, "1 hour", "0 seconds")
+        ).collect()
     }
 
     ev = spark.read.parquet(src)

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_stream_scores_equal_batch_ranker(spark, tmp_path):
+def test_stream_scores_equal_batch_ranker(spark, tmp_path, drain):
     from meteaudata_spark.ext.textstats import (
         _BM25_QUERY,
         bm25_search,
@@ -38,17 +38,9 @@ def test_stream_scores_equal_batch_ranker(spark, tmp_path):
     stream = spark.readStream.schema(schema).parquet(src)
     out = stream_bm25_score(stream, _BM25_QUERY, stats)
     assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("bm25_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         r["doc_id"]: (r["bm25"], r["n_terms_hit"])
-        for r in spark.table("bm25_stream").collect()
+        for r in drain(out).collect()
     }
     assert got == batch
     assert len(got) > 0

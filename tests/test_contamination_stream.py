@@ -57,7 +57,7 @@ def test_stream_flags_match_batch_bloom(spark, tmp_path):
     assert got == want
 
 
-def test_stream_catches_planted_leak_across_batches(spark, tmp_path):
+def test_stream_catches_planted_leak_across_batches(spark, tmp_path, drain):
     from meteaudata_spark.streaming.contamination_stream import (
         build_bloom_bits,
         stream_contamination_flags,
@@ -83,17 +83,9 @@ def test_stream_catches_planted_leak_across_batches(spark, tmp_path):
         .parquet(src)
     )
     out = stream_contamination_flags(stream, bits)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("contam")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         r["doc_id"]: r["contaminated"]
-        for r in spark.table("contam").collect()
+        for r in drain(out).collect()
     }
     assert got == {10: False, 11: True, 12: False}
 

@@ -6,8 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from meteaudata_spark.ext import corpus_ops as C
+from meteaudata_spark.ext import corpus_ops
 from meteaudata_spark.ext import sketches as S
 from meteaudata_spark.ext.dedup import dedup_clusters, _h60
+
+SF = "/root/testdata/sf0.001"
 
 
 def _docs_df(spark, texts, langs=None):
@@ -210,3 +213,141 @@ def test_jaccard_postings_cap_keeps_high_sim_pairs(spark):
     # every genuinely-high-similarity pair survives the cap
     assert exact <= capped | exact
     assert len(exact & capped) / len(exact) >= 0.9
+
+
+def test_group_sample_small_groups_keep_all(spark):
+    from meteaudata_spark.ext.corpus_ops import group_sample_exact
+
+    d = spark.createDataFrame(
+        [(i, "short" if i < 3 else "long") for i in range(103)],
+        "doc_id long, lang string",
+    )
+    out = group_sample_exact(d, "lang", 20).collect()
+    per = {}
+    for r in out:
+        per[r["lang"]] = per.get(r["lang"], 0) + 1
+    assert per["short"] == 3  # fewer than k → all kept
+    assert per["long"] == 20
+
+
+def test_group_sample_exact_k_and_monotone(spark):
+    from meteaudata_spark.ext.corpus_ops import group_sample_exact
+
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    s20 = group_sample_exact(docs, "lang", 20).collect()
+    per = {}
+    for r in s20:
+        per.setdefault(r["lang"], set()).add(r["doc_id"])
+    # every language has enough docs at sf0.01 → exactly 20 each
+    for lang, ids in per.items():
+        assert len(ids) == 20, (lang, len(ids))
+    # shrinking k keeps a subset (rank stability)
+    s10 = group_sample_exact(docs, "lang", 10).collect()
+    for r in s10:
+        assert r["doc_id"] in per[r["lang"]]
+    # deterministic across runs
+    again = {
+        (r["lang"], r["smp_rank"]): r["doc_id"]
+        for r in group_sample_exact(docs, "lang", 20).collect()
+    }
+    first = {(r["lang"], r["smp_rank"]): r["doc_id"] for r in s20}
+    assert again == first
+
+
+# ----------------------------------------------------------------------
+# shuffle_shards
+# ----------------------------------------------------------------------
+def test_shuffle_shards_is_deterministic_and_partition_invariant(spark):
+    d = spark.range(0, 300).withColumnRenamed("id", "doc_id")
+    a = corpus_ops.shuffle_shards(d, n_shards=4).toPandas()
+    b = (
+        corpus_ops.shuffle_shards(d.repartition(13), n_shards=4)
+        .toPandas()
+    )
+    a = a.sort_values(["shard", "pos"]).reset_index(drop=True)
+    b = b.sort_values(["shard", "pos"]).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b)
+
+
+def test_shuffle_shards_positions_are_contiguous_per_shard(spark):
+    d = spark.range(0, 257).withColumnRenamed("id", "doc_id")
+    out = corpus_ops.shuffle_shards(d, n_shards=8).toPandas()
+    assert len(out) == 257
+    for shard, grp in out.groupby("shard"):
+        assert sorted(grp["pos"]) == list(range(1, len(grp) + 1))
+    # hash sharding at n=257 should not starve any of 8 shards
+    assert out["shard"].nunique() == 8
+
+
+def test_shuffle_shards_salt_reshuffles_epoch_order(spark):
+    d = spark.range(0, 200).withColumnRenamed("id", "doc_id")
+    e0 = corpus_ops.shuffle_shards(d, salt="epoch0").toPandas()
+    e1 = corpus_ops.shuffle_shards(d, salt="epoch1").toPandas()
+    k0 = e0.sort_values(["shard", "pos"])["doc_id"].tolist()
+    k1 = e1.sort_values(["shard", "pos"])["doc_id"].tolist()
+    assert sorted(k0) == sorted(k1) == list(range(200))
+    assert k0 != k1  # a different salt is a different permutation
+
+
+# ----------------------------------------------------------------------
+# k_anonymity_report
+# ----------------------------------------------------------------------
+def test_k_anonymity_planted_groups(spark):
+    # group A: 10 rows, group B: 3 rows, group C: 1 row
+    rows = (
+        [("en", "web") for _ in range(10)]
+        + [("en", "book") for _ in range(3)]
+        + [("fr", "web")]
+    )
+    df = spark.createDataFrame(rows, "lang string, source string")
+    out = (
+        corpus_ops.k_anonymity_report(df, ["lang", "source"], [2, 5])
+        .toPandas()
+        .set_index("k")
+    )
+    # k=2: only the singleton violates
+    assert out.loc[2, "violating_groups"] == 1
+    assert out.loc[2, "suppressed_rows"] == 1
+    assert out.loc[2, "suppression_bp"] == 1 * 10000 // 14
+    # k=5: the 3-row group and the singleton violate
+    assert out.loc[5, "violating_groups"] == 2
+    assert out.loc[5, "suppressed_rows"] == 4
+    assert out.loc[5, "n_groups"] == 3
+    assert out.loc[5, "suppression_bp"] == 4 * 10000 // 14
+
+
+# ----------------------------------------------------------------------
+# corpus data card
+# ----------------------------------------------------------------------
+def test_corpus_datacard_consistent_with_exact_dedup(spark):
+    from meteaudata_spark.ext import dedup
+
+    card = corpus_ops.doc_corpus_datacard(spark, SF).toPandas()
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    # volume columns must reconcile with the raw table
+    assert card["n_docs"].sum() == docs.count()
+    per_lang = (
+        docs.groupBy("lang").agg(F.sum("n_chars").alias("tc")).toPandas()
+        .set_index("lang")["tc"]
+    )
+    for _, row in card.iterrows():
+        assert row["total_chars"] == per_lang[row["lang"]]
+    # dup_excess must equal the exact-dedup excess corpus-wide
+    excess = (
+        dedup.doc_exact_dedup(spark, SF)
+        .agg(F.sum(F.col("n_copies") - 1))
+        .collect()[0][0]
+    )
+    assert card["dup_excess"].sum() == excess
+    assert ((card["mean_quality_micros"] >= 0) & (card["mean_quality_micros"] <= 1000000)).all()
+
+
+# ----------------------------------------------------------------------
+# windowed event dedup (batch row + streaming twin differential)
+# ----------------------------------------------------------------------
+def test_events_windowed_dedup_reconciles_totals(spark):
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    out = corpus_ops.events_windowed_dedup(spark, SF).toPandas()
+    assert out["n_events"].sum() == ev.count()
+    assert (out["n_dups"] == out["n_events"] - out["n_distinct"]).all()
+    assert (out["dup_bp"] <= 10000).all()

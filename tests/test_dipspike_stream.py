@@ -10,23 +10,14 @@ from meteaudata_spark.ext.timeseries_queries import dip_spike
 from meteaudata_spark.streaming.dipspike_stream import stream_dip_spike
 
 
-def _drain(spark, src):
+def _drain(spark, drain, src):
     stream = spark.readStream.schema(
         spark.read.parquet(src).schema
     ).parquet(src)
-    q = (
-        stream_dip_spike(stream)
-        .writeStream.format("memory")
-        .queryName("dipstream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table("dipstream")
+    return drain(stream_dip_spike(stream))
 
 
-def test_stream_matches_batch_interior(spark, tmp_path):
+def test_stream_matches_batch_interior(spark, tmp_path, drain):
     src = str(tmp_path / "ev")
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     ev.write.parquet(src)
@@ -35,7 +26,7 @@ def test_stream_matches_batch_interior(spark, tmp_path):
         (r["user_id"], r["event_type"], r["event_id"]): (
             r["is_dip"], r["is_spike"]
         )
-        for r in _drain(spark, src).collect()
+        for r in _drain(spark, drain, src).collect()
     }
 
     marked = dip_spike(ev, ["user_id", "event_type"])
@@ -53,7 +44,7 @@ def test_stream_matches_batch_interior(spark, tmp_path):
     assert got == want
 
 
-def test_stream_state_spans_microbatches(spark, tmp_path):
+def test_stream_state_spans_microbatches(spark, tmp_path, drain):
     # the same series split across TWO batches (maxFilesPerTrigger=1):
     # the triple straddling the file boundary must still classify
     import datetime as dt
@@ -79,18 +70,9 @@ def test_stream_state_spans_microbatches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream_dip_spike(stream)
-        .writeStream.format("memory")
-        .queryName("dipstream2")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     out = {
         r["event_id"]: (r["is_dip"], r["is_spike"])
-        for r in spark.table("dipstream2").collect()
+        for r in drain(stream_dip_spike(stream)).collect()
     }
     # interior points 1 and 2 classified; the dip at id=2 found even
     # though its neighbours arrived in different micro-batches

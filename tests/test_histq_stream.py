@@ -22,7 +22,7 @@ def _mk_events(spark, path):
     return ev
 
 
-def test_stream_histq_within_bin_width_of_exact(spark, tmp_path):
+def test_stream_histq_within_bin_width_of_exact(spark, tmp_path, drain):
     from meteaudata_spark.streaming.histq_stream import stream_hist_quantiles
 
     src = str(tmp_path / "src")
@@ -32,17 +32,9 @@ def test_stream_histq_within_bin_width_of_exact(spark, tmp_path):
         stream, lo=0.0, hi=100.0, n_bins=50,
         window="1 minute", watermark="0 seconds",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("histq")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["event_type"], r["window_start"]): r
-        for r in spark.table("histq").collect()
+        for r in drain(out).collect()
     }
     assert got, "no windows finalized"
 
@@ -60,7 +52,7 @@ def test_stream_histq_within_bin_width_of_exact(spark, tmp_path):
             assert abs(r[col] - exact) <= width + 1e-9, (key, col, r[col], exact)
 
 
-def test_stream_histq_clamps_out_of_range(spark, tmp_path):
+def test_stream_histq_clamps_out_of_range(spark, tmp_path, drain):
     from meteaudata_spark.streaming.histq_stream import stream_hist_quantiles
 
     src = str(tmp_path / "src")
@@ -79,14 +71,7 @@ def test_stream_histq_clamps_out_of_range(spark, tmp_path):
         stream, lo=0.0, hi=10.0, n_bins=10,
         window="1 minute", watermark="0 seconds",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("histq2")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    drain(out)
     # the single window never finalizes in append mode without a later
     # event — run the SAME transformation in batch instead (it is a
     # plain DataFrame program) to pin the clamping math

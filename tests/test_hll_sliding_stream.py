@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-def test_streamed_day_registers_merge_equals_batch(spark, tmp_path):
+def test_streamed_day_registers_merge_equals_batch(spark, tmp_path, drain):
     from meteaudata_spark.ext.dedup import _h60
     from meteaudata_spark.ext.sketches import (
         events_hll_sliding_uniques,
@@ -40,16 +40,7 @@ def test_streamed_day_registers_merge_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream_hll_day_registers(stream)
-        .writeStream.format("memory")
-        .queryName("hll_day_regs")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    drained = spark.table("hll_day_regs")
+    drained = drain(stream_hll_day_registers(stream), "update")
     # registers only grow, so the element-wise max over every drained
     # update row per key == the final state — and with sharded state
     # (n_shards > 1) the same max-fold reassembles the shards
@@ -95,7 +86,7 @@ def test_fold_batch_rejects_full_width_hashes():
     assert _fold_batch(regs, iter([pd.DataFrame({"h": [(1 << 60) - 1]})])) == 1
 
 
-def test_day_register_shards_cover_full_register_range(spark, tmp_path):
+def test_day_register_shards_cover_full_register_range(spark, tmp_path, drain):
     # the shard id must come from bits disjoint from the register
     # bucket (h % 256): with low-bit sharding each shard could touch
     # only 256/n_shards registers, inflating state 32x. Feed one
@@ -124,16 +115,9 @@ def test_day_register_shards_cover_full_register_range(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream_hll_day_registers(stream, n_shards=n_shards)
-        .writeStream.format("memory")
-        .queryName("hll_shard_cover")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("hll_shard_cover").collect()
+    rows = drain(
+        stream_hll_day_registers(stream, n_shards=n_shards), "update"
+    ).collect()
     # every hash above has identical shard bits, so the whole feed
     # lands in ONE state group whose registers cover all 256 buckets;
     # low-bit sharding would instead split it into n_shards groups of

@@ -38,7 +38,7 @@ def test_stream_append_matches_batch_rebuild(spark, tmp_path):
     q = stream_append_ivfpq(
         stream, inc_idx, str(tmp_path / "ckpt")
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
     assert q.lastProgress is not None
     n_batches = int(q.lastProgress["batchId"]) + 1
     assert n_batches >= 3, n_batches
@@ -92,7 +92,7 @@ def test_stream_append_with_periodic_compaction(spark, tmp_path):
         compact_every=2,
         max_files_per_list=1,
     )
-    q.awaitTermination(300)
+    assert q.awaitTermination(300)
 
     for d in os.listdir(f"{inc_idx}/codes"):
         if not d.startswith("centroid_id="):

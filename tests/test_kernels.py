@@ -245,3 +245,17 @@ def test_forward_fill_operator_names_and_fills(spark):
     assert np.allclose(got.values, ser.ffill().values, equal_nan=True)
     step = sig.time_series["F#1_FFILL#1"].processing_steps[-1]
     assert step.type.value == "gap_filling"
+
+
+def test_holt_winters_single_point(spark):
+    from meteaudata_spark.operators.kernels import holt_winters
+
+    d = spark.createDataFrame(
+        [("a", 0, 5.0)], "k string, b1h long, value double"
+    )
+    out = holt_winters(
+        d, m=24, ts_col="b1h", val_col="value", partition_cols=["k"]
+    ).collect()
+    assert len(out) == 1
+    assert out[0]["__level"] == 5.0 and out[0]["__trend"] == 0.0
+    assert out[0]["__forecast_next"] == 5.0

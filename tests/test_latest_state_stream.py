@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from meteaudata_spark.streaming.latest_state_stream import stream_latest_state
 
 
-def test_stream_latest_state_matches_batch(spark, tmp_path):
+def test_stream_latest_state_matches_batch(spark, tmp_path, drain):
     src = str(tmp_path / "ev")
     ev = spark.range(2000).select(
         F.col("id").alias("event_id"),
@@ -27,16 +27,9 @@ def test_stream_latest_state_matches_batch(spark, tmp_path):
     stream = spark.readStream.schema(
         spark.read.parquet(f"{src}/events.parquet").schema
     ).parquet(f"{src}/events.parquet")
-    q = (
-        stream_latest_state(stream)
-        .writeStream.format("memory")
-        .queryName("lstate")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    got = sorted(
+        map(tuple, drain(stream_latest_state(stream), "complete").collect())
     )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.table("lstate").collect()))
 
     from meteaudata_spark.ext.timeseries_queries import ts_latest_state
 

@@ -7,7 +7,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 
-def test_stream_m4_matches_batch(spark, tmp_path):
+def test_stream_m4_matches_batch(spark, tmp_path, drain):
     from meteaudata_spark.streaming.m4_stream import stream_m4
 
     # 3 keys × 300 seconds of data, 1-minute windows
@@ -25,17 +25,9 @@ def test_stream_m4_matches_batch(spark, tmp_path):
         spark.read.parquet(src).schema
     ).parquet(src)
     out = stream_m4(stream, window="1 minute", watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("m4s")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["event_type"], r["window_start"]): tuple(r)[2:]
-        for r in spark.table("m4s").collect()
+        for r in drain(out).collect()
     }
 
     batch = (

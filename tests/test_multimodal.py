@@ -2,9 +2,12 @@
 Spark plumbing — schemas, Arrow batching, 1→N frame explode."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from meteaudata_spark.ext import multimodal
+
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
@@ -485,3 +488,28 @@ def test_phash_matches_duckdb_oracle(spark):
     )
     for c in ("doc_id", "h0", "h1", "h2", "h3"):
         assert got[c].astype("int64").tolist() == want[c].astype("int64").tolist(), c
+
+
+def test_image_neardup_empty_and_single(spark):
+    import numpy as np
+    import pandas as pd
+
+    from meteaudata_spark.ext.multimodal import (
+        encode_ppm,
+        image_ahash_blocks,
+        image_neardup_pairs,
+    )
+
+    one = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "asset_id": [1],
+                "payload": [
+                    encode_ppm(
+                        np.zeros((8, 8, 3), dtype=np.uint8) + 7
+                    )
+                ],
+            }
+        )
+    )
+    assert image_neardup_pairs(image_ahash_blocks(one)).count() == 0

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 
 
-def test_stream_flags_exact_dup_across_batches(spark, tmp_path):
+def test_stream_flags_exact_dup_across_batches(spark, tmp_path, drain):
     from meteaudata_spark.streaming.neardup_stream import (
         stream_near_dup_candidates,
     )
@@ -48,15 +48,7 @@ def test_stream_flags_exact_dup_across_batches(spark, tmp_path):
         .parquet(src)
     )
     out = stream_near_dup_candidates(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("neardup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("neardup").toPandas()
+    got = drain(out).toPandas()
     # doc 3 collides with doc 1 in EVERY band (identical text), with
     # the state carried from an earlier micro-batch
     flagged = got[got["doc_id"] == 3]
@@ -131,7 +123,7 @@ def test_vectorized_batch_signatures_match_reference():
     assert got2 == want2
 
 
-def test_event_time_horizon_evicts_buckets(spark, tmp_path):
+def test_event_time_horizon_evicts_buckets(spark, tmp_path, drain):
     """evict_after_us: an exact re-send AFTER the horizon re-seeds its
     buckets instead of being flagged (the pre-gap occupant aged out on
     its stored recency); a re-send INSIDE the horizon is flagged."""
@@ -177,15 +169,7 @@ def test_event_time_horizon_evicts_buckets(spark, tmp_path):
     out = stream_near_dup_candidates(
         stream, evict_after_us=3 * 3_600_000_000
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("neardup_evict")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("neardup_evict").toPandas()
+    got = drain(out).toPandas()
     # doc 3 flagged against doc 2 (inside horizon, all 4 bands);
     # doc 4 NOT flagged anywhere: doc 1's buckets aged out
     assert set(got["doc_id"]) == {3}, got

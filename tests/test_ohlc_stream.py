@@ -45,7 +45,7 @@ def test_streamed_ohlc_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     # final candle per key = row from the LAST batch that touched it
     drained = spark.read.parquet(sink)
@@ -85,7 +85,7 @@ def test_streamed_ohlc_equals_batch(spark, tmp_path):
     assert len(batch) > 0
 
 
-def test_streamed_ohlc_watermark_append_closes_candles(spark, tmp_path):
+def test_streamed_ohlc_watermark_append_closes_candles(spark, tmp_path, drain):
     """With a watermark, candles emit append-mode; the union of
     emitted candles over a drained bounded stream still covers every
     (type, day) with the batch values."""
@@ -102,15 +102,6 @@ def test_streamed_ohlc_watermark_append_closes_candles(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream_ohlc_daily(stream, watermark="1 day")
-        .writeStream.format("memory")
-        .queryName("ohlc_append")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["event_type"], str(r["day"])): (
             r["open"],
@@ -119,7 +110,7 @@ def test_streamed_ohlc_watermark_append_closes_candles(spark, tmp_path):
             r["close"],
             r["volume"],
         )
-        for r in spark.table("ohlc_append").collect()
+        for r in drain(stream_ohlc_daily(stream, watermark="1 day")).collect()
     }
     batch = {
         (r["event_type"], str(r["day"])): (

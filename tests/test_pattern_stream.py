@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 from meteaudata_spark.streaming.pattern_stream import stream_pattern_flags
 
 
-def test_stream_pattern_counts_match_batch(spark, tmp_path):
+def test_stream_pattern_counts_match_batch(spark, tmp_path, drain):
     src = str(tmp_path / "docs")
     rows = [
         (0, "visit https://a.example.org/x and http://b.example.net now", "en"),
@@ -16,17 +16,8 @@ def test_stream_pattern_counts_match_batch(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(src)
 
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    q = (
-        stream_pattern_flags(stream)
-        .writeStream.format("memory")
-        .queryName("patstream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {r["doc_id"]: (r["n_urls"], r["n_emails"], r["n_numbers"])
-           for r in spark.table("patstream").collect()}
+           for r in drain(stream_pattern_flags(stream)).collect()}
     batch = {r["doc_id"]: (r["n_urls"], r["n_emails"], r["n_numbers"])
              for r in stream_pattern_flags(spark.read.parquet(src)).collect()}
     assert got == batch

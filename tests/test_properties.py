@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from meteaudata_spark.operators import kernels
 
@@ -444,3 +445,117 @@ def test_chunk_text_invariants_any_window_stride(spark, window, data, lens):
         covered = {w for c in chunks for w in c["chunk_text"].split(" ") if w}
         expected = {f"d{j}w{i}" for i in range(n)}
         assert covered >= expected
+
+
+@given(
+    old_rows=st.dictionaries(
+        st.integers(0, 30), st.integers(0, 5), max_size=20
+    ),
+    new_rows=st.dictionaries(
+        st.integers(0, 30), st.integers(0, 5), max_size=20
+    ),
+)
+@settings(
+    max_examples=12, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_table_diff_partitions_key_union(old_rows, new_rows):
+    from meteaudata_spark.ext.relational import table_diff
+
+    spark = _SPARK
+    old = spark.createDataFrame(
+        [(k, float(v)) for k, v in old_rows.items()] or [(None, None)],
+        "k long, v double",
+    ).filter(F.col("k").isNotNull())
+    new = spark.createDataFrame(
+        [(k, float(v)) for k, v in new_rows.items()] or [(None, None)],
+        "k long, v double",
+    ).filter(F.col("k").isNotNull())
+    got = {r["k"]: r["status"] for r in table_diff(old, new, ["k"], ["v"]).collect()}
+    union = set(old_rows) | set(new_rows)
+    assert set(got) == union
+    for k in union:
+        if k in old_rows and k not in new_rows:
+            assert got[k] == "removed"
+        elif k not in old_rows and k in new_rows:
+            assert got[k] == "added"
+        elif old_rows[k] == new_rows[k]:
+            assert got[k] == "unchanged"
+        else:
+            assert got[k] == "changed"
+
+
+@given(
+    assign=st.lists(st.integers(0, 2), min_size=1, max_size=60),
+)
+@settings(
+    max_examples=10, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_rollup_partials_associative_under_any_split(assign):
+    from meteaudata_spark.ext.timeseries_queries import (
+        merge_partials,
+        rollup_partials,
+    )
+
+    spark = _SPARK
+    rows = [
+        (
+            i,
+            f"2024-01-01 0{i % 10}:0{i % 6}:00",
+            "t" + str(i % 2),
+            float(i % 7) / 3.0,
+            assign[i],
+        )
+        for i in range(len(assign))
+    ]
+    ev = spark.createDataFrame(
+        rows, "event_id long, ts string, event_type string, value double, part int"
+    ).select(
+        "event_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        "event_type",
+        "value",
+        "part",
+    )
+    direct = sorted(
+        map(tuple, rollup_partials(ev.drop("part")).collect())
+    )
+    parts = [
+        rollup_partials(ev.filter(F.col("part") == p).drop("part"))
+        for p in (0, 1, 2)
+    ]
+    merged = sorted(map(tuple, merge_partials(*parts).collect()))
+    assert direct == merged
+
+
+@given(
+    n_per_group=st.lists(st.integers(0, 30), min_size=1, max_size=4),
+    k=st.integers(1, 12),
+)
+@settings(
+    max_examples=10, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_group_sample_ranks_dense(n_per_group, k):
+    from meteaudata_spark.ext.corpus_ops import group_sample_exact
+
+    spark = _SPARK
+    rows, did = [], 0
+    for g, n in enumerate(n_per_group):
+        for _ in range(n):
+            rows.append((did, f"g{g}"))
+            did += 1
+    if not rows:
+        return
+    d = spark.createDataFrame(rows, "doc_id long, lang string")
+    out = group_sample_exact(d, "lang", k).collect()
+    per = {}
+    for r in out:
+        per.setdefault(r["lang"], []).append(r["smp_rank"])
+    for g, n in enumerate(n_per_group):
+        if n == 0:
+            assert f"g{g}" not in per
+        else:
+            ranks = sorted(per[f"g{g}"])
+            assert ranks == list(range(1, min(k, n) + 1))

@@ -193,7 +193,7 @@ def test_stream_quantization_matches_spark_round(spark):
     assert old != want
 
 
-def test_stream_eviction_bounds_state(spark, tmp_path):
+def test_stream_eviction_bounds_state(spark, tmp_path, drain):
     """evict_after_us drops series older than the horizon; the stream
     still classifies fresh series and holds no stale ones."""
     import datetime as dt
@@ -217,18 +217,11 @@ def test_stream_eviction_bounds_state(spark, tmp_path):
     src = str(tmp_path / "ev")
     df.write.parquet(src)
     stream = spark.readStream.schema(df.schema).parquet(src)
-    q = (
-        stream_dip_spike(stream, n_shards=4, evict_after_us=3_600_000_000)
-        .writeStream.format("memory")
-        .queryName("dipevict")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["user_id"], r["event_id"]): (r["is_dip"], r["is_spike"])
-        for r in spark.table("dipevict").collect()
+        for r in drain(
+            stream_dip_spike(stream, n_shards=4, evict_after_us=3_600_000_000)
+        ).collect()
     }
     # both interior points classified (eviction happens after emit)
     assert got[(1, 1)] == (True, False)

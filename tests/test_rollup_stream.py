@@ -10,7 +10,7 @@ from meteaudata_spark.ext.timeseries_queries import (
 from meteaudata_spark.streaming.rollup_stream import stream_rollup_partials
 
 
-def test_stream_partials_merge_with_batch_base(spark, tmp_path):
+def test_stream_partials_merge_with_batch_base(spark, tmp_path, drain):
     base_p = str(tmp_path / "base")
     live_p = str(tmp_path / "live")
 
@@ -37,16 +37,7 @@ def test_stream_partials_merge_with_batch_base(spark, tmp_path):
     stream = spark.readStream.schema(
         spark.read.parquet(live_p).schema
     ).parquet(live_p)
-    q = (
-        stream_rollup_partials(stream, watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("rollstream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    live = spark.table("rollstream")
+    live = drain(stream_rollup_partials(stream, watermark="0 seconds"))
 
     # append mode holds back windows the watermark never closed; merge
     # what emitted and compare on the closed buckets, then check the

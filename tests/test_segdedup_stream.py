@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_single_batch_matches_batch_operator(spark, tmp_path):
+def test_single_batch_matches_batch_operator(spark, tmp_path, drain):
     """availableNow over a static corpus (one micro-batch): the kept
     segment set equals batch segment_dedup's lowest-(doc_id, seg_idx)
     rule — per-doc kept counts AND reassembled dedup hashes match."""
@@ -32,16 +32,8 @@ def test_single_batch_matches_batch_operator(spark, tmp_path):
     stream = spark.readStream.schema(schema).parquet(src)
     out = stream_segment_dedup(stream, seg_words=8)
     assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("segdedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = (
-        spark.table("segdedup_stream")
+        drain(out)
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),
@@ -62,7 +54,7 @@ def test_single_batch_matches_batch_operator(spark, tmp_path):
     assert got == batch_nonzero and len(got) > 0
 
 
-def test_first_arrival_wins_across_batches(spark, tmp_path):
+def test_first_arrival_wins_across_batches(spark, tmp_path, drain):
     from meteaudata_spark.streaming.segdedup_stream import (
         stream_segment_dedup,
     )
@@ -90,18 +82,9 @@ def test_first_arrival_wins_across_batches(spark, tmp_path):
         .option("latestFirst", "false")
         .parquet(src)
     )
-    q = (
-        stream_segment_dedup(stream)
-        .writeStream.format("memory")
-        .queryName("segdedup_order")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     kept = {
         (r["doc_id"], r["seg_idx"])
-        for r in spark.table("segdedup_order").collect()
+        for r in drain(stream_segment_dedup(stream)).collect()
     }
     # doc 9 arrived first and keeps both segments; doc 1's identical
     # text keeps nothing; doc 3 is fresh
@@ -120,7 +103,7 @@ def test_stream_segment_dedup_validates_knobs(spark):
         stream_segment_dedup(d, state_shards=0)
 
 
-def test_event_time_horizon_evicts_and_readmits(spark, tmp_path):
+def test_event_time_horizon_evicts_and_readmits(spark, tmp_path, drain):
     """evict_after_us: a segment unseen for longer than the horizon is
     dropped from the seen set and its next occurrence re-admits; a
     segment kept fresh by recurring dups stays fenced (recency
@@ -175,15 +158,7 @@ def test_event_time_horizon_evicts_and_readmits(spark, tmp_path):
     out = stream_segment_dedup(
         stream, seg_words=2, evict_after_us=3 * hours
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("segdedup_evict")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("segdedup_evict").toPandas()
+    got = drain(out).toPandas()
     kept = sorted(
         map(tuple, got[["doc_id", "segment"]].itertuples(index=False))
     )

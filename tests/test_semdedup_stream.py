@@ -47,7 +47,7 @@ def _write_one_per_batch(spark, tmp_path, rows):
     return src, schema
 
 
-def test_stream_flags_resend_across_batches(spark, tmp_path):
+def test_stream_flags_resend_across_batches(spark, tmp_path, drain):
     from meteaudata_spark.streaming.semdedup_stream import (
         stream_semantic_dup_candidates,
     )
@@ -68,15 +68,7 @@ def test_stream_flags_resend_across_batches(spark, tmp_path):
     out = stream_semantic_dup_candidates(
         stream, _centroids(), threshold=0.9999
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("semdup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("semdup_stream").toPandas()
+    got = drain(out).toPandas()
     # only the exact re-send crosses the 0.9999 bar
     assert list(got["vec_id"]) == [3], got
     assert list(got["rep_id"]) == [1], got
@@ -84,7 +76,7 @@ def test_stream_flags_resend_across_batches(spark, tmp_path):
     assert (got["cosine"] == 1.0).all(), got
 
 
-def test_stream_routing_matches_batch_assignment(spark, tmp_path):
+def test_stream_routing_matches_batch_assignment(spark, tmp_path, drain):
     """Each vector must land in the same cluster as the batch
     fast-assign path puts it."""
     from meteaudata_spark.ext.simsearch import _l2_assign_fast, _q64
@@ -144,15 +136,7 @@ def test_stream_routing_matches_batch_assignment(spark, tmp_path):
         .parquet(str(tmp_path / "src"))
     )
     out = stream_semantic_dup_candidates(stream, cents, threshold=0.9999)
-    qq = (
-        out.writeStream.format("memory")
-        .queryName("semdup_route")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    qq.awaitTermination(120)
-    got = spark.table("semdup_route").toPandas()
+    got = drain(out).toPandas()
     # every re-send flags against its original, in the batch-assigned cluster
     assert len(got) == 40, got
     for _, r in got.iterrows():
@@ -161,7 +145,7 @@ def test_stream_routing_matches_batch_assignment(spark, tmp_path):
         assert r["centroid_id"] == want[orig]
 
 
-def test_ring_buffer_bounds_state(spark, tmp_path):
+def test_ring_buffer_bounds_state(spark, tmp_path, drain):
     """max_reps=2: the first representative is evicted after two more
     uniques, so a re-send of it is NOT flagged (bounded horizon by
     design)."""
@@ -189,15 +173,7 @@ def test_ring_buffer_bounds_state(spark, tmp_path):
     out = stream_semantic_dup_candidates(
         stream, _centroids(), threshold=0.9999, max_reps=2
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("semdup_ring")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("semdup_ring").toPandas().sort_values("vec_id")
+    got = drain(out).toPandas().sort_values("vec_id")
     assert list(got["vec_id"]) == [5, 6], got
     assert list(got["rep_id"]) == [4, 4], got
 
@@ -323,7 +299,7 @@ def test_chunked_update_matches_sequential_reference():
         assert got_ids == ref_ids, f"trial {trial}: state diverges"
 
 
-def test_intra_cluster_shards_still_catch_resends(spark, tmp_path):
+def test_intra_cluster_shards_still_catch_resends(spark, tmp_path, drain):
     """R>1: content-addressed slices — exact re-sends route to the
     same slice as their original and are still flagged; knob
     validation."""
@@ -343,15 +319,7 @@ def test_intra_cluster_shards_still_catch_resends(spark, tmp_path):
     out = stream_semantic_dup_candidates(
         stream, _centroids(), threshold=0.9999, intra_cluster_shards=4
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("semdup_shards")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = spark.table("semdup_shards").toPandas().sort_values("vec_id")
+    got = drain(out).toPandas().sort_values("vec_id")
     # every re-send flagged against its exact original, and the
     # emitted centroid_id is the ORIGINAL cluster id (slice stripped)
     assert list(got["vec_id"]) == [101, 102, 103, 104, 105, 106], got

@@ -10,23 +10,14 @@ from meteaudata_spark.ext.timeseries_queries import sessionize_events
 from meteaudata_spark.streaming.sessionize_stream import stream_sessionize
 
 
-def _drain(spark, src, gap="30 minutes"):
+def _drain(spark, drain, src, gap="30 minutes"):
     stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(
         src
     )
-    q = (
-        stream_sessionize(stream, gap=gap, watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("sessstream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table("sessstream")
+    return drain(stream_sessionize(stream, gap=gap, watermark="0 seconds"))
 
 
-def test_stream_sessionize_matches_batch(spark, tmp_path):
+def test_stream_sessionize_matches_batch(spark, tmp_path, drain):
     # 20 users; event k of a user lands at t0 + 13k + 35·(k div 2)
     # minutes, so intra-user gaps alternate 13 min / 48 min — pairs of
     # events form sessions and every other gap crosses the 30-min rule
@@ -41,7 +32,7 @@ def test_stream_sessionize_matches_batch(spark, tmp_path):
     )
     ev.write.parquet(src)
 
-    got = _drain(spark, src)
+    got = _drain(spark, drain, src)
     # append mode: with availableNow the final watermark passes every
     # event, but sessions whose close the watermark never crossed stay
     # open — here watermark=0s and the last event closes all but each
@@ -99,7 +90,7 @@ def test_stream_sessionize_matches_batch(spark, tmp_path):
         assert n_batch - 1 <= n_emit <= n_batch, (u, n_emit, n_batch)
 
 
-def test_session_gap_boundary_merges(spark, tmp_path):
+def test_session_gap_boundary_merges(spark, tmp_path, drain):
     # two events exactly 1800s apart: batch keeps them in ONE session
     # (rule is strictly greater), session_window must merge them too
     src = str(tmp_path / "edge")
@@ -113,7 +104,7 @@ def test_session_gap_boundary_merges(spark, tmp_path):
     ).select("user_id", F.col("ts").cast("timestamp").alias("ts"), "value")
     ev.write.parquet(src)
 
-    got = _drain(spark, src).collect()
+    got = _drain(spark, drain, src).collect()
     starts = sorted(r["session_start"] for r in got)
     counts = {r["session_start"]: r["n_events"] for r in got}
     # first session (2 events) must have closed and emitted

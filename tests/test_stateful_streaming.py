@@ -7,7 +7,7 @@ import pytest
 from meteaudata_spark.streaming.stateful import stream_running_stats
 
 
-def test_running_stats_accumulate_across_batches(spark, tmp_path):
+def test_running_stats_accumulate_across_batches(spark, tmp_path, drain):
     rng = np.random.default_rng(13)
     src = str(tmp_path / "src")
     # two files -> (with maxFilesPerTrigger=1) two micro-batches
@@ -27,15 +27,7 @@ def test_running_stats_accumulate_across_batches(spark, tmp_path):
         .parquet(src)
     )
     out = stream_running_stats(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("running")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("running").toPandas()
+    got = drain(out, "update").toPandas()
 
     # final cumulative row per key must equal the full-dataset stats
     all_pdf = pd.concat([pdf1, pdf2])
@@ -50,7 +42,7 @@ def test_running_stats_accumulate_across_batches(spark, tmp_path):
     assert x_counts == [50, 70]
 
 
-def test_stream_hll_matches_batch(spark, tmp_path):
+def test_stream_hll_matches_batch(spark, tmp_path, drain):
     """Drained-stream HLL estimate must EQUAL the batch operator's on
     the same rows (same integer registers, same final division)."""
     from pyspark.sql import functions as F
@@ -74,16 +66,7 @@ def test_stream_hll_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream_hll_distinct(stream)
-        .writeStream.format("memory")
-        .queryName("hll_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("hll_stream").toPandas()
+    got = drain(stream_hll_distinct(stream), "update").toPandas()
 
     batch = {
         r["grp"]: r["hll_distinct"]
@@ -96,7 +79,7 @@ def test_stream_hll_matches_batch(spark, tmp_path):
         assert final_est == batch[key], (key, final_est, batch[key])
 
 
-def test_stream_ewma_state_matches_batch_kernel(spark, tmp_path):
+def test_stream_ewma_state_matches_batch_kernel(spark, tmp_path, drain):
     """The executable stateful EWMA must reproduce kernels.ewma
     trajectories exactly, with state carrying across micro-batches."""
     import os
@@ -138,17 +121,8 @@ def test_stream_ewma_state_matches_batch_kernel(spark, tmp_path):
         .option("latestFirst", "false")
         .parquet(src)
     )
-    q = (
-        stream_ewma_state(stream, alpha=0.25)
-        .writeStream.format("memory")
-        .queryName("ewma_state")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = (
-        spark.table("ewma_state")
+        drain(stream_ewma_state(stream, alpha=0.25))
         .orderBy("key", "ts")
         .toPandas()
     )
@@ -168,7 +142,7 @@ def test_stream_ewma_state_matches_batch_kernel(spark, tmp_path):
     assert np.allclose(got["ewma"].to_numpy(), batch["value"].to_numpy())
 
 
-def test_stream_holt_state_matches_batch_kernel(spark, tmp_path):
+def test_stream_holt_state_matches_batch_kernel(spark, tmp_path, drain):
     """Online Holt must equal the batch kernel's (level, trend)
     trajectory with state carried across micro-batches."""
     import os
@@ -205,16 +179,11 @@ def test_stream_holt_state_matches_batch_kernel(spark, tmp_path):
         .option("latestFirst", "false")
         .parquet(src)
     )
-    q = (
-        stream_holt_state(stream, alpha=0.5, beta=0.25)
-        .writeStream.format("memory")
-        .queryName("holt_state")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    got = (
+        drain(stream_holt_state(stream, alpha=0.5, beta=0.25))
+        .orderBy("ts")
+        .toPandas()
     )
-    q.awaitTermination(120)
-    got = spark.table("holt_state").orderBy("ts").toPandas()
 
     batch = (
         kernels.holt(

@@ -3,12 +3,13 @@
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from meteaudata_spark.operators import kernels
-from meteaudata_spark.streaming.resample_stream import (
-    stream_resample_mean,
-    stream_sessionize,
-)
+from meteaudata_spark.streaming.resample_stream import stream_resample_mean
+from meteaudata_spark.streaming.sessionize_stream import stream_sessionize
+
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture()
@@ -27,7 +28,7 @@ def event_stream_dir(spark, tmp_path):
     return path, pdf
 
 
-def test_stream_resample_matches_batch(spark, event_stream_dir):
+def test_stream_resample_matches_batch(spark, event_stream_dir, drain):
     path, pdf = event_stream_dir
     batch_df = spark.read.parquet(path)
     schema = batch_df.schema
@@ -36,16 +37,8 @@ def test_stream_resample_matches_batch(spark, event_stream_dir):
     out = stream_resample_mean(
         stream, "5min", partition_cols=["event_type"]
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("resampled")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = (
-        spark.table("resampled")
+        drain(out, "complete")
         .orderBy("event_type", "timestamp")
         .toPandas()
     )
@@ -71,28 +64,26 @@ def test_stream_resample_matches_batch(spark, event_stream_dir):
     assert np.allclose(got["value"].values, ref["value"].values)
 
 
-def test_stream_sessionize_runs(spark, event_stream_dir):
+def test_stream_sessionize_runs(spark, event_stream_dir, drain):
     path, _ = event_stream_dir
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     out = stream_sessionize(
         stream.withColumnRenamed("event_type", "user_id"),
         gap="10 minutes",
+        user_col="user_id",
+        ts_col="timestamp",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("sessions").toPandas()
+    got = drain(out, "complete").toPandas()
     assert len(got) >= 2
-    assert set(got.columns) == {"user_id", "session_start", "session_end", "n_events"}
+    assert set(got.columns) == {
+        "user_id", "session_start", "session_end", "n_events", "sum_value"
+    }
 
 
-def test_stream_sliding_mean_matches_batch_windows(spark, event_stream_dir):
+def test_stream_sliding_mean_matches_batch_windows(
+    spark, event_stream_dir, drain
+):
     from meteaudata_spark.streaming.resample_stream import stream_sliding_mean
 
     path, pdf = event_stream_dir
@@ -101,15 +92,7 @@ def test_stream_sliding_mean_matches_batch_windows(spark, event_stream_dir):
     out = stream_sliding_mean(
         stream, "10min", "5min", partition_cols=["event_type"]
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sliding")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("sliding").toPandas()
+    got = drain(out, "complete").toPandas()
     # every event lands in window/slide = 2 overlapping windows, so the
     # per-group row count must exceed the tumbling-window count
     assert (got["window_end"] - got["window_start"]).eq(pd.Timedelta("10min")).all()
@@ -125,7 +108,7 @@ def test_stream_sliding_mean_matches_batch_windows(spark, event_stream_dir):
     assert np.isclose(pdf.loc[mask, "value"].mean(), g["value"])
 
 
-def test_stream_dedup_drops_retransmissions(spark, tmp_path):
+def test_stream_dedup_drops_retransmissions(spark, tmp_path, drain):
     from meteaudata_spark.streaming.resample_stream import stream_dedup
 
     idx = pd.date_range("2024-01-01", freq="1min", periods=20)
@@ -141,20 +124,12 @@ def test_stream_dedup_drops_retransmissions(spark, tmp_path):
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     out = stream_dedup(stream, ["event_id"], watermark="30 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("deduped")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("deduped").toPandas()
+    got = drain(out).toPandas()
     assert len(got) == 10
     assert sorted(got["event_id"]) == list(range(10))
 
 
-def test_stream_interval_join_click_to_impression(spark, tmp_path):
+def test_stream_interval_join_click_to_impression(spark, tmp_path, drain):
     from meteaudata_spark.streaming.resample_stream import stream_interval_join
 
     imp = pd.DataFrame(
@@ -183,21 +158,13 @@ def test_stream_interval_join_click_to_impression(spark, tmp_path):
     out = stream_interval_join(
         s_clk, s_imp, on="user_id", upper="10 minutes"
     ).selectExpr("__l.user_id AS user_id", "target", "ad")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("joined")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.table("joined").toPandas().sort_values("user_id")
+    got = drain(out).toPandas().sort_values("user_id")
     # click@10:05 matches impression@10:00 (within 10min); click@10:45
     # matches nothing (both impressions too old)
     assert got["ad"].tolist() == ["x"]
 
 
-def test_chunk_text_works_unchanged_on_streams(spark, tmp_path):
+def test_chunk_text_works_unchanged_on_streams(spark, tmp_path, drain):
     """RAG chunking is a pure narrow projection (split → sequence →
     explode → slice), so the SAME operator runs on a streaming frame
     with no streaming-specific code — pin that property and the
@@ -217,18 +184,48 @@ def test_chunk_text_works_unchanged_on_streams(spark, tmp_path):
     stream = spark.readStream.schema(batch_df.schema).parquet(path)
     out = chunk_text(stream, window=16, stride=11)
     assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("chunks_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = sorted(
-        tuple(r) for r in spark.table("chunks_stream").collect()
+        tuple(r) for r in drain(out).collect()
     )
     want = sorted(
         tuple(r) for r in chunk_text(batch_df, window=16, stride=11).collect()
     )
     assert got == want and len(got) > 40
+
+
+def test_stream_dedup_matches_batch_windowed_distinct(spark, tmp_path):
+    """Batch<->stream differential: dropDuplicatesWithinWatermark with
+    a watermark spanning the feed keeps exactly one event per
+    (user, type, value) key — the batch row's n_distinct total."""
+    from meteaudata_spark.streaming.resample_stream import stream_dedup
+
+    ev = (
+        spark.read.parquet(f"{SF}/events.parquet")
+        .filter(F.col("event_id") < 2000)
+        .select("ts", "user_id", "event_type", "value")
+    )
+    src = str(tmp_path / "feed")
+    ev.write.parquet(src)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .parquet(src)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+    out = stream_dedup(
+        stream,
+        ["user_id", "event_type", "value"],
+        watermark="365 days",
+        ts_col="ts",
+    )
+    sink = str(tmp_path / "sink")
+    q = (
+        out.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    got = spark.read.parquet(sink).count()
+    want = ev.select("user_id", "event_type", "value").distinct().count()
+    assert got == want

@@ -29,7 +29,7 @@ def test_stream_ingest_then_load(spark, provenance, tmp_path):
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     q = stream_to_series_store(stream, sig_dir, "LIVE#1_RAW#1")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     loaded = store.load_signal(spark, sig_dir)
     got = loaded.time_series["LIVE#1_RAW#1"].to_pandas()
@@ -39,7 +39,7 @@ def test_stream_ingest_then_load(spark, provenance, tmp_path):
     # restart with the same checkpoint: no duplicates (exactly-once)
     stream2 = spark.readStream.schema(schema).parquet(src)
     q2 = stream_to_series_store(stream2, sig_dir, "LIVE#1_RAW#1")
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     again = store.load_signal(spark, sig_dir)
     assert again.time_series["LIVE#1_RAW#1"].count() == 30
 

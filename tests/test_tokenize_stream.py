@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 
 
-def test_stream_token_counts_matches_batch_encode(spark, tmp_path):
+def test_stream_token_counts_matches_batch_encode(spark, tmp_path, drain):
     from meteaudata_spark.ext.textstats import (
         _docs,
         doc_unigram_lm_encode,
@@ -39,16 +39,8 @@ def test_stream_token_counts_matches_batch_encode(spark, tmp_path):
         .parquet(src)
     )
     out = stream_token_counts(stream, vocab)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tok_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
     got = (
-        spark.table("tok_stream")
+        drain(out)
         .groupBy("lang")
         .agg(
             F.sum("n_words").alias("n_words"),
@@ -91,7 +83,7 @@ def test_viterbi_len_oov_char_returns_sentinel_not_typeerror():
     assert _viterbi_len("xab", lp, 2) == -1  # unreachable prefix
 
 
-def test_stream_oov_words_metered_not_crashing(spark, tmp_path):
+def test_stream_oov_words_metered_not_crashing(spark, tmp_path, drain):
     # End-to-end: stream documents containing out-of-vocabulary
     # characters through the frozen vocabulary — the query must
     # complete, exclude those words from the token counts (the batch
@@ -110,17 +102,8 @@ def test_stream_oov_words_metered_not_crashing(spark, tmp_path):
         spark.readStream.schema(spark.read.parquet(src).schema)
         .parquet(src)
     )
-    q = (
-        stream_token_counts(stream, vocab)
-        .writeStream.format("memory")
-        .queryName("tok_oov")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = (
-        spark.table("tok_oov")
+        drain(stream_token_counts(stream, vocab))
         .groupBy("lang")
         .agg(
             F.sum("n_words").alias("n_words"),

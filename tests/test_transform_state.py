@@ -49,7 +49,7 @@ def test_stream_ewma_plan_builds(spark, tmp_path):
     ),
     run=False,
 )
-def test_stream_ewma_matches_pandas(spark, tmp_path):
+def test_stream_ewma_matches_pandas(spark, tmp_path, drain):
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -61,17 +61,8 @@ def test_stream_ewma_matches_pandas(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    q = (
-        stream_ewma(stream, alpha=0.3)
-        .writeStream.format("memory")
-        .queryName("ewma")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
     got = (
-        spark.table("ewma")
+        drain(stream_ewma(stream, alpha=0.3))
         .toPandas()
         .sort_values(["key", "timestamp"])
         .reset_index(drop=True)

@@ -7,9 +7,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 
-def _final_ledger(spark, name):
+def _final_ledger(t):
     """Latest row per norm_url from an update-mode memory sink."""
-    t = spark.table(name)
     # memory sink in update mode appends every update; the final state
     # per key is the row with the max n_docs (counts only grow)
     return (
@@ -25,7 +24,7 @@ def _final_ledger(spark, name):
     )
 
 
-def test_any_split_matches_batch_operator(spark, tmp_path):
+def test_any_split_matches_batch_operator(spark, tmp_path, drain):
     """Two arbitrary parquet chunks → two micro-batches: the final
     ledger equals doc_url_dedup's batch table row for row."""
     from meteaudata_spark.ext.dedup import doc_url_dedup
@@ -56,15 +55,7 @@ def test_any_split_matches_batch_operator(spark, tmp_path):
     )
     out = stream_url_dedup(stream)
     assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("urldedup_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = _final_ledger(spark, "urldedup_stream")
+    got = _final_ledger(drain(out, "update"))
     pd.testing.assert_frame_equal(
         got, batch[got.columns.tolist()].sort_values("norm_url").reset_index(drop=True)
     )

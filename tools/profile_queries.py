@@ -33,22 +33,13 @@ def main() -> None:
     only = set(argv[1:])
 
     import __spark_entry__ as entrymod
+    from meteaudata_spark.ext.warm import warm_pair_relations, warm_session
     from meteaudata_spark.session import get_spark
 
     spark = get_spark("meteaudata-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    try:
-        warm = spark.read.parquet(f"{sf_dir}/region.parquet")
-        warm.write.mode("overwrite").format("noop").save()
-        warm.mapInPandas(lambda it: it, warm.schema).write.mode(
-            "overwrite"
-        ).format("noop").save()
-    except Exception:  # noqa: BLE001
-        pass
+    warm_session(spark, sf_dir)
     if os.environ.get("SPARK_GRAFT_BENCH_WARM", "1") != "0":
-        from meteaudata_spark.ext.warm import warm_pair_relations
-
         warm_pair_relations(spark, sf_dir)
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))

@@ -35,6 +35,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from meteaudata_spark.ext import dedup, simsearch
+    from meteaudata_spark.ext.warm import warm_session
     from meteaudata_spark.plans.opcache import release_operator_caches
     from meteaudata_spark.session import get_spark
 
@@ -86,13 +87,7 @@ def main() -> None:
 
     spark = get_spark("scale-exponents")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for d in (args.small, args.big):
-        warm = spark.read.parquet(f"{d}/region.parquet")
-        warm.write.mode("overwrite").format("noop").save()
-    warm.mapInPandas(lambda it: it, warm.schema).write.mode(
-        "overwrite"
-    ).format("noop").save()
+    warm_session(spark, args.small, args.big)
 
     def run(name: str, sf_dir: str) -> float:
         best = -1.0
