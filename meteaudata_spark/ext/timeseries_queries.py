@@ -1546,7 +1546,7 @@ def ts_ewma(spark: SparkSession, sf_dir: str, alpha: float = 0.25) -> DataFrame:
     """EWMA smoothing as an oracle-gated query: per-type exponential
     moving average over the 5-minute bucket-mean series — the
     reference's SMOOTHING operator (pandas ``ewm(adjust=False)``)
-    driven through the distributed kernel.
+    driven through the per-key ``kernels.ewma`` fold.
 
     Determinism: bucket means are 6-decimal rounded BEFORE the
     recurrence, and both engines then evaluate the identical float
@@ -2867,16 +2867,14 @@ def ts_forecast_eval_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: parallel across keys, sequential within one (the
     documented applyInPandas recurrence exception).
 
-    r15 (guide §4.1 fuse the Python boundary / §2.4): both
-    recurrences used to run as SEPARATE applyInPandas passes over the
-    same bucket relation — the hourly means were aggregated twice and
-    the two smoothed relations re-joined on (event_type, b1h).  One
-    fused kernel now walks each key's series once computing BOTH
-    states with the exact same float expressions as the standalone
-    ``kernels.holt`` / ``kernels.holt_winters`` loops (bit-identical
-    trajectories), so the second agg, the second Python pass and the
-    sort-merge join are gone; the LEAD/row_number window reuses the
-    applyInPandas exchange."""
+    They run in ONE fused pass per key: one
+    ``applyInPandas`` over the bucket relation puts each key's buckets
+    in ``kernels.fold_order`` and calls ``kernels.holt_fold`` and
+    ``kernels.holt_winters_fold`` on the same array — the folds the
+    standalone ``kernels.holt`` / ``kernels.holt_winters`` kernels
+    call, so the trajectories are theirs bit for bit — with no second
+    bucket aggregation and no join; the LEAD/row_number window reuses
+    the applyInPandas exchange."""
     ev = _events(spark, sf_dir)
     b = ev.groupBy(
         "event_type",
@@ -2885,52 +2883,22 @@ def ts_forecast_eval_hw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("b1h"),
     ).agg(_r6(F.avg("value")).alias("value"))
 
-    m, alpha_h, beta_h = 24, 0.5, 0.25
-    alpha_w, beta_w, gamma_w = 0.25, 0.125, 0.25
-
     def _fused(pdf):
-        pdf = pdf.sort_values("b1h").reset_index(drop=True)
-        xs = pdf["value"].to_numpy(dtype=float)
-        n = len(xs)
-        h_l = [0.0] * n
-        h_b = [0.0] * n
-        fcst = [0.0] * n
-        state = [0.0] * m
-        if n:
-            # Holt (verbatim kernels.holt with α=0.5, β=0.25)
-            h_l[0], h_b[0] = float(xs[0]), 0.0
-            for i in range(1, n):
-                prev_l, prev_b = h_l[i - 1], h_b[i - 1]
-                l_new = alpha_h * float(xs[i]) + (1 - alpha_h) * (
-                    prev_l + prev_b
-                )
-                h_b[i] = beta_h * (l_new - prev_l) + (1 - beta_h) * prev_b
-                h_l[i] = l_new
-            # Holt-Winters (verbatim kernels.holt_winters, m=24)
-            w_l, w_b = float(xs[0]), 0.0
-            fcst[0] = w_l + w_b + state[1 % m]
-            for i in range(1, n):
-                prev_l, prev_b = w_l, w_b
-                s_old = state[i % m]
-                l_new = alpha_w * (float(xs[i]) - s_old) + (1 - alpha_w) * (
-                    prev_l + prev_b
-                )
-                b_new = beta_w * (l_new - prev_l) + (1 - beta_w) * prev_b
-                s_new = gamma_w * (float(xs[i]) - prev_l - prev_b) + (
-                    1 - gamma_w
-                ) * s_old
-                state[i % m] = s_new
-                w_l, w_b = l_new, b_new
-                fcst[i] = l_new + b_new + state[(i + 1) % m]
-        pdf["__holt_level"] = h_l
-        pdf["__holt_trend"] = h_b
-        pdf["__hw_forecast_next"] = fcst
+        pdf = kernels.fold_order(pdf, "b1h", "value")
+        (pdf["__holt_level"], pdf["__holt_trend"]), _ = kernels.holt_fold(
+            pdf["value"], alpha=0.5, beta=0.25
+        )
+        (*_, pdf["__hw_forecast_next"]), _ = kernels.holt_winters_fold(
+            pdf["value"], m=24, alpha=0.25, beta=0.125, gamma=0.25
+        )
         return pdf
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in b.schema.fields
-    ) + ", __holt_level double, __holt_trend double, __hw_forecast_next double"
-    fused = b.groupBy("event_type").applyInPandas(_fused, out_schema)
+    fused = kernels.per_key(
+        b,
+        ["event_type"],
+        _fused,
+        "__holt_level double, __holt_trend double, __hw_forecast_next double",
+    )
     w = Window.partitionBy("event_type").orderBy("b1h")
     j = (
         fused.select(

@@ -17,17 +17,24 @@ partition columns are what makes the plan scale: a 100 TB events
 table with 1M distinct series keys spreads across all executors, and
 no kernel below ever collects to the driver.
 
-Everything here is built-in `pyspark.sql.functions` only — no Python
-UDFs in any hot path, so the whole plan stays inside whole-stage
-codegen.
+The window, resample, gap and outlier kernels are built-in
+`pyspark.sql.functions` only, so their plans stay inside whole-stage
+codegen.  The sequential smoothing recurrences cannot be: ``ewma``,
+``ewma_distributed``, ``holt`` and ``holt_winters`` run one Python fold
+per key group through an Arrow-batched ``applyInPandas``
+(:func:`per_key`) — parallel across keys, sequential within one.
 """
 
 from __future__ import annotations
 
+from collections import deque
 from typing import Optional, Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from meteaudata_spark.functions.epoch import epoch_seconds, seconds_to_ts
 from meteaudata_spark.functions.freq import to_seconds, to_spark_interval
@@ -577,6 +584,108 @@ def aligned_agg(
     )
 
 
+# ----------------------------------------------------------------------
+# sequential smoothing recurrences (EWMA, Holt, Holt-Winters): one fold
+# each, taking the carried state and returning outputs + new state.
+# The batch kernels, the gate rows and the stateful streams all call
+# them on a key's rows in ``fold_order``, so a stream equals its batch
+# twin and a re-run equals the first run.
+# ----------------------------------------------------------------------
+def fold_order(pdf: pd.DataFrame, ts_col: str, val_col: str) -> pd.DataFrame:
+    """A key's rows by ``(ts_col, val_col)``, stable, NaN/null last
+    within a timestamp — ``timeseries.collect_sorted``'s order, so rows
+    that share a timestamp fold the same way whatever order the
+    executors sent them in."""
+    return pdf.sort_values([ts_col, val_col], kind="stable").reset_index(
+        drop=True
+    )
+
+
+def per_key(
+    df: DataFrame,
+    partition_cols: Sequence[str],
+    fn,
+    extra: str = "",
+) -> DataFrame:
+    """``fn`` (pandas → pandas) over each key group's rows through one
+    ``applyInPandas``; the output schema is ``df``'s columns plus the
+    ``extra`` DDL fields.  Without ``partition_cols`` the whole frame is
+    one group, keyed by a real constant column (an integer literal in
+    groupBy parses as an ordinal) that ``fn`` never sees."""
+    schema = df.schema
+    if extra:
+        schema = StructType(schema.fields + StructType.fromDDL(extra).fields)
+    if partition_cols:
+        return df.groupBy(*partition_cols).applyInPandas(fn, schema)
+    return (
+        df.withColumn("__g", F.lit(1))
+        .groupBy("__g")
+        .applyInPandas(lambda pdf: fn(pdf.drop(columns="__g")), schema)
+    )
+
+
+def ewma_fold(xs, alpha: float, seed: float = np.nan):
+    """pandas ``ewm(alpha, adjust=False, ignore_na=True).mean()`` of
+    ``xs`` continued from ``seed``, the mean after the rows before
+    ``xs`` (NaN: none yet).  Returns ``(means, seed to carry)``.  The
+    seed goes in as a prepended observation that is dropped from the
+    output: with ``adjust=False`` the mean is the recurrence's whole
+    state, so this reproduces the uninterrupted run bit for bit."""
+    xs = np.asarray(xs, dtype=float)
+    seeded = not np.isnan(seed)
+    if seeded:
+        xs = np.concatenate(([seed], xs))
+    means = pd.Series(xs).ewm(alpha=alpha, adjust=False, ignore_na=True).mean()
+    means = means.to_numpy()
+    if seeded:
+        means = means[1:]
+    return means, (means[-1] if len(means) else seed)
+
+
+def holt_fold(xs, alpha: float, beta: float, level=0.0, trend=0.0, seeded=False):
+    """Holt's level/trend recurrence over ``xs`` from the carried
+    ``(level, trend, seeded)``; the first row of an unseeded fold sets
+    l = x, b = 0.  Returns ``((levels, trends), (level, trend,
+    seeded))``.  A NaN observation makes the state NaN from there on."""
+    levels, trends = np.empty(len(xs)), np.empty(len(xs))
+    for i, x in enumerate(np.asarray(xs, dtype=float).tolist()):
+        if seeded:
+            prev_l = level
+            level = alpha * x + (1 - alpha) * (level + trend)
+            trend = beta * (level - prev_l) + (1 - beta) * trend
+        else:
+            level, trend, seeded = x, 0.0, True
+        levels[i], trends[i] = level, trend
+    return (levels, trends), (level, trend, seeded)
+
+
+def holt_winters_fold(
+    xs, m: int, alpha: float, beta: float, gamma: float,
+    level=0.0, trend=0.0, seeded=False, season=None,
+):
+    """Additive Holt-Winters over ``xs`` from the carried ``(level,
+    trend, seeded, season)``.  ``season`` holds the ``m`` seasonal
+    slots, the next row's slot first (``None``: the zero cold start).
+    Returns ``((levels, trends, seasonals, forecasts), (level, trend,
+    seeded, season))``; the forecast is l + b + the next row's slot
+    after the update."""
+    season = deque([0.0] * m if season is None else season)
+    levels, trends, seas, fcst = (np.empty(len(xs)) for _ in range(4))
+    for i, x in enumerate(np.asarray(xs, dtype=float).tolist()):
+        s_old = season.popleft()
+        if seeded:
+            s_new = gamma * (x - level - trend) + (1 - gamma) * s_old
+            prev_l = level
+            level = alpha * (x - s_old) + (1 - alpha) * (level + trend)
+            trend = beta * (level - prev_l) + (1 - beta) * trend
+        else:
+            level, trend, seeded, s_new = x, 0.0, True, s_old
+        season.append(s_new)
+        levels[i], trends[i], seas[i] = level, trend, s_new
+        fcst[i] = level + trend + season[0]
+    return (levels, trends, seas, fcst), (level, trend, seeded, list(season))
+
+
 def ewma(
     df: DataFrame,
     alpha: float = 0.3,
@@ -585,47 +694,27 @@ def ewma(
     partition_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Exponentially weighted moving average per key group, matching
-    pandas ``ewm(alpha, adjust=False, ignore_na=True).mean()``.
+    pandas ``ewm(alpha, adjust=False, ignore_na=True).mean()`` over
+    each key's rows in :func:`fold_order`.
 
     EWMA is a sequential recurrence (e_t = α·x_t + (1−α)·e_{t−1}),
     which no window frame expresses without numerically exploding
-    (the closed form needs (1−α)^(−t) factors).  So this is the
-    documented exception to built-ins-only: an Arrow-batched
-    ``applyInPandas`` per key group — parallel across keys, sequential
-    within one (inherent to the operator).  For one series too big
-    for a task, ``ewma_distributed`` below implements the chunk +
-    boundary-carry decomposition (the seed enters the recurrence
-    linearly as (1−α)^j · seed, so chunks compute independently with
-    zero seed and one tiny fold over chunk-end states corrects them).
-    The streaming analog (``streaming/transform_state.py:stream_ewma``)
-    keeps the same semantics with one value of state per key."""
-    import pandas as pd  # noqa: F401 - used by the worker closure
-
-    pcols = list(partition_cols)
+    (the closed form needs (1−α)^(−t) factors).  So it runs as
+    :func:`ewma_fold` inside :func:`per_key`'s ``applyInPandas`` —
+    parallel across keys, sequential within one (inherent to the
+    operator).  For one series too big for a task,
+    :func:`ewma_distributed` implements the chunk + boundary-carry
+    decomposition.  The runnable streaming twin is
+    ``streaming/stateful.py:stream_ewma_state``: the same fold with
+    its mean carried across micro-batches, equal to this kernel over
+    the same rows."""
 
     def kernel(pdf):
-        pdf = pdf.sort_values(ts_col)
-        pdf[val_col] = (
-            pdf[val_col]
-            .ewm(alpha=alpha, adjust=False, ignore_na=True)
-            .mean()
-        )
+        pdf = fold_order(pdf, ts_col, val_col)
+        pdf[val_col] = ewma_fold(pdf[val_col], alpha)[0]
         return pdf
 
-    schema = df.schema
-    if pcols:
-        return df.groupBy(*pcols).applyInPandas(
-            lambda pdf: kernel(pdf), schema
-        )
-    # single-group fallback: a real constant column (an integer
-    # literal in groupBy parses as an ordinal), dropped by the kernel
-    return (
-        df.withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(
-            lambda pdf: kernel(pdf.drop(columns="__g")), schema
-        )
-    )
+    return per_key(df, partition_cols, kernel)
 
 
 def detect_outliers_iqr(
@@ -669,11 +758,6 @@ def detect_outliers_iqr(
     return joined.select(*pcols, ts_col, flag.alias(val_col))
 
 
-def _obs(val_col: str):
-    """True only for real observations: non-null AND non-NaN."""
-    return F.col(val_col).isNotNull() & ~F.isnan(F.col(val_col))
-
-
 def ewma_distributed(
     df: DataFrame,
     alpha: float = 0.3,
@@ -696,9 +780,10 @@ def ewma_distributed(
     as the first observation itself.
 
     Stages, all executor-side:
-      A. per-chunk zero-seed EWMA + non-null prefix counts — pandas
-         per chunk, chunks run in parallel (chunk length is the task
-         bound, as in ``interpolate_linear_distributed``);
+      A. per-chunk zero-seed EWMA (:func:`ewma_fold` from seed 0.0
+         over the chunk's rows in :func:`fold_order`) + non-null
+         prefix counts — chunks run in parallel (chunk length is the
+         task bound, as in ``interpolate_linear_distributed``);
       B. chunk-stats table (one row per chunk): closing zero-seed
          mean, non-null count, first value — the seed recurrence
          s_k = e0L_k + (1−α)^{n_k}·s_{k−1} folds over this TINY
@@ -706,52 +791,32 @@ def ewma_distributed(
       C. seeds broadcast back; the final value is a pure column
          expression.  Differential-tested against the plain kernel.
     """
-    import numpy as np
-    import pandas as pd
-
     chunked = df.withColumn(
         "__chunk", F.floor(epoch_seconds(F.col(ts_col)) / F.lit(chunk_seconds))
     )
-    base_cols = [c for c in df.columns]
 
     # A: zero-seed EWMA + prefix counts per chunk
-    local_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in chunked.schema.fields
-    ) + ", __e0 double, __j bigint"
-
     def local_pass(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
+        pdf = fold_order(pdf, ts_col, val_col)
         vals = pdf[val_col].to_numpy(dtype=float)
-        e0 = np.empty(len(vals))
-        j = np.zeros(len(vals), dtype=np.int64)
-        acc, cnt = 0.0, 0
-        for i, x in enumerate(vals):
-            if not np.isnan(x):
-                acc = alpha * x + (1 - alpha) * acc
-                cnt += 1
-            e0[i] = acc
-            j[i] = cnt
-        pdf["__e0"] = e0
-        pdf["__j"] = j
+        pdf["__e0"] = ewma_fold(vals, alpha, seed=0.0)[0]
+        pdf["__j"] = np.cumsum(~np.isnan(vals))
         return pdf
 
-    local = chunked.groupBy("__chunk").applyInPandas(local_pass, local_schema)
+    local = per_key(chunked, ["__chunk"], local_pass, "__e0 double, __j bigint")
 
-    # B: chunk-stats + sequential seed fold over the tiny table
+    # B: chunk-stats + sequential seed fold over the tiny table.  The
+    # zero-seed mean changes only at observations, so every row holding
+    # the chunk's largest j carries its closing mean, and the first
+    # observation is the one observed row with j == 1 (the Arrow return
+    # path surfaces NaN as NULL, and isnan(NULL) is NULL: guard both).
+    v = F.col(val_col)
     stats = local.groupBy("__chunk").agg(
-        F.max_by("__e0", ts_col).alias("__e0_last"),
+        F.max_by("__e0", "__j").alias("__e0_last"),
         F.max("__j").alias("__n"),
-        # the Arrow return path of applyInPandas surfaces NaN as NULL,
-        # and isnan(NULL) is NULL (not true) — guard on both; the
-        # sentinel key keeps missing rows below every real observation
-        # (max_by would otherwise rank a NULL key highest)
-        F.max_by(
-            F.when(_obs(val_col), F.col(val_col)),
-            F.coalesce(
-                F.when(_obs(val_col), F.lit(0) - F.col("__j")),
-                F.lit(-(2 ** 62)),
-            ),
-        ).alias("__first_val"),
+        F.max(F.when(v.isNotNull() & ~F.isnan(v) & (F.col("__j") == 1), v)).alias(
+            "__first_val"
+        ),
     )
 
     def seed_pass(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -759,34 +824,22 @@ def ewma_distributed(
         seeds = np.empty(len(pdf))
         boot = np.zeros(len(pdf), dtype=bool)
         s = np.nan  # no seed until the first observation exists
-        seeded = False
-        for i in range(len(pdf)):
-            fv = pdf["__first_val"].iloc[i]
-            if not seeded and fv is not None and not np.isnan(
-                np.float64(fv if fv is not None else np.nan)
-            ):
+        for i, (fv, n, e0_last) in enumerate(
+            zip(pdf["__first_val"], pdf["__n"], pdf["__e0_last"])
+        ):
+            if np.isnan(s) and not pd.isna(fv):
                 # this chunk holds the global first observation: it
                 # bootstraps its own seed (pandas: first obs IS the mean)
-                s = float(fv)
-                seeded = True
-                boot[i] = True
+                s, boot[i] = float(fv), True
             seeds[i] = s  # seed ENTERING this chunk
-            n = int(pdf["__n"].iloc[i])
-            if seeded and n > 0:
-                s = pdf["__e0_last"].iloc[i] + (1 - alpha) ** n * s
+            if not np.isnan(s) and n > 0:
+                s = e0_last + (1 - alpha) ** int(n) * s
         pdf["__seed"] = seeds
         pdf["__boot"] = boot
         return pdf
 
-    seeds = (
-        stats.withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(
-            lambda pdf: seed_pass(pdf.drop(columns="__g")),
-            "__chunk bigint, __e0_last double, __n bigint, "
-            "__first_val double, __seed double, __boot boolean",
-        )
-        .select("__chunk", "__seed", "__boot")
+    seeds = per_key(stats, (), seed_pass, "__seed double, __boot boolean").select(
+        "__chunk", "__seed", "__boot"
     )
 
     # C: correction.  The formula covers j == 0 naturally (e0 = 0,
@@ -803,7 +856,7 @@ def ewma_distributed(
     )
     return (
         local.join(F.broadcast(seeds), "__chunk")
-        .select(*[c for c in base_cols if c != val_col], out_val.alias(val_col))
+        .select(*[c for c in df.columns if c != val_col], out_val.alias(val_col))
     )
 
 
@@ -821,40 +874,23 @@ def holt(
         l_t = α·x_t + (1−α)·(l_{t−1} + b_{t−1})
         b_t = β·(l_t − l_{t−1}) + (1−β)·b_{t−1}
 
-    with l_1 = x_1, b_1 = 0.  Like :func:`ewma` this is a sequential
+    with l_1 = x_1, b_1 = 0 (:func:`holt_fold` over each key's rows in
+    :func:`fold_order`).  Like :func:`ewma` this is a sequential
     recurrence (the documented applyInPandas exception): parallel
     across keys, sequential within one.  Pick α, β as exact binary
     fractions (0.5, 0.25, …) when a cross-engine oracle replays the
     recurrence — then both engines evaluate identical float ops.
-    Adds ``__level`` and ``__trend`` columns."""
-    pcols = list(partition_cols)
+    Adds ``__level`` and ``__trend`` columns; the streaming twin is
+    ``streaming/stateful.py:stream_holt_state``."""
 
     def kernel(pdf):
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        xs = pdf[val_col].to_numpy(dtype=float)
-        levels = [0.0] * len(xs)
-        trends = [0.0] * len(xs)
-        if len(xs):
-            levels[0], trends[0] = float(xs[0]), 0.0
-            for i in range(1, len(xs)):
-                prev_l, prev_b = levels[i - 1], trends[i - 1]
-                l_new = alpha * float(xs[i]) + (1 - alpha) * (prev_l + prev_b)
-                trends[i] = beta * (l_new - prev_l) + (1 - beta) * prev_b
-                levels[i] = l_new
-        pdf["__level"] = levels
-        pdf["__trend"] = trends
+        pdf = fold_order(pdf, ts_col, val_col)
+        (pdf["__level"], pdf["__trend"]), _ = holt_fold(
+            pdf[val_col], alpha, beta
+        )
         return pdf
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", __level double, __trend double"
-    if pcols:
-        return df.groupBy(*pcols).applyInPandas(lambda p: kernel(p), out_schema)
-    return (
-        df.withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(lambda p: kernel(p.drop(columns="__g")), out_schema)
-    )
+    return per_key(df, partition_cols, kernel, "__level double, __trend double")
 
 
 def holt_winters(
@@ -877,53 +913,28 @@ def holt_winters(
         S[i mod m] ← s_t
 
     with l_1 = x_1, b_1 = 0, S ≡ 0 (the fully deterministic cold
-    start — the first season learns the profile from zero).  Like
-    :func:`holt`, sequential within a key / parallel across keys, and
-    α, β, γ must be exact binary fractions when a cross-engine oracle
-    replays the recurrence.  Adds ``__level``, ``__trend``,
-    ``__seasonal``, and ``__forecast_next`` (= l + b + next seasonal
-    slot AFTER the update)."""
-    pcols = list(partition_cols)
+    start — the first season learns the profile from zero), folded by
+    :func:`holt_winters_fold` over each key's rows in
+    :func:`fold_order`.  Like :func:`holt`, sequential within a key /
+    parallel across keys, and α, β, γ must be exact binary fractions
+    when a cross-engine oracle replays the recurrence.  Adds
+    ``__level``, ``__trend``, ``__seasonal``, and ``__forecast_next``
+    (= l + b + next seasonal slot AFTER the update)."""
 
     def kernel(pdf):
-        pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-        xs = pdf[val_col].to_numpy(dtype=float)
-        n = len(xs)
-        levels = [0.0] * n
-        trends = [0.0] * n
-        seas = [0.0] * n
-        fcst = [0.0] * n
-        state = [0.0] * m
-        if n:
-            levels[0], trends[0] = float(xs[0]), 0.0
-            seas[0] = 0.0
-            fcst[0] = levels[0] + trends[0] + state[1 % m]
-            for i in range(1, n):
-                prev_l, prev_b = levels[i - 1], trends[i - 1]
-                s_old = state[i % m]
-                l_new = alpha * (float(xs[i]) - s_old) + (1 - alpha) * (
-                    prev_l + prev_b
-                )
-                b_new = beta * (l_new - prev_l) + (1 - beta) * prev_b
-                s_new = gamma * (float(xs[i]) - prev_l - prev_b) + (
-                    1 - gamma
-                ) * s_old
-                state[i % m] = s_new
-                levels[i], trends[i], seas[i] = l_new, b_new, s_new
-                fcst[i] = l_new + b_new + state[(i + 1) % m]
-        pdf["__level"] = levels
-        pdf["__trend"] = trends
-        pdf["__seasonal"] = seas
-        pdf["__forecast_next"] = fcst
+        pdf = fold_order(pdf, ts_col, val_col)
+        (
+            pdf["__level"],
+            pdf["__trend"],
+            pdf["__seasonal"],
+            pdf["__forecast_next"],
+        ), _ = holt_winters_fold(pdf[val_col], m, alpha, beta, gamma)
         return pdf
 
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", __level double, __trend double, __seasonal double, __forecast_next double"
-    if pcols:
-        return df.groupBy(*pcols).applyInPandas(lambda p: kernel(p), out_schema)
-    return (
-        df.withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(lambda p: kernel(p.drop(columns="__g")), out_schema)
+    return per_key(
+        df,
+        partition_cols,
+        kernel,
+        "__level double, __trend double, __seasonal double, "
+        "__forecast_next double",
     )

@@ -14,6 +14,9 @@ Every knob here is chosen for the 100 TB design target and merely
   apply it only at the presentation edge (SURVEY §7.3).
 * shuffle.partitions default sized for local[32]; a cluster deployment
   overrides via spark-defaults or relies on AQE coalescing.
+* The package's parent directory on the Python workers' PYTHONPATH:
+  cloudpickle ships module-level functions by reference, so workers
+  must import ``meteaudata_spark`` from any driver working directory.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "meteaudata-spark", master: str | None = None) -> SparkSession:
@@ -40,5 +44,6 @@ def get_spark(app_name: str = "meteaudata-spark", master: str | None = None) -> 
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.warehouse.dir", "/tmp/meteaudata-spark-warehouse")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()

@@ -6,12 +6,19 @@ windowed aggs can't express).
 statistics (count / mean / M2 via Welford) carried across micro-
 batches in GroupState — the streaming analog of a cumulative
 per-series statistics operator, and the template for stateful
-gap-filling or online anomaly scoring."""
+gap-filling or online anomaly scoring.
+
+``stream_ewma_state`` / ``stream_holt_state``: the streaming twins of
+``kernels.ewma`` / ``kernels.holt``.  They hold no recurrence of their
+own: each micro-batch calls the kernel's fold (``kernels.ewma_fold``,
+``kernels.holt_fold``) on the key's rows in ``kernels.fold_order``,
+continued from the state carried in GroupState."""
 
 from __future__ import annotations
 
 from typing import Any, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -22,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from meteaudata_spark.operators import kernels
 
 _OUTPUT_SCHEMA = StructType(
     [
@@ -117,61 +126,30 @@ def stream_ewma_state(
     stateful API (``applyInPandasWithState``) — the runtime
     counterpart of ``transform_state.stream_ewma``, whose
     ``transformWithState`` protocol needs protobuf this environment
-    lacks.  Identical recurrence to ``kernels.ewma``
-    (e = (1−α)·e + α·x, seed = first value), one double of state per
-    key; events sort by ``(ts_col, value)`` inside each micro-batch
-    (the group's chunks are CONCATENATED first — per-chunk sorting
-    would be order-unstable, the pitfall the semantic dedup stream
-    documents; the value tiebreak makes same-timestamp events
-    deterministic where a ts-only sort would keep shuffle-dependent
-    arrival order).  Emits every event with its smoothed value
-    (append)."""
+    lacks.  Each micro-batch runs ``kernels.ewma_fold`` (pandas
+    ``ewm(alpha, adjust=False, ignore_na=True)``) over the key's rows
+    in ``kernels.fold_order``, continued from the mean carried in
+    state, so when micro-batches arrive in event-time order the output
+    equals ``kernels.ewma`` over the same rows exactly: a NaN or null
+    value carries the mean, and the first observation seeds it.  One
+    double of state per key (``seeded`` = 1 once a mean exists).
+    Emits every event with its smoothed value (append)."""
 
     def update(key, pdfs, state):
-        if state.exists:
-            last, seeded = state.get
-        else:
-            last, seeded = 0.0, 0
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "value"], kind="mergesort"
-            )
-            out_ts, out_v, out_e = [], [], []
-            for ts, v in zip(pdf["ts"], pdf["value"]):
-                v = float(v)
-                if not seeded:
-                    last, seeded = v, 1
-                else:
-                    last = (1 - alpha) * last + alpha * v
-                out_ts.append(int(ts))
-                out_v.append(v)
-                out_e.append(last)
-            state.update((last, seeded))
-            yield pd.DataFrame(
-                {
-                    "key": key[0],
-                    "ts": out_ts,
-                    "value": out_v,
-                    "ewma": out_e,
-                }
-            )
-        else:
-            state.update((last, seeded))
+        last, seeded = state.get if state.exists else (0.0, 0)
+        pdf = _rows_in_fold_order(pdfs)
+        means, last = kernels.ewma_fold(
+            pdf["value"], alpha, last if seeded else np.nan
+        )
+        if not np.isnan(last):
+            state.update((last, 1))
+        yield pd.DataFrame(
+            {"key": key[0], "ts": pdf["ts"], "value": pdf["value"], "ewma": means}
+        )
 
-    from pyspark.sql import functions as F
-
-    renamed = stream_df.select(
-        F.col(key_col).alias("key"),
-        F.col(ts_col).cast("long").alias("ts"),
-        F.col(val_col).cast("double").alias("value"),
-    )
-    return renamed.groupBy("key").applyInPandasWithState(
-        update,
-        outputStructType=_EWMA_OUT_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_key_state(
+        stream_df, key_col, ts_col, val_col, update,
+        _EWMA_OUT_SCHEMA, _EWMA_STATE_SCHEMA,
     )
 
 
@@ -206,41 +184,46 @@ def stream_holt_state(
     """Per-key Holt double-exponential smoothing carried across
     micro-batches — the ONLINE FORECASTER: every arriving event emits
     its smoothed level, trend, and one-step forecast (level + trend),
-    with two doubles of state per key.  Identical recurrence to
-    ``kernels.holt`` (l₁ = x₁, b₁ = 0), same chunk-concat order
-    stability as ``stream_ewma_state``."""
+    with two doubles of state per key.  Each micro-batch runs
+    ``kernels.holt_fold`` (l₁ = x₁, b₁ = 0) over the key's rows in
+    ``kernels.fold_order`` from the carried state, so it equals
+    ``kernels.holt`` over the same rows when micro-batches arrive in
+    event-time order."""
 
     def update(key, pdfs, state):
-        if state.exists:
-            level, trend, seeded = state.get
-        else:
-            level, trend, seeded = 0.0, 0.0, 0
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "value"], kind="mergesort"
-            )
-            rows = {k: [] for k in ("ts", "value", "level", "trend")}
-            for ts, v in zip(pdf["ts"], pdf["value"]):
-                v = float(v)
-                if not seeded:
-                    level, trend, seeded = v, 0.0, 1
-                else:
-                    prev_l = level
-                    level = alpha * v + (1 - alpha) * (level + trend)
-                    trend = beta * (level - prev_l) + (1 - beta) * trend
-                rows["ts"].append(int(ts))
-                rows["value"].append(v)
-                rows["level"].append(level)
-                rows["trend"].append(trend)
-            state.update((level, trend, seeded))
-            out = pd.DataFrame(rows)
-            out.insert(0, "key", key[0])
-            out["forecast_next"] = out["level"] + out["trend"]
-            yield out
-        else:
-            state.update((level, trend, seeded))
+        level, trend, seeded = state.get if state.exists else (0.0, 0.0, 0)
+        pdf = _rows_in_fold_order(pdfs)
+        (levels, trends), (level, trend, seeded) = kernels.holt_fold(
+            pdf["value"], alpha, beta, level, trend, bool(seeded)
+        )
+        state.update((level, trend, int(seeded)))
+        out = pd.DataFrame(
+            {"key": key[0], "ts": pdf["ts"], "value": pdf["value"],
+             "level": levels, "trend": trends}
+        )
+        out["forecast_next"] = out["level"] + out["trend"]
+        yield out
 
+    return _per_key_state(
+        stream_df, key_col, ts_col, val_col, update,
+        _HOLT_OUT_SCHEMA, _HOLT_STATE_SCHEMA,
+    )
+
+
+def _rows_in_fold_order(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
+    """One key's rows of a micro-batch: every Arrow chunk concatenated
+    FIRST, then put in ``kernels.fold_order`` (sorting each chunk on
+    its own would fold in an arrival-dependent order)."""
+    return kernels.fold_order(
+        pd.concat(list(pdfs), ignore_index=True), "ts", "value"
+    )
+
+
+def _per_key_state(
+    stream_df, key_col, ts_col, val_col, update, out_schema, state_schema
+) -> DataFrame:
+    """``update`` per key over ``(key, ts: long, value: double)`` with
+    ``applyInPandasWithState`` in append mode."""
     from pyspark.sql import functions as F
 
     renamed = stream_df.select(
@@ -250,8 +233,8 @@ def stream_holt_state(
     )
     return renamed.groupBy("key").applyInPandasWithState(
         update,
-        outputStructType=_HOLT_OUT_SCHEMA,
-        stateStructType=_HOLT_STATE_SCHEMA,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -9,7 +9,10 @@ Unlike a window aggregation the result depends on every prior event,
 so state carry-over across micro-batches is essential, and unlike
 the Welford stats op (``streaming/stateful.py``) this demonstrates
 the modern StatefulProcessor lifecycle (init → handleInputRows →
-close) that production Spark 4 pipelines should target.
+close) that production Spark 4 pipelines should target.  The
+recurrence is not written here: ``EwmaProcessor`` calls
+``kernels.ewma_fold``, the one EWMA definition that ``kernels.ewma``
+and ``stateful.stream_ewma_state`` also call.
 
 Requires the RocksDB state store::
 
@@ -31,6 +34,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
@@ -41,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from meteaudata_spark.operators import kernels
 
 EWMA_OUTPUT_SCHEMA = StructType(
     [
@@ -57,11 +63,13 @@ _STATE_SCHEMA = StructType([StructField("ewma", DoubleType())])
 class EwmaProcessor(StatefulProcessor):
     """Carries the running EWMA per key across micro-batches.
 
-    Within a batch, rows are sorted by event time before folding —
-    micro-batch arrival order is not event order.  ewma_t =
-    alpha·x_t + (1−alpha)·ewma_{t−1}; the first event seeds the
-    state with its own value (pandas ``ewm(adjust=False)``
-    semantics).
+    Each call concatenates the key's Arrow chunks, puts the rows in
+    ``kernels.fold_order`` (micro-batch arrival order is not event
+    order) and runs ``kernels.ewma_fold`` — pandas ``ewm(alpha,
+    adjust=False, ignore_na=True)`` — continued from the mean held in
+    state: the same fold as ``kernels.ewma`` and
+    ``stateful.stream_ewma_state``.  The first observation seeds the
+    mean; NaN/null values carry it.
     """
 
     def __init__(self, alpha: float = 0.3) -> None:
@@ -73,27 +81,19 @@ class EwmaProcessor(StatefulProcessor):
     def handleInputRows(
         self, key, rows, timerValues
     ) -> Iterator[pd.DataFrame]:
-        prev = self.state.get()[0] if self.state.exists() else None
-        out_ts, out_v, out_e = [], [], []
-        for pdf in rows:
-            pdf = pdf.sort_values("timestamp")
-            for ts, v in zip(pdf["timestamp"], pdf["value"]):
-                prev = (
-                    float(v)
-                    if prev is None
-                    else self.alpha * float(v) + (1 - self.alpha) * prev
-                )
-                out_ts.append(ts)
-                out_v.append(float(v))
-                out_e.append(prev)
-        if prev is not None:
-            self.state.update((prev,))
+        seed = self.state.get()[0] if self.state.exists() else np.nan
+        pdf = kernels.fold_order(
+            pd.concat(list(rows), ignore_index=True), "timestamp", "value"
+        )
+        means, seed = kernels.ewma_fold(pdf["value"], self.alpha, seed)
+        if not np.isnan(seed):
+            self.state.update((seed,))
         yield pd.DataFrame(
             {
                 "key": key[0],
-                "timestamp": out_ts,
-                "value": out_v,
-                "ewma": out_e,
+                "timestamp": pdf["timestamp"],
+                "value": pdf["value"],
+                "ewma": means,
             }
         )
 

@@ -259,3 +259,22 @@ def test_holt_winters_single_point(spark):
     assert len(out) == 1
     assert out[0]["__level"] == 5.0 and out[0]["__trend"] == 0.0
     assert out[0]["__forecast_next"] == 5.0
+
+
+def test_resample_non_utc_session_takes_general_path(spark):
+    """In a non-UTC session the day-aligned fast path does not hold
+    (local midnight is not a multiple of the step in epoch time), so
+    ``resample_mean`` must take the origin-join path.  At +05:30 the
+    fast path would label hourly buckets at :30 local; pandas, on the
+    naive local timestamps Spark round-trips, labels them on the hour."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        idx = pd.date_range("2024-03-09 22:10:00", freq="7min", periods=60)
+        ser = pd.Series(np.arange(60, dtype="float64"), index=idx)
+        got = _collect(kernels.resample_mean(_to_spark(spark, ser), "1h"))
+        ref = ser.resample("1h").mean()
+        assert (got.index == ref.index).all()
+        assert np.allclose(got.values, ref.values, equal_nan=True)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)

@@ -3,6 +3,7 @@ but-unshipped ProcessingTypes) vs pandas oracles."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from meteaudata_spark.operators import kernels
 from meteaudata_spark.operators.univariate import detect_gaps, moving_average
@@ -208,3 +209,66 @@ def test_double_exponential_smoothing_signal_api(spark, provenance):
     step = sig.time_series["H#1_HOLT#1"].processing_steps[-1]
     assert step.suffix == "HOLT"
     assert step.parameters.alpha == 0.5
+
+
+def _tied_rows(reverse):
+    """Five rows, two pairs sharing a timestamp, in one of two orders."""
+    idx = pd.to_datetime(["2024-01-01 00:00"] * 2 + ["2024-01-01 00:01"] * 2
+                         + ["2024-01-01 00:02"])
+    ser = pd.Series([1.0, 3.0, 2.0, 5.0, 4.0], index=idx, name="RAW")
+    return ser.iloc[::-1] if reverse else ser
+
+
+_SMOOTHERS = {
+    "ewma": (lambda df: kernels.ewma(df, alpha=0.5), ["value"]),
+    "ewma_distributed": (
+        lambda df: kernels.ewma_distributed(df, alpha=0.5, chunk_seconds=60.0),
+        ["value"],
+    ),
+    "holt": (lambda df: kernels.holt(df), ["__level", "__trend"]),
+    "holt_winters": (
+        lambda df: kernels.holt_winters(df, m=2),
+        ["__level", "__trend", "__seasonal", "__forecast_next"],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SMOOTHERS))
+def test_smoothing_kernel_ignores_input_row_order(spark, name):
+    """Rows that share a timestamp fold in (timestamp, value) order,
+    so the same rows in another order smooth to the same series."""
+    from meteaudata_spark.timeseries import TimeSeries, series_data_equal
+
+    kernel, cols = _SMOOTHERS[name]
+    a, b = (
+        kernel(_to_spark(spark, _tied_rows(reverse)).coalesce(1))
+        for reverse in (False, True)
+    )
+    for col in cols:
+        assert series_data_equal(
+            TimeSeries(a.select("timestamp", col)),
+            TimeSeries(b.select("timestamp", col)),
+        ), col
+
+
+@pytest.mark.parametrize(
+    "op, kwargs, suffix",
+    [
+        ("exponential_smoothing", {"alpha": 0.5}, "EWMA"),
+        ("exponential_smoothing", {"alpha": 0.5, "chunk_seconds": 60.0}, "EWMA"),
+        ("double_exponential_smoothing", {}, "HOLT"),
+    ],
+)
+def test_smoothing_operator_ignores_input_row_order(
+    spark, provenance, op, kwargs, suffix
+):
+    from meteaudata_spark.operators import univariate
+    from meteaudata_spark.timeseries import series_data_equal
+
+    outs = []
+    for reverse in (False, True):
+        sig = Signal(input_data=_tied_rows(reverse), name="T", units="x",
+                     provenance=provenance, spark=spark)
+        sig.process(["T#1_RAW#1"], getattr(univariate, op), **kwargs)
+        outs.append(sig.time_series[f"T#1_{suffix}#1"])
+    assert series_data_equal(*outs)

@@ -79,20 +79,62 @@ def test_stream_hll_matches_batch(spark, tmp_path, drain):
         assert final_est == batch[key], (key, final_est, batch[key])
 
 
-def test_stream_ewma_state_matches_batch_kernel(spark, tmp_path, drain):
-    """The executable stateful EWMA must reproduce kernels.ewma
-    trajectories exactly, with state carrying across micro-batches."""
+def _two_batch_stream(spark, tmp_path, df):
+    """``df``'s first and second halves (by ``ts``) as two parquet files
+    with increasing mtimes, read back as a stream of two micro-batches."""
     import os
     import shutil
     import time
 
-    import numpy as np
-    import pandas as pd
+    from pyspark.sql import functions as F
+
+    n = df.count()
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    now = time.time()
+    halves = (df.filter(F.col("ts") < n // 2), df.filter(F.col("ts") >= n // 2))
+    for bi, part in enumerate(halves):
+        staging = str(tmp_path / f"stage{bi}")
+        part.coalesce(1).write.mode("overwrite").parquet(staging)
+        f = next(x for x in os.listdir(staging) if x.endswith(".parquet"))
+        dst = f"{src}/{bi}.parquet"
+        shutil.copy(f"{staging}/{f}", dst)
+        os.utime(dst, (now - 300 + bi * 60,) * 2)
+    return (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(src)
+    )
+
+
+def _ewma_stream_vs_batch(spark, tmp_path, drain, df):
     from pyspark.sql import functions as F
 
     from meteaudata_spark.operators import kernels
     from meteaudata_spark.streaming.stateful import stream_ewma_state
 
+    stream = _two_batch_stream(spark, tmp_path, df)
+    got = (
+        drain(stream_ewma_state(stream, alpha=0.25))
+        .orderBy("key", "ts")
+        .toPandas()
+    )
+    batch = (
+        kernels.ewma(
+            df.select("event_type", F.col("ts").alias("timestamp"), "value"),
+            alpha=0.25,
+            partition_cols=["event_type"],
+        )
+        .orderBy("event_type", "timestamp")
+        .toPandas()
+    )
+    return got, batch
+
+
+def test_stream_ewma_state_matches_batch_kernel(spark, tmp_path, drain):
+    """The executable stateful EWMA must reproduce kernels.ewma
+    trajectories exactly, with state carrying across micro-batches."""
     rng = np.random.default_rng(21)
     n = 240
     pdf = pd.DataFrame(
@@ -102,55 +144,45 @@ def test_stream_ewma_state_matches_batch_kernel(spark, tmp_path, drain):
             "value": rng.standard_normal(n),
         }
     )
-    # two micro-batches with increasing mtimes: state must carry over
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    now = time.time()
-    for bi, part in enumerate((pdf.iloc[: n // 2], pdf.iloc[n // 2 :])):
-        staging = str(tmp_path / f"stage{bi}")
-        spark.createDataFrame(part).coalesce(1).write.mode("overwrite").parquet(staging)
-        f = next(x for x in os.listdir(staging) if x.endswith(".parquet"))
-        dst = f"{src}/{bi}.parquet"
-        shutil.copy(f"{staging}/{f}", dst)
-        os.utime(dst, (now - 300 + bi * 60,) * 2)
-    schema = spark.read.parquet(src).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-    got = (
-        drain(stream_ewma_state(stream, alpha=0.25))
-        .orderBy("key", "ts")
-        .toPandas()
-    )
-
-    batch = (
-        kernels.ewma(
-            spark.createDataFrame(pdf).select(
-                "event_type", F.col("ts").alias("timestamp"), "value"
-            ),
-            alpha=0.25,
-            partition_cols=["event_type"],
-        )
-        .orderBy("event_type", "timestamp")
-        .toPandas()
+    got, batch = _ewma_stream_vs_batch(
+        spark, tmp_path, drain, spark.createDataFrame(pdf)
     )
     assert len(got) == n
-    assert np.allclose(got["ewma"].to_numpy(), batch["value"].to_numpy())
+    assert np.array_equal(got["ewma"].to_numpy(), batch["value"].to_numpy())
+
+
+def test_stream_ewma_state_carries_mean_over_nan_and_null(spark, tmp_path, drain):
+    """A NaN or a null value in the first micro-batch carries the mean,
+    as in ``kernels.ewma``; a leading one stays NaN until the first
+    observation seeds the mean."""
+    from pyspark.sql import functions as F
+
+    n = 40
+    vals = np.sin(np.arange(n, dtype=float))
+    vals[1] = np.nan  # key "a"'s first row
+    vals[8] = np.nan  # key "b", mid-series
+    pdf = pd.DataFrame(
+        {
+            "event_type": ["a" if i % 2 else "b" for i in range(n)],
+            "ts": np.arange(n, dtype=np.int64),
+            "value": vals,
+        }
+    )
+    df = spark.createDataFrame(pdf).withColumn(
+        "value", F.when(F.col("ts") != 5, F.col("value"))  # a null for "a"
+    )
+    got, batch = _ewma_stream_vs_batch(spark, tmp_path, drain, df)
+    assert len(got) == n
+    assert np.isnan(got["ewma"].iloc[0])  # "a" before its first observation
+    assert np.array_equal(
+        got["ewma"].to_numpy(), batch["value"].to_numpy(), equal_nan=True
+    )
+    assert not np.isnan(got["ewma"].iloc[1:].to_numpy()).any()
 
 
 def test_stream_holt_state_matches_batch_kernel(spark, tmp_path, drain):
     """Online Holt must equal the batch kernel's (level, trend)
     trajectory with state carried across micro-batches."""
-    import os
-    import shutil
-    import time
-
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from meteaudata_spark.operators import kernels
@@ -164,21 +196,8 @@ def test_stream_holt_state_matches_batch_kernel(spark, tmp_path, drain):
             "value": 2.0 + 0.3 * np.arange(n) + np.sin(np.arange(n) / 5),
         }
     )
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    now = time.time()
-    for bi, part in enumerate((pdf.iloc[: n // 2], pdf.iloc[n // 2 :])):
-        staging = str(tmp_path / f"stage{bi}")
-        spark.createDataFrame(part).coalesce(1).write.mode("overwrite").parquet(staging)
-        f = next(x for x in os.listdir(staging) if x.endswith(".parquet"))
-        shutil.copy(f"{staging}/{f}", f"{src}/{bi}.parquet")
-        os.utime(f"{src}/{bi}.parquet", (now - 300 + bi * 60,) * 2)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
+    df = spark.createDataFrame(pdf)
+    stream = _two_batch_stream(spark, tmp_path, df)
     got = (
         drain(stream_holt_state(stream, alpha=0.5, beta=0.25))
         .orderBy("ts")
@@ -187,9 +206,7 @@ def test_stream_holt_state_matches_batch_kernel(spark, tmp_path, drain):
 
     batch = (
         kernels.holt(
-            spark.createDataFrame(pdf).select(
-                "event_type", F.col("ts").alias("timestamp"), "value"
-            ),
+            df.select("event_type", F.col("ts").alias("timestamp"), "value"),
             alpha=0.5,
             beta=0.25,
             partition_cols=["event_type"],
@@ -198,8 +215,8 @@ def test_stream_holt_state_matches_batch_kernel(spark, tmp_path, drain):
         .toPandas()
     )
     assert len(got) == n
-    assert np.allclose(got["level"].to_numpy(), batch["__level"].to_numpy())
-    assert np.allclose(got["trend"].to_numpy(), batch["__trend"].to_numpy())
+    assert np.array_equal(got["level"].to_numpy(), batch["__level"].to_numpy())
+    assert np.array_equal(got["trend"].to_numpy(), batch["__trend"].to_numpy())
     # the trend tracks the ramp slope within the sine term's ±0.2
     # derivative envelope
     assert abs(got["trend"].iloc[-1] - 0.3) < 0.25

@@ -7,6 +7,7 @@ import pytest
 
 from meteaudata_spark.streaming.transform_state import (
     EWMA_OUTPUT_SCHEMA,
+    EwmaProcessor,
     has_transform_with_state_runtime,
     stream_ewma,
 )
@@ -85,6 +86,48 @@ def test_stream_ewma_matches_pandas(spark, tmp_path, drain):
         .reset_index(drop=True)
     )
     assert np.allclose(got["ewma"].values, ref["ref"].values)
+
+
+class _StubValueState:
+    def __init__(self):
+        self.value = None
+
+    def exists(self):
+        return self.value is not None
+
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+class _StubHandle:
+    def getValueState(self, name, schema):
+        return _StubValueState()
+
+
+def test_ewma_processor_folds_chunks_in_event_order():
+    """``handleInputRows`` driven directly (the runtime that would call
+    it needs protobuf): a micro-batch whose two Arrow chunks arrive
+    later-events-first, then a second micro-batch, must give pandas'
+    ewm over all rows in event order, NaN carried."""
+    proc = EwmaProcessor(alpha=0.25)
+    proc.init(_StubHandle())
+    vals = [1.0, 4.0, np.nan, 2.0, 8.0, 3.0, np.nan, 7.0]
+    pdf = pd.DataFrame(
+        {
+            "key": "a",
+            "timestamp": pd.date_range("2024-01-01", freq="1min", periods=8),
+            "value": vals,
+        }
+    )
+    first = proc.handleInputRows(("a",), iter([pdf.iloc[3:5], pdf.iloc[:3]]), None)
+    second = proc.handleInputRows(("a",), iter([pdf.iloc[5:]]), None)
+    got = pd.concat([*first, *second], ignore_index=True)
+    ref = pd.Series(vals).ewm(alpha=0.25, adjust=False, ignore_na=True).mean()
+    assert (got["timestamp"] == pdf["timestamp"]).all()
+    assert np.array_equal(got["ewma"].to_numpy(), ref.to_numpy(), equal_nan=True)
 
 
 def test_runtime_probe_pins_exact_missing_dependency():
