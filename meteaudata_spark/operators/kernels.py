@@ -236,16 +236,17 @@ def interpolate_linear(
     v = F.col(val_col)
     is_valid = v.isNotNull() & ~F.isnan(v) if dict(df.dtypes)[val_col] in ("double", "float") else v.isNotNull()
     valid_val = F.when(is_valid, v)
+    valid_pos = F.when(is_valid, F.col("__pos"))
 
-    pos = F.row_number().over(w_all)
-    out = (
-        df.withColumn("__pos", pos)
-        .withColumn("__vv", valid_val)
-        .withColumn("__vpos", F.when(is_valid, pos))
-        .withColumn("__prev", F.last("__vv", ignorenulls=True).over(w_back))
-        .withColumn("__prev_pos", F.last("__vpos", ignorenulls=True).over(w_back))
-        .withColumn("__next", F.last("__vv", ignorenulls=True).over(w_fwd_rev))
-        .withColumn("__next_pos", F.last("__vpos", ignorenulls=True).over(w_fwd_rev))
+    # one DataFrame call per window level: each call re-analyses the
+    # whole (often deep) input plan
+    out = df.withColumn("__pos", F.row_number().over(w_all)).withColumns(
+        {
+            "__prev": F.last(valid_val, ignorenulls=True).over(w_back),
+            "__prev_pos": F.last(valid_pos, ignorenulls=True).over(w_back),
+            "__next": F.last(valid_val, ignorenulls=True).over(w_fwd_rev),
+            "__next_pos": F.last(valid_pos, ignorenulls=True).over(w_fwd_rev),
+        }
     )
     filled = (
         F.when(is_valid, v)
@@ -258,7 +259,7 @@ def interpolate_linear(
             / (F.col("__next_pos") - F.col("__prev_pos"))
         )
     )
-    return out.withColumn(val_col, filled).select(*pcols, ts_col, val_col)
+    return out.select(*pcols, ts_col, filled.alias(val_col))
 
 
 # ----------------------------------------------------------------------

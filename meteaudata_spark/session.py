@@ -17,6 +17,14 @@ Every knob here is chosen for the 100 TB design target and merely
 * The package's parent directory on the Python workers' PYTHONPATH:
   cloudpickle ships module-level functions by reference, so workers
   must import ``meteaudata_spark`` from any driver working directory.
+* Generated-code cache bound (``spark.sql.codegen.cache.maxEntries``)
+  at 1000, not Spark's 100: one ``Signal`` round trip (ingest, a
+  4-step ``process`` chain, save, load, ``==``) compiles ~70 shared
+  classes plus ~14 per distinct ``replace_ranges`` span, and three
+  gate rows ~100.  At 100 such a cyclic working set evicts itself, so
+  every repeat recompiles most of it (~85 classes per round trip, ~20
+  per rerun of the three rows); at 1000 a plan shape seen before
+  compiles nothing.
 """
 
 from __future__ import annotations
@@ -26,6 +34,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 1000
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -45,5 +54,6 @@ def get_spark(app_name: str = "meteaudata-spark", master: str | None = None) -> 
         .config("spark.sql.warehouse.dir", "/tmp/meteaudata-spark-warehouse")
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()

@@ -506,11 +506,19 @@ def pairs_data_equal(
     """``series_data_equal`` for every pair, with all series collected
     by one ``collect_sorted`` call: one job per distinct schema however
     many pairs there are.  Driver memory holds every series of every
-    pair at once — pass one Signal's worth."""
-    frames = collect_sorted([ts.df for pair in pairs for ts in pair])
+    pair at once — pass one Signal's worth.
+
+    The right-hand frames go first, in pair order, then the left-hand
+    ones.  In the round-trip check ``loaded == saved`` the in-memory
+    Signal's series then sit in the union at the positions (tags
+    0..n-1, same whole-stage codegen ids) that ``store.save`` gave
+    them, so the comparison reuses the classes the save compiled
+    instead of generating new ones for a plan shape it has not seen."""
+    n = len(pairs)
+    frames = collect_sorted([b.df for _, b in pairs] + [a.df for a, _ in pairs])
     return all(
-        _sorted_frames_equal(frames[2 * i], frames[2 * i + 1], rtol, atol)
-        for i in range(len(pairs))
+        _sorted_frames_equal(frames[n + i], frames[i], rtol, atol)
+        for i in range(n)
     )
 
 

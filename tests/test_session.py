@@ -1,10 +1,14 @@
 """The session factory: Python workers import the package whatever the
-driver's working directory is."""
+driver's working directory is, and a repeated plan shape compiles no
+new classes."""
 
 import os
 import subprocess
 import sys
 import textwrap
+
+import numpy as np
+import pandas as pd
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -59,3 +63,46 @@ def test_workers_import_package_from_any_working_directory(tmp_path):
     assert run.returncode == 0, "\n".join(errors[-5:]) or run.stderr[-3000:]
     assert "EWMA [1.0, 2.0, 5.0]" in run.stdout, run.stdout
     assert "STATS [1, 2]" in run.stdout, run.stdout
+
+
+def test_repeated_signal_roundtrip_compiles_no_new_classes(spark, tmp_path, provenance):
+    """The generated-code cache holds a whole ``Signal`` round trip
+    (ingest -> 4-step ``process`` chain -> save -> load -> ``==``):
+    run a second time on the same input and span, it compiles
+    nothing.  At Spark's default bound (100) the round trip's classes
+    evict each other and every repeat recompiles them."""
+    from meteaudata_spark.operators import univariate as uv
+    from meteaudata_spark.session import CODEGEN_CACHE_ENTRIES
+    from meteaudata_spark.signal import Signal
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    # no stray query compiling alongside
+    assert not spark.streams.active
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    rng = np.random.default_rng(5)
+    offsets = np.sort(rng.choice(500_000, 1_500, replace=False))
+    idx = pd.Timestamp("2024-01-01") + pd.to_timedelta(offsets, unit="s")
+    ser = pd.Series(rng.standard_normal(len(idx)), index=idx, name="RAW")
+    span = [str(idx[300]), str(idx[400])]
+    steps = (
+        (uv.resample, ("5min",)),
+        (uv.replace_ranges, ([span], "calibration")),
+        (uv.linear_interpolation, ()),
+        (uv.moving_average, (5,)),
+    )
+
+    def roundtrip(run: int) -> bool:
+        sig = Signal(
+            input_data=ser, name="S", units="mg/l", provenance=provenance, spark=spark
+        )
+        for fn, args in steps:
+            sig.process([sig.all_time_series[-1]], fn, *args)
+        sig_dir = sig.save(str(tmp_path / str(run)))
+        return Signal.load_from_directory(spark, sig_dir) == sig
+
+    assert roundtrip(0)
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    assert roundtrip(1)
+    assert compiles.METRIC_COMPILATION_TIME().getCount() == before

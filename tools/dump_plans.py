@@ -8,10 +8,12 @@ don't depend on data volume, only shapes)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEADLINERS = [
     "ts_resample_5min",
@@ -211,7 +213,7 @@ def main() -> None:
             f"## {name}\n\n```\n" + "\n".join(ops[:28]) + "\n```\n"
         )
 
-    with open("PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n\n" + "\n".join(details))
     print(f"PLANS.md written ({len(HEADLINERS)} queries)")
 

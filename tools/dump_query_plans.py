@@ -13,7 +13,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
@@ -28,7 +29,7 @@ def main() -> None:
     spark = get_spark("dump_query_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
-    os.makedirs(f"plans/{tag}", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "plans", tag), exist_ok=True)
     # Prewarm the session-memoized cores so each dumped plan is the
     # plan the bench's marginal (post-warm) timing actually executes.
     warm.warm_pair_relations(spark, SF_DIR)
@@ -37,7 +38,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = f"plans/{tag}/{name}_{suffix}.txt"
+        path = os.path.join(ROOT, "plans", tag, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan)} chars)")

@@ -22,7 +22,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -108,8 +109,7 @@ def main() -> None:
     for k, v in rows.items():
         if "error" in v:
             print(f"ERROR {k}: {v['error']}")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "bench_results")
+    outdir = os.path.join(ROOT, "bench_results")
     os.makedirs(outdir, exist_ok=True)
     stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
     out = os.path.join(outdir, f"profile_{stamp}.json")
