@@ -231,34 +231,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-DOC_NGRAM_JACCARD_SQL = """
-WITH sh AS (
-  SELECT DISTINCT doc_id, shingle
-  FROM (
-    SELECT doc_id,
-           UNNEST(list_transform(
-             generate_series(1, LEN(string_split(text, ' ')) - 2),
-             i -> array_to_string(string_split(text, ' ')[i:i+2], ' ')
-           )) AS shingle
-    FROM documents
-  )
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       ROUND(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.25
-ORDER BY doc_a, doc_b
-"""
-
-
 def doc_minhash_lsh_pairs(
     spark: SparkSession,
     sf_dir: str,

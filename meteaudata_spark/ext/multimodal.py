@@ -1500,7 +1500,13 @@ def _digest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _digest_synth_gen():
     """mapInPandas generator: (doc_id, digest) batches → PCM16 WAV
     payload batches, factored out so the audio gate rows can compose
-    it with the decode-side generator in ONE Python pass."""
+    it with the decode-side generator in ONE Python pass.
+
+    Each asset is 3200 samples built from ``md5(text)``: the 16 digest
+    bytes each held constant for one 25 ms frame (200 samples at
+    8 kHz, ``sample = (byte − 128)·256``).  Constant frames make every
+    frame statistic pure integer logic on the digest bytes, so the
+    DuckDB oracles reproduce decode-side numbers from the digest hex."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # r14 (guide §4.2): one vectorized pass per batch — all
@@ -1535,23 +1541,6 @@ def _digest_synth_gen():
             )
 
     return batches
-
-
-def _digest_wav_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 3200-sample PCM16 WAV asset table from
-    ``md5(text)``: the 16 digest bytes each held constant for one
-    25 ms frame (200 samples at 8 kHz, ``sample = (byte − 128)·256``),
-    encoded with ``encode_wav`` — the shared fixture of the audio gate
-    queries (``mm_audio_vad``, ``mm_audio_features``).  Constant
-    frames make every frame statistic pure integer logic on the
-    digest bytes, so the DuckDB oracles reproduce decode-side numbers
-    from the digest hex.  (Session-memoizing this relation was
-    measured and REJECTED in r14: the persist-materialization build
-    cost more than the ~0.3 s the two consumer rows saved; the synth
-    batch loop is vectorized instead.)"""
-    return _digest_docs(spark, sf_dir).mapInPandas(
-        _digest_synth_gen(), "asset_id bigint, payload binary"
-    )
 
 
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:

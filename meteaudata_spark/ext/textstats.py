@@ -4613,7 +4613,7 @@ def _unigram_lm_core(
     max_word_len: int = 32,
 ) -> dict:
     """Shared trainer core for ``unigram_lm_train`` (final piece
-    table) and ``unigram_lm_encode_stats`` (corpus tokenization with
+    table) and ``doc_unigram_lm_encode`` (corpus tokenization with
     the trained vocabulary): seed → hard-EM rounds → prune, returning
     the span relation, the alphabet, the PRUNED scored vocabulary and
     the attribution helpers."""
@@ -4755,38 +4755,6 @@ def _unigram_lm_core(
     }
 
 
-def unigram_lm_encode_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    group_col: str = "lang",
-    max_piece_len: int = 4,
-    seed_size: int = 80,
-    em_rounds: int = 3,
-    target_multi: int = 24,
-    max_word_len: int = 32,
-) -> DataFrame:
-    """Tokenize the corpus with the pruned vocabulary
-    ``unigram_lm_train`` learns — the ENCODE half of the unigram-LM
-    lifecycle (the ``bpe_encode_stats`` analog): per group, the word
-    count, the character baseline, the token count under the trained
-    piece table's Viterbi segmentation, and the saving in basis
-    points.
-
-    The 100 TB trick is ``bpe_encode_stats``'s: a word's segmentation
-    is a pure function of the word, so the Viterbi runs ONCE per
-    distinct word (the vocabulary relation) and the corpus pays one
-    explode + keyed join + keyed agg.  Words longer than
-    ``max_word_len`` are excluded from vocabulary AND corpus counts on
-    both engines (the trainer's fence).  The gate oracle re-trains the
-    same vocabulary from the same corpus, so one row certifies train
-    AND encode.  Reference analog: none (pure [EXT])."""
-    core = _unigram_lm_core(
-        df, text_col, max_piece_len, seed_size, em_rounds, target_multi,
-        max_word_len,
-    )
-    return _ulm_encode_table(core, df, text_col, group_col, max_word_len)
-
-
 def _ulm_word_table(core: dict) -> DataFrame:
     """Per-DISTINCT-WORD application of the trained unigram-LM
     vocabulary: (word, n_chars_word, n_tokens_word, rt_word) — one
@@ -4832,6 +4800,17 @@ def _ulm_encode_table(
     max_word_len: int = 32,
     word_tokens: DataFrame | None = None,
 ) -> DataFrame:
+    """Tokenize the corpus with the pruned vocabulary the trainer core
+    learns — the ENCODE half of the unigram-LM lifecycle: per group,
+    the word count, the character baseline, the token count under the
+    trained piece table's Viterbi segmentation, and the saving in
+    basis points.
+
+    A word's segmentation is a pure function of the word, so the
+    Viterbi runs ONCE per distinct word (the vocabulary relation) and
+    the corpus pays one explode + keyed join + keyed agg.  Words
+    longer than ``max_word_len`` are excluded from vocabulary AND
+    corpus counts on both engines (the trainer's fence)."""
     if word_tokens is None:
         word_tokens = _ulm_word_table(core)
     word_tokens = word_tokens.select(
@@ -5269,7 +5248,7 @@ def _unigram_lm_encode_sql(
     target_multi: int = 24,
     max_word_len: int = 32,
 ) -> str:
-    """Oracle for ``unigram_lm_encode_stats``: re-learns the pruned
+    """Oracle for ``doc_unigram_lm_encode``: re-learns the pruned
     vocabulary with ``_unigram_lm_sql``'s CTE chain, then reads each
     word's FINAL-attribution segment count straight from the
     lens{k+1} relation (the Viterbi path lengths) and joins the

@@ -1945,12 +1945,6 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mann_kendall_from_pairs(_pairs_for(spark, sf_dir))
 
 
-def mann_kendall_trend(ev: DataFrame) -> DataFrame:
-    """Library surface for ``ts_mann_kendall`` over any events-shaped
-    frame (event_type, ts, value)."""
-    return _mann_kendall_from_pairs(_bucket_pairs(ev))
-
-
 def _mann_kendall_from_pairs(pairs: DataFrame) -> DataFrame:
     sgn = pairs.select(
         "event_type",

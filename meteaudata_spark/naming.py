@@ -100,11 +100,3 @@ def ensure_versioned(name: str) -> str:
         return with_version(base, 1)
     return name
 
-
-def rename_prefix(full_name: str, old_signal: str, new_signal: str) -> str:
-    """Rewrite the signal part of a full series name
-    (reference: Signal.rename, types.py:753-764)."""
-    signal_part, series_part = split_full_name(full_name)
-    if signal_part != old_signal:
-        return full_name
-    return f"{new_signal}{PART_SEP}{series_part}"

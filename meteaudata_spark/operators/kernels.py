@@ -334,131 +334,6 @@ def drop_duplicate_timestamps(
     )
 
 
-def interpolate_linear_distributed(
-    df: DataFrame,
-    chunk_seconds: float = 86400.0,
-    ts_col: str = "timestamp",
-    val_col: str = "value",
-) -> DataFrame:
-    """``interpolate_linear`` for ONE series too large for a single
-    window partition — the 100 TB path for an unpartitioned series.
-
-    The plain kernel's global window funnels the whole series through
-    one task.  Here the series is cut into time chunks; every window
-    below is per-chunk (parallel), and only a 2-rows-per-chunk
-    boundary table crosses chunks:
-
-      A. global position = per-chunk row_number + chunk row-count
-         prefix sum (the prefix sum runs over the tiny chunk table);
-      B. per-chunk first/last valid (value, position) → carry the
-         previous chunk's last valid / next chunk's first valid across
-         the boundary table;
-      C. inside each chunk: prev = local-last-valid else carried-in,
-         next = local-first-valid (reversed running frame) else
-         carried-forward; then the same position-ratio formula.
-
-    Exactly matches the single-window kernel (differential-tested);
-    costs two extra small shuffles on the boundary table.
-    """
-    is_valid = (
-        F.col(val_col).isNotNull() & ~F.isnan(F.col(val_col))
-        if dict(df.dtypes)[val_col] in ("double", "float")
-        else F.col(val_col).isNotNull()
-    )
-    chunked = df.withColumn(
-        "__chunk", F.floor(epoch_seconds(F.col(ts_col)) / F.lit(chunk_seconds))
-    ).withColumn("__vv", F.when(is_valid, F.col(val_col)))
-
-    w_chunk = Window.partitionBy("__chunk").orderBy(ts_col)
-    w_chunk_run = w_chunk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_chunk_rev = (
-        Window.partitionBy("__chunk")
-        .orderBy(F.col(ts_col).desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-
-    local = (
-        chunked.withColumn("__lpos", F.row_number().over(w_chunk))
-        .withColumn("__lvpos", F.when(is_valid, F.col("__lpos")))
-        .withColumn("__lprev", F.last("__vv", ignorenulls=True).over(w_chunk_run))
-        .withColumn("__lprev_pos", F.last("__lvpos", ignorenulls=True).over(w_chunk_run))
-        .withColumn("__lnext", F.last("__vv", ignorenulls=True).over(w_chunk_rev))
-        .withColumn("__lnext_pos", F.last("__lvpos", ignorenulls=True).over(w_chunk_rev))
-    )
-
-    # boundary table: one row per chunk (tiny — rows / chunk_size)
-    bounds = local.groupBy("__chunk").agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.max(F.struct("__lvpos", "__vv")).alias("__last_valid"),
-        F.min(
-            F.when(
-                F.col("__lvpos").isNotNull(), F.struct("__lvpos", "__vv")
-            )
-        ).alias("__first_valid"),
-    )
-    w_bounds = Window.orderBy("__chunk")
-    w_bounds_prev = w_bounds.rowsBetween(Window.unboundedPreceding, -1)
-    w_bounds_rev = (
-        Window.orderBy(F.col("__chunk").desc()).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-    )
-    boundary = bounds.select(
-        "__chunk",
-        (F.sum("__n").over(w_bounds) - F.col("__n")).alias("__offset"),
-        # absolute position of carried values needs the chunk offsets too
-        F.last(
-            F.when(
-                F.col("__last_valid.__lvpos").isNotNull(),
-                F.struct(
-                    (
-                        F.sum("__n").over(w_bounds)
-                        - F.col("__n")
-                        + F.col("__last_valid.__lvpos")
-                    ).alias("pos"),
-                    F.col("__last_valid.__vv").alias("val"),
-                ),
-            ),
-            ignorenulls=True,
-        ).over(w_bounds_prev).alias("__carry_prev"),
-        F.last(
-            F.when(
-                F.col("__first_valid.__lvpos").isNotNull(),
-                F.struct(
-                    (
-                        F.sum("__n").over(w_bounds)
-                        - F.col("__n")
-                        + F.col("__first_valid.__lvpos")
-                    ).alias("pos"),
-                    F.col("__first_valid.__vv").alias("val"),
-                ),
-            ),
-            ignorenulls=True,
-        ).over(w_bounds_rev).alias("__carry_next"),
-    )
-
-    joined = local.join(F.broadcast(boundary), "__chunk")
-    prev_val = F.coalesce(F.col("__lprev"), F.col("__carry_prev.val"))
-    prev_pos = F.coalesce(
-        F.col("__offset") + F.col("__lprev_pos"), F.col("__carry_prev.pos")
-    )
-    next_val = F.coalesce(F.col("__lnext"), F.col("__carry_next.val"))
-    next_pos = F.coalesce(
-        F.col("__offset") + F.col("__lnext_pos"), F.col("__carry_next.pos")
-    )
-    gpos = F.col("__offset") + F.col("__lpos")
-    filled = (
-        F.when(is_valid, F.col(val_col))
-        .when(prev_val.isNull(), F.lit(None))
-        .when(next_val.isNull(), prev_val)
-        .otherwise(
-            prev_val
-            + (next_val - prev_val) * (gpos - prev_pos) / (next_pos - prev_pos)
-        )
-    )
-    return joined.withColumn(val_col, filled).select(ts_col, val_col)
-
-
 # ----------------------------------------------------------------------
 # rolling-window smoothing (ProcessingType.SMOOTHING — declared by the
 # reference enum, never shipped; we ship it)
@@ -784,7 +659,7 @@ def ewma_distributed(
       A. per-chunk zero-seed EWMA (:func:`ewma_fold` from seed 0.0
          over the chunk's rows in :func:`fold_order`) + non-null
          prefix counts — chunks run in parallel (chunk length is the
-         task bound, as in ``interpolate_linear_distributed``);
+         task bound);
       B. chunk-stats table (one row per chunk): closing zero-seed
          mean, non-null count, first value — the seed recurrence
          s_k = e0L_k + (1−α)^{n_k}·s_{k−1} folds over this TINY

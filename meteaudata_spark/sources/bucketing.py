@@ -13,7 +13,7 @@ Bucketing requires the table catalog (`saveAsTable`) — plain
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -42,34 +42,3 @@ def write_bucketed(
         writer = writer.sortBy(sort_col)
     writer.saveAsTable(table)
 
-
-def bucketed_join_demo(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 8
-) -> DataFrame:
-    """Write orders+lineitem bucketed on the order key, return the
-    co-located join's revenue-per-orderpriority aggregate.
-
-    The join carries NO Exchange on either side — see
-    tests/test_bucketing.py for the plan assertion.
-    """
-    from pyspark.sql import functions as F
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    write_bucketed(orders, "orders_b", "o_orderkey", n_buckets)
-    write_bucketed(li, "lineitem_b", "l_orderkey", n_buckets)
-    ob = spark.table("orders_b")
-    lb = spark.table("lineitem_b")
-    revenue = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1).cast("decimal(18,2)")
-        - F.col("l_discount").cast("decimal(18,2)")
-    )
-    # merge hint: at tiny test scale the planner would broadcast (which
-    # ignores bucketing); at fact-x-fact scale SMJ is what it picks
-    # anyway, and THAT is the plan the bucket layout de-shuffles
-    return (
-        lb.join(ob.hint("merge"), lb.l_orderkey == ob.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
-        .orderBy("o_orderpriority")
-    )

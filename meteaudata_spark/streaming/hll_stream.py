@@ -40,11 +40,6 @@ _OUTPUT_SCHEMA = StructType(
 _STATE_SCHEMA = StructType([StructField("regs", ArrayType(LongType()))])
 
 
-def _rho(h: int) -> int:
-    w = h // _M
-    return 53 if w == 0 else 53 - w.bit_length()
-
-
 def _estimate(regs: list) -> int:
     s = sum(1 << (53 - m) for m in regs if m > 0)
     nb = sum(1 for m in regs if m > 0)

@@ -47,12 +47,11 @@ the pair a watermark would have discarded.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -71,10 +70,6 @@ _CANDIDATE_SCHEMA = StructType(
         StructField("first_doc_id", LongType()),
         StructField("n_seen_in_bucket", LongType()),
     ]
-)
-
-_BUCKET_STATE_SCHEMA = StructType(
-    [StructField("first_doc", LongType()), StructField("n_seen", LongType())]
 )
 
 # sharded layout: parallel arrays, one entry per live bucket in the shard
@@ -167,41 +162,13 @@ def _band_signatures_batch(
     return out
 
 
-def _update_bucket(
-    key: Tuple[int, str], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Reference per-bucket update (one state group per (band, bucket))
-    — kept as the semantics oracle for the sharded hot path."""
-    if state.hasTimedOut:
-        state.remove()
-        return
-    first_doc, n_seen = state.get if state.exists else (None, 0)
-    rows = {k: [] for k in (
-        "band", "bucket", "doc_id", "first_doc_id", "n_seen_in_bucket",
-    )}
-    for pdf in pdfs:
-        # deterministic arrival order within the micro-batch
-        for doc_id in sorted(int(d) for d in pdf["doc_id"]):
-            n_seen += 1
-            if first_doc is None:
-                first_doc = doc_id
-                continue
-            rows["band"].append(key[0])
-            rows["bucket"].append(key[1])
-            rows["doc_id"].append(doc_id)
-            rows["first_doc_id"].append(first_doc)
-            rows["n_seen_in_bucket"].append(n_seen)
-    state.update((first_doc, n_seen))
-    if rows["doc_id"]:
-        yield pd.DataFrame(rows)
-
-
 def _make_shard_update(
     ttl_minutes: int | None, evict_after_us: int | None = None
 ):
     """Shard-keyed update: a bucket→(first_doc, n_seen, last_seen) map
-    in parallel-array state; per-bucket semantics identical to
-    ``_update_bucket`` (differential-tested).  Per-bucket pruning
+    in parallel-array state: a bucket's first document is remembered,
+    every later one is emitted with that first doc id and the bucket's
+    running count.  Per-bucket pruning
     happens inline — last_seen holds wall-clock seconds under
     ``ttl_minutes``, event-time MICROSECONDS under ``evict_after_us``
     — and the group timeout only reaps fully idle shards."""

@@ -1,6 +1,6 @@
 """Streaming tokenizer encode: per-micro-batch token counting with a
 FROZEN trained unigram-LM vocabulary — the online twin of
-``textstats.unigram_lm_encode_stats`` (the step a streaming ingestion
+``textstats.doc_unigram_lm_encode`` (the step a streaming ingestion
 pipeline runs to meter token budgets as documents arrive).
 
 Design: the vocabulary (piece → integer-quantized logp, the
@@ -18,7 +18,7 @@ state store is touched.
 Exactness: the Viterbi DP and argmax-first tie semantics are
 bit-identical to the batch expression fold (same integer logp, same
 left-to-right backtrack) — the differential test streams the corpus
-and matches ``unigram_lm_encode_stats``'s totals exactly.
+and matches ``doc_unigram_lm_encode``'s totals exactly.
 
 OOV semantics (the online case the batch twin never sees): a word
 containing a character absent from the frozen vocabulary has NO
@@ -93,7 +93,7 @@ def stream_token_counts(
 ) -> DataFrame:
     """(group, text) stream → per-(micro-batch partition, group)
     partial rows (group, n_words, n_chars, n_tokens, n_oov_words); sum
-    per group downstream for the ``unigram_lm_encode_stats`` totals.
+    per group downstream for the ``doc_unigram_lm_encode`` totals.
 
     ``vocab``: list of (piece, logp_micros) from the trained
     ``unigram_lm_train`` table (the piece lengths bound the DP).

@@ -186,10 +186,9 @@ class TimeSeries:
         duplicate-timestamp count, min/max/mean of values and the
         observed median spacing (frequency check).
 
-        Spacing deltas use the chunk-and-carry idiom
-        (``kernels.interpolate_linear_distributed``, VERDICT r10 #7)
-        instead of a global lag window: the series is cut into
-        ``chunk_seconds`` time chunks, each chunk lags in its own
+        Spacing deltas use the chunk-and-carry idiom instead of a
+        global lag window: the series is cut into ``chunk_seconds``
+        time chunks, each chunk lags in its own
         window partition (parallel), and only a 1-row-per-chunk
         boundary table — each chunk's max epoch, lagged over the TINY
         chunk relation — crosses chunks to supply the first row of

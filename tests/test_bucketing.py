@@ -1,24 +1,46 @@
 """Bucketed co-located join: the join itself must run with NO shuffle
 exchange on either input (the 100 TB fact-join strategy)."""
 
-import re
-
-import pytest
+from pyspark.sql import functions as F
 
 from meteaudata_spark.plans import inspect
-from meteaudata_spark.sources.bucketing import bucketed_join_demo
+from meteaudata_spark.sources.bucketing import write_bucketed
 
 SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def warehouse(spark, tmp_path_factory):
-    return spark
+def _revenue_by_priority(orders, li):
+    revenue = F.col("l_extendedprice").cast("decimal(18,2)") * (
+        F.lit(1).cast("decimal(18,2)")
+        - F.col("l_discount").cast("decimal(18,2)")
+    )
+    # merge hint: at tiny test scale the planner would broadcast (which
+    # ignores bucketing); at fact-x-fact scale SMJ is what it picks
+    # anyway, and THAT is the plan the bucket layout de-shuffles
+    return (
+        li.join(orders.hint("merge"), li.l_orderkey == orders.o_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(F.sum(revenue).cast("double").alias("revenue"))
+        .orderBy("o_orderpriority")
+    )
 
 
-def test_bucketed_join_has_no_join_exchange(warehouse):
-    spark = warehouse
-    df = bucketed_join_demo(spark, SF, n_buckets=4)
+def _plain_tables(spark):
+    return (
+        spark.read.parquet(f"{SF}/orders.parquet"),
+        spark.read.parquet(f"{SF}/lineitem.parquet"),
+    )
+
+
+def _bucketed_join(spark):
+    orders, li = _plain_tables(spark)
+    write_bucketed(orders, "orders_b", "o_orderkey", 4)
+    write_bucketed(li, "lineitem_b", "l_orderkey", 4)
+    return _revenue_by_priority(spark.table("orders_b"), spark.table("lineitem_b"))
+
+
+def test_bucketed_join_has_no_join_exchange(spark):
+    df = _bucketed_join(spark)
     plan = inspect.formatted_plan(df)
     assert "SortMergeJoin" in plan, plan
     assert plan.count("Bucketed: true") == 2, plan
@@ -34,22 +56,7 @@ def test_bucketed_join_has_no_join_exchange(warehouse):
     assert "Exchange" not in below_join, tree
 
 
-def test_bucketed_join_values_match_unbucketed(warehouse):
-    spark = warehouse
-    from pyspark.sql import functions as F
-
-    bucketed = bucketed_join_demo(spark, SF, n_buckets=4).toPandas()
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    revenue = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1).cast("decimal(18,2)")
-        - F.col("l_discount").cast("decimal(18,2)")
-    )
-    plain = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(F.sum(revenue).cast("double").alias("revenue"))
-        .orderBy("o_orderpriority")
-        .toPandas()
-    )
+def test_bucketed_join_values_match_unbucketed(spark):
+    bucketed = _bucketed_join(spark).toPandas()
+    plain = _revenue_by_priority(*_plain_tables(spark)).toPandas()
     assert bucketed.equals(plain)

@@ -56,3 +56,26 @@ def test_sql_catalog_signal(spark, provenance, sample_series):
         "SELECT COUNT(DISTINCT series_name) AS n FROM SQ_1_long"
     ).collect()[0]["n"]
     assert long_n == 2
+
+
+def test_sql_catalog_dataset(spark, provenance, sample_series):
+    from meteaudata_spark.dataset import Dataset
+    from meteaudata_spark.operators.univariate import resample
+
+    signals = {}
+    for name in ("DA", "DB"):
+        sig = Signal(
+            input_data=sample_series, name=name, units="x",
+            provenance=provenance, spark=spark,
+        )
+        signals[sig.name] = sig
+    signals["DA#1"].process(["DA#1_RAW#1"], resample, "5min")
+    ds = Dataset(name="DSQ", signals=signals)
+    views = catalog.register_dataset(ds)
+    assert all(spark.catalog.tableExists(v) for v in views), views
+    long_n = spark.sql("SELECT COUNT(*) AS n FROM DSQ_long").collect()[0]["n"]
+    assert long_n == sum(
+        ts.df.count()
+        for sig in ds.signals.values()
+        for ts in sig.time_series.values()
+    )

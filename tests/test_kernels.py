@@ -278,3 +278,39 @@ def test_resample_non_utc_session_takes_general_path(spark):
         assert np.allclose(got.values, ref.values, equal_nan=True)
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_ewma_distributed_matches_plain_kernel(spark):
+    """Chunked EWMA must equal the single-pass kernel exactly —
+    including NaN runs, an empty chunk (gap > chunk span), and
+    leading NaNs."""
+    import numpy as np
+    import pandas as pd
+
+    from meteaudata_spark.operators import kernels
+
+    rng = np.random.default_rng(21)
+    n = 5000
+    idx = pd.date_range("2024-01-01", freq="1min", periods=n)
+    vals = rng.standard_normal(n)
+    vals[:7] = np.nan           # leading NaNs
+    vals[100:160] = np.nan      # interior NaN run
+    pdf = pd.DataFrame({"timestamp": idx, "value": vals})
+    # empty chunk: drop two whole hours of rows
+    pdf = pdf[~((pdf.timestamp >= "2024-01-01 10:00") & (pdf.timestamp < "2024-01-01 12:00"))]
+    sdf = spark.createDataFrame(pdf)
+
+    plain = (
+        kernels.ewma(sdf, alpha=0.23)
+        .toPandas().sort_values("timestamp").reset_index(drop=True)
+    )
+    dist = (
+        kernels.ewma_distributed(sdf, alpha=0.23, chunk_seconds=3600.0)
+        .toPandas().sort_values("timestamp").reset_index(drop=True)
+    )
+    assert len(plain) == len(dist)
+    assert np.allclose(
+        plain["value"].values, dist["value"].values, equal_nan=True, rtol=1e-9
+    )
+    ref = pd.Series(pdf["value"].values).ewm(alpha=0.23, adjust=False, ignore_na=True).mean()
+    assert np.allclose(dist["value"].values, ref.values, equal_nan=True, rtol=1e-9)

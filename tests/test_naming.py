@@ -44,12 +44,6 @@ def test_suffix_validation():
         naming.validate_suffix("LIN_INT")
 
 
-def test_rename_prefix():
-    assert (
-        naming.rename_prefix("CODs#1_RAW#1", "CODs#1", "BOD#2") == "BOD#2_RAW#1"
-    )
-
-
 def test_signal_versioning(spark, sample_series, provenance):
     from meteaudata_spark.signal import Signal
 

@@ -56,12 +56,11 @@ def _values(df):
     [
         lambda df: kernels.resample_mean(df, "5min"),
         lambda df: kernels.interpolate_linear(df),
-        lambda df: kernels.interpolate_linear_distributed(df, chunk_seconds=3600.0),
         lambda df: kernels.detect_gaps(df, 450.0),
         lambda df: kernels.locf(df),
         lambda df: kernels.ewma_distributed(df, alpha=0.4, chunk_seconds=3600.0),
     ],
-    ids=["resample", "interp", "interp_chunked", "gaps", "locf", "ewma_chunked"],
+    ids=["resample", "interp", "gaps", "locf", "ewma_chunked"],
 )
 def test_kernel_is_flavor_invariant(flavors, kernel):
     ref = _values(kernel(flavors["ltz"]))

@@ -1,4 +1,4 @@
-"""Streaming tokenizer encode == batch unigram_lm_encode_stats: train
+"""Streaming tokenizer encode == batch doc_unigram_lm_encode: train
 the vocabulary batch-side, stream the same corpus through
 stream_token_counts, and match the per-lang totals EXACTLY."""
 

@@ -19,12 +19,6 @@ import pandas as pd
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     pdf = pdf.reindex(sorted(pdf.columns), axis=1)
     for c in pdf.columns:
@@ -73,11 +67,12 @@ def main() -> None:
 
     import __spark_entry__ as e
     from meteaudata_spark.session import get_spark
+    from meteaudata_spark.sources.catalog import BENCH_TABLES
 
     spark = get_spark("correctness")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in BENCH_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )

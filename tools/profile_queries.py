@@ -1,18 +1,25 @@
-"""Per-query cost breakdown for the optimization rounds (guide §1):
-splits each queries() entry into
+"""Per-query timing and cost breakdown for named queries() entries
+(all of them by default):
 
-  build_s  — Python-side DataFrame construction (fn call)
+  bench_s  — min over runs of build + noop write: the number bench.py
+             reports for the row
+  build_s  — Python-side DataFrame construction (first fn call)
   plan_s   — Catalyst analysis + optimization + physical planning
              (first executedPlan access, no execution)
-  exec_s   — noop-sink execution (min of N runs, warm plan)
+  exec_s   — min over runs of the noop write alone (warm plan)
+  load_1m  — 1-minute loadavg when the row finished
 
-and counts plan features (Exchange nodes, Python eval nodes,
-sort-merge joins) from the formatted explain, so the expensive rows
-can be triaged into "driver-side plan cost" vs "executor compute" vs
-"too many shuffles" without the UI.
+Each run rebuilds the DataFrame and times its build and its noop write
+separately, as bench.py does (SPARK_GRAFT_BENCH_RUNS runs, default 3).
+Plan features (Exchange nodes, Python eval nodes, sort-merge joins, …)
+are counted from the formatted explain, so the expensive rows can be
+triaged into "driver-side plan cost" vs "executor compute" vs "too
+many shuffles" without the UI.
 
-Usage: python tools/profile_queries.py [sf_dir] [query ...]
-Writes bench_results/profile_<stamp>.json and prints a sorted table.
+Usage: python tools/profile_queries.py [sf_dir] [query ...] [--plans DIR]
+Writes bench_results/profile_<stamp>.json, prints a table sorted by
+bench_s, and with --plans writes each row's formatted plan to
+DIR/<query>.txt.
 """
 
 from __future__ import annotations
@@ -28,6 +35,12 @@ sys.path.insert(0, ROOT)
 
 def main() -> None:
     argv = sys.argv[1:]
+    plans_dir = None
+    if "--plans" in argv:
+        i = argv.index("--plans")
+        plans_dir = argv[i + 1]
+        del argv[i : i + 2]
+        os.makedirs(plans_dir, exist_ok=True)
     sf_dir = argv[0] if argv else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
@@ -43,7 +56,7 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_BENCH_WARM", "1") != "0":
         warm_pair_relations(spark, sf_dir)
 
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
+    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     rows: dict[str, dict] = {}
     for name, fn in entrymod.queries().items():
         if only and name not in only:
@@ -57,20 +70,22 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted"
             )
             t2 = time.perf_counter()
-            best = -1.0
+            if plans_dir:
+                with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+                    f.write(plan)
+            runs = []
             for _ in range(n_runs):
-                # rebuild per run like bench.py does (build+plan are
-                # inside bench's timed region as well)
-                df2 = fn(spark, sf_dir)
                 s = time.perf_counter()
+                df2 = fn(spark, sf_dir)
+                b = time.perf_counter()
                 df2.write.mode("overwrite").format("noop").save()
-                e = time.perf_counter() - s
-                best = e if best < 0 else min(best, e)
+                runs.append((b - s, time.perf_counter() - b))
             rows[name] = {
+                "bench_s": round(min(b + w for b, w in runs), 3),
                 "build_s": round(t1 - t0, 3),
                 "plan_s": round(t2 - t1, 3),
-                "exec_s": round(best, 3),
-                "total_s": round(t1 - t0 + t2 - t1 + best, 3),
+                "exec_s": round(min(w for _, w in runs), 3),
+                "load_1m": round(os.getloadavg()[0], 2),
                 "n_exchange": plan.count("Exchange"),
                 "n_reused_exchange": plan.count("ReusedExchange"),
                 "n_python": plan.count("EvalPython")
@@ -90,21 +105,21 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
 
     ok = {k: v for k, v in rows.items() if "error" not in v}
-    order = sorted(ok, key=lambda k: -ok[k]["total_s"])
+    order = sorted(ok, key=lambda k: -ok[k]["bench_s"])
     hdr = (
-        f"{'query':38s} {'total':>7s} {'build':>6s} {'plan':>6s} "
+        f"{'query':38s} {'bench':>7s} {'build':>6s} {'plan':>6s} "
         f"{'exec':>6s} {'exch':>4s} {'py':>3s} {'smj':>3s} {'win':>3s} "
-        f"{'scan':>4s} {'plan_kb':>7s}"
+        f"{'scan':>4s} {'plan_kb':>7s} {'load':>5s}"
     )
     print(hdr)
     for k in order:
         v = ok[k]
         print(
-            f"{k:38s} {v['total_s']:7.3f} {v['build_s']:6.3f} "
+            f"{k:38s} {v['bench_s']:7.3f} {v['build_s']:6.3f} "
             f"{v['plan_s']:6.3f} {v['exec_s']:6.3f} "
             f"{v['n_exchange']:4d} {v['n_python']:3d} {v['n_smj']:3d} "
             f"{v['n_window']:3d} {v['n_scans']:4d} "
-            f"{v['plan_chars'] / 1024:7.1f}"
+            f"{v['plan_chars'] / 1024:7.1f} {v['load_1m']:5.2f}"
         )
     for k, v in rows.items():
         if "error" in v:
@@ -114,7 +129,10 @@ def main() -> None:
     stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
     out = os.path.join(outdir, f"profile_{stamp}.json")
     with open(out, "w") as f:
-        json.dump({"sf_dir": sf_dir, "rows": rows}, f, indent=1, sort_keys=True)
+        json.dump(
+            {"sf_dir": sf_dir, "runs": n_runs, "rows": rows},
+            f, indent=1, sort_keys=True,
+        )
     print(f"# wrote {out}")
 
 

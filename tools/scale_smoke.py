@@ -327,9 +327,6 @@ def kernels(spark, n_rows):
         "interpolate_partitioned": lambda: K.interpolate_linear(
             base, partition_cols=part
         ),
-        "interpolate_distributed_single_series": lambda: (
-            K.interpolate_linear_distributed(single, chunk_seconds=3600.0)
-        ),
         "ewma_distributed_single_series": lambda: K.ewma_distributed(
             single, chunk_seconds=3600.0
         ),
