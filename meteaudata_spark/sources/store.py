@@ -21,12 +21,11 @@ fragment), so directory names are percent-encoded.
 Writes are batched: ``save_signal`` and ``save_dataset`` run ONE
 Parquet write per distinct series schema, not one per series — a
 ``UNION ALL`` of the series tagged by their ordinal ``__s``,
-``partitionBy("__s")`` (then ``__tpart`` for ``partition_by_time``),
-into a staging dir whose name starts with ``_`` (hidden from Spark's
-listing; under the Signal's ``data/``, or the Dataset's dir).  After
-the write commits, each ``__s=i`` dir is renamed to its series'
-``data/{encoded_name}``, so readers, the streaming sink and stores
-written before batching all see the same tree.  Upstreams the series
+``partitionBy("__s")``, into a staging dir whose name starts with
+``_`` (hidden from Spark's listing; under the Signal's ``data/``, or
+the Dataset's dir).  After the write commits, each ``__s=i`` dir is
+renamed to its series' ``data/{encoded_name}``, so a save leaves one
+layout: flat Parquet files per series dir.  Upstreams the series
 share run once (exchange reuse).  The rename is a local-filesystem
 ``os.rename``, as the manifest I/O already assumes a local path.  A
 series with no rows gets an empty directory (``partitionBy`` writes
@@ -36,6 +35,11 @@ cut off earlier leaves no new manifest.  The old series dirs are
 replaced only after the write commits, so a Signal cannot be saved
 over the dirs its own series read from: the save refuses that up
 front.
+
+A load reads every file under a series dir, in any ``key=value``
+subdir too, as a plain ``(timestamp, value)`` file: the streaming
+sink's ``__batch=N`` dirs and the time-partitioned dirs that older
+saves wrote need no partition inference, alone or mixed.
 
 The manifest's ``series_schemas`` holds each series' DDL schema: the
 loader hands it to ``spark.read.schema``, so a load runs no
@@ -52,6 +56,7 @@ Interop paths (deliberately driver-side, documented non-scalable):
 
 from __future__ import annotations
 
+import atexit
 import io
 import json
 import os
@@ -65,18 +70,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from meteaudata_spark.dataset import Dataset
-from meteaudata_spark.metadata import dump_yaml, load_yaml
+from meteaudata_spark.metadata import IndexMetadata, dump_yaml, load_yaml
 from meteaudata_spark.signal import Signal
 from meteaudata_spark.timeseries import (
     INDEX_COL,
     SERIES_COL,
     VALUE_COL,
     TimeSeries,
+    collect_sorted,
     union_by_schema,
 )
 from meteaudata_spark.functions.indexmeta import reconstruct_index
-
-_TIME_FORMATS = {"D": "yyyy-MM-dd", "M": "yyyy-MM", "Y": "yyyy"}
 
 
 def _enc(name: str) -> str:
@@ -85,68 +89,36 @@ def _enc(name: str) -> str:
 
 def _read_series_dir(
     spark: SparkSession, target: str, schema: Optional[str] = None
-):
-    """Read a series' Parquet dir regardless of layout.
-
-    ``schema`` (a DDL string) skips Spark's schema-inference job.
-
-    Three layouts exist: flat files (plain save), ``__tpart=``/
-    ``__batch=`` Hive partitions (time-partitioned save / streaming
-    sink), and — after a streaming sink appended to a batch-saved
-    series — a MIX of root files and partition dirs.  Partition
-    inference rejects the mixed case, so detect it and fall back to a
-    recursive file listing (partition columns are derived values; the
-    canonical (timestamp, value) columns live in every file)."""
+) -> DataFrame:
+    """Read every Parquet file under a series dir, subdirs included,
+    as a plain ``(timestamp, value)`` file: recursive lookup turns off
+    partition inference, so ``key=value`` subdirs add no column (see
+    the module docstring).  ``schema`` (a DDL string) skips Spark's
+    schema-inference job."""
     reader = spark.read if schema is None else spark.read.schema(schema)
-    has_root_files = any(
-        f.endswith(".parquet") for f in os.listdir(target)
-    ) if os.path.isdir(target) else False
-    has_part_dirs = any(
-        "=" in f and os.path.isdir(os.path.join(target, f))
-        for f in os.listdir(target)
-    ) if os.path.isdir(target) else False
-    if has_root_files and has_part_dirs:
-        df = reader.option("recursiveFileLookup", "true").parquet(target)
-    else:
-        df = reader.parquet(target)
-    internal = [c for c in df.columns if c.startswith("__")]
-    return df.drop(*internal) if internal else df
+    return reader.option("recursiveFileLookup", "true").parquet(target)
 
 
 # ----------------------------------------------------------------------
 # Signal
 # ----------------------------------------------------------------------
-def save_signal(
-    signal: Signal,
-    path: str,
-    data_format: str = "parquet",
-    partition_by_time: Optional[str] = None,
-) -> str:
-    """Write ``{path}/{signal.name}/`` with manifest + per-series data.
-
-    ``partition_by_time``: optional pandas-style frequency unit
-    (``"D"``/``"M"``/``"Y"``) — Hive-partitions each series' Parquet by
-    that time bucket so time-range reads prune whole directories.  The
-    right choice for huge series; pointless for small ones (one file
-    per partition).
+def save_signal(signal: Signal, path: str, data_format: str = "parquet") -> str:
+    """Write ``{path}/{signal.name}/`` with manifest + per-series data,
+    one dir of flat Parquet files per series (or one CSV file per
+    series for ``data_format="csv"``).
 
     Raises ``ValueError`` if a series reads from the dirs this save
     would replace (a Signal loaded from ``path``, or derived from one):
     save it to another path.
     """
-    sig_dir, manifest, series = _signal_manifest(
-        signal, path, data_format, partition_by_time
-    )
-    _write_series(series, os.path.join(sig_dir, "data"), partition_by_time)
+    sig_dir, manifest, series = _signal_manifest(signal, path, data_format)
+    _write_series(series, os.path.join(sig_dir, "data"))
     _write_signal_manifest(signal, sig_dir, manifest)
     return sig_dir
 
 
 def _signal_manifest(
-    signal: Signal,
-    path: str,
-    data_format: str,
-    partition_by_time: Optional[str],
+    signal: Signal, path: str, data_format: str
 ) -> tuple[str, dict, list[tuple[DataFrame, str]]]:
     """Make the Signal's dirs.  Return the Signal's dir, its manifest
     and the (frame, target dir) of each series to write as Parquet."""
@@ -157,7 +129,6 @@ def _signal_manifest(
     os.makedirs(data_dir, exist_ok=True)
     manifest = signal.metadata_dict()
     manifest["data_format"] = data_format
-    manifest["partition_by_time"] = partition_by_time
     manifest["series_dirs"] = {
         name: _enc(name) for name in signal.all_time_series
     }
@@ -178,16 +149,19 @@ def _write_signal_manifest(signal: Signal, sig_dir: str, manifest: dict) -> None
     manifest — after the data, so a save cut off earlier leaves no
     manifest that names missing or stale data."""
     if manifest["data_format"] == "csv":
-        for name, ts in signal.time_series.items():
-            _series_to_csv(ts, os.path.join(sig_dir, "data", f"{name}.csv"))
+        # one collect per schema for all the Signal's series
+        series = list(signal.time_series.items())
+        frames = collect_sorted([ts.df for _, ts in series])
+        for (name, ts), pdf in zip(series, frames):
+            ts.pandas_from_sorted(pdf).to_csv(
+                os.path.join(sig_dir, "data", f"{name}.csv")
+            )
     with open(os.path.join(sig_dir, "manifest.yaml"), "w") as fh:
         dump_yaml(manifest, fh)
 
 
 def _write_series(
-    series: list[tuple[DataFrame, str]],
-    staging_parent: str,
-    partition_by_time: Optional[str] = None,
+    series: list[tuple[DataFrame, str]], staging_parent: str
 ) -> None:
     """Write each (frame, target dir) as that dir's Parquet data: one
     write per distinct schema into a staging dir under
@@ -195,22 +169,13 @@ def _write_series(
     its target (see the module docstring)."""
     if not series:
         return
-    from pyspark.sql import functions as F
-
-    fmt = _TIME_FORMATS.get((partition_by_time or "").upper())
     unions = union_by_schema([df for df, _ in series])
     _check_not_reading_targets(unions, [target for _, target in series])
     staging = tempfile.mkdtemp(prefix="_staging-", dir=staging_parent)
     try:
         for g, (members, union) in enumerate(unions):
-            parts = [SERIES_COL]
-            if fmt is not None:
-                union = union.withColumn(
-                    "__tpart", F.date_format(INDEX_COL, fmt)
-                )
-                parts.append("__tpart")
             out = os.path.join(staging, str(g))
-            union.write.mode("overwrite").partitionBy(*parts).parquet(out)
+            union.write.mode("overwrite").partitionBy(SERIES_COL).parquet(out)
             for i in members:
                 target = series[i][1]
                 shutil.rmtree(target, ignore_errors=True)
@@ -281,7 +246,7 @@ def save_dataset(dataset: Dataset, path: str, data_format: str = "parquet") -> s
     manifest["data_format"] = data_format
     manifest["signal_dirs"] = {name: _enc(name) for name in dataset.all_signals}
     prepared = [
-        (sig, *_signal_manifest(sig, ds_dir, data_format, None))
+        (sig, *_signal_manifest(sig, ds_dir, data_format))
         for sig in dataset.signals.values()
     ]
     _write_series([s for *_, series in prepared for s in series], ds_dir)
@@ -308,59 +273,64 @@ def load_dataset(spark: SparkSession, ds_dir: str) -> Dataset:
 # zip interop (reference: types.py:42-61, 792-807, 1293-1364)
 # ----------------------------------------------------------------------
 def save_signal_zip(signal: Signal, zip_path: str, data_format: str = "parquet") -> str:
-    with tempfile.TemporaryDirectory() as tmp:
-        sig_dir = save_signal(signal, tmp, data_format=data_format)
-        _zip_dir(sig_dir, zip_path)
-    return zip_path
+    return _save_zip(save_signal, signal, zip_path, data_format)
 
 
 def load_signal_zip(spark: SparkSession, zip_path: str) -> Signal:
-    tmp = tempfile.mkdtemp(prefix="meteaudata_zip_")
-    with zipfile.ZipFile(zip_path) as zf:
-        zf.extractall(tmp)
-    return load_signal(spark, tmp)
+    return load_signal(spark, _extract_zip(zip_path))
 
 
 def save_dataset_zip(dataset: Dataset, zip_path: str, data_format: str = "parquet") -> str:
-    with tempfile.TemporaryDirectory() as tmp:
-        ds_dir = save_dataset(dataset, tmp, data_format=data_format)
-        _zip_dir(ds_dir, zip_path)
-    return zip_path
+    return _save_zip(save_dataset, dataset, zip_path, data_format)
 
 
 def load_dataset_zip(spark: SparkSession, zip_path: str) -> Dataset:
+    return load_dataset(spark, _extract_zip(zip_path))
+
+
+def _save_zip(save, obj, zip_path: str, data_format: str) -> str:
+    """``save(obj)`` into a temp dir, zipped to ``zip_path``."""
+    with tempfile.TemporaryDirectory() as tmp:
+        src_dir = save(obj, tmp, data_format=data_format)
+        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+            for root, _dirs, files in os.walk(src_dir):
+                for f in files:
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, src_dir))
+    return zip_path
+
+
+def _extract_zip(zip_path: str) -> str:
+    """Extract ``zip_path`` into a fresh temp dir and return it.  The
+    loaded object reads that dir lazily, so the dir must outlive the
+    load: it is removed at interpreter exit."""
     tmp = tempfile.mkdtemp(prefix="meteaudata_zip_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     with zipfile.ZipFile(zip_path) as zf:
         zf.extractall(tmp)
-    return load_dataset(spark, tmp)
-
-
-def _zip_dir(src_dir: str, zip_path: str) -> None:
-    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                full = os.path.join(root, f)
-                zf.write(full, os.path.relpath(full, src_dir))
+    return tmp
 
 
 # ----------------------------------------------------------------------
 # CSV interop (reference format: index col 0, value col 1, header)
 # ----------------------------------------------------------------------
-def _series_to_csv(ts: TimeSeries, csv_path: str) -> None:
-    ser = ts.to_pandas()
-    ser.to_csv(csv_path)
-
-
 def _series_from_csv(spark: SparkSession, csv_path: str, ts_meta: dict) -> TimeSeries:
-    pdf = pd.read_csv(csv_path, index_col=0)
-    ser = pdf.iloc[:, 0]
-    from meteaudata_spark.metadata import IndexMetadata
+    ser = pd.read_csv(csv_path, index_col=0).iloc[:, 0]
+    return _rebuild(spark, pd.Series(ser.index), ser.values, ts_meta)
 
-    idx_meta = IndexMetadata.model_validate(ts_meta["index_metadata"])
-    ser.index = reconstruct_index(pd.Series(ser.index), idx_meta)
-    ts = TimeSeries.from_pandas(spark, ser, name=ts_meta["name"])
-    loaded = TimeSeries.from_metadata_dict(ts.df, ts_meta)
-    return loaded
+
+def _rebuild(
+    spark: SparkSession, index: pd.Series, values, meta: dict
+) -> TimeSeries:
+    """The TimeSeries that ``meta`` describes, from its index column
+    and values as pandas read them from text: the index is rebuilt
+    from its metadata first."""
+    idx_meta = IndexMetadata.model_validate(meta["index_metadata"])
+    if idx_meta.type in ("DatetimeIndex", "PeriodIndex"):
+        index = pd.to_datetime(index)
+    ser = pd.Series(values, index=reconstruct_index(index, idx_meta))
+    fresh = TimeSeries.from_pandas(spark, ser, name=meta["name"])
+    return TimeSeries.from_metadata_dict(fresh.df, meta)
 
 
 # ----------------------------------------------------------------------
@@ -382,15 +352,7 @@ def timeseries_from_json(spark: SparkSession, blob: str) -> TimeSeries:
     payload = json.loads(blob)
     data = payload.pop("data")
     pdf = pd.DataFrame(data["data"], columns=data["columns"])
-    from meteaudata_spark.metadata import IndexMetadata
-
-    idx_meta = IndexMetadata.model_validate(payload["index_metadata"])
-    if idx_meta.type in ("DatetimeIndex", "PeriodIndex"):
-        pdf["index"] = pd.to_datetime(pdf["index"])
-    ser = pd.Series(pdf["value"].values, name=payload["name"])
-    ser.index = reconstruct_index(pdf["index"], idx_meta)
-    fresh = TimeSeries.from_pandas(spark, ser, name=payload["name"])
-    return TimeSeries.from_metadata_dict(fresh.df, payload)
+    return _rebuild(spark, pdf["index"], pdf["value"].values, payload)
 
 
 def signal_to_json(signal: Signal) -> str:

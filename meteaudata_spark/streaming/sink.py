@@ -1,9 +1,12 @@
 """Streaming sink into the native Signal store.
 
 ``stream_to_series_store`` appends a (timestamp, value) stream into a
-series' Parquet directory with exactly-once file-sink semantics
-(Spark's file sink + checkpoint), so a live Signal can be reloaded at
+series' Parquet directory with exactly-once semantics (checkpointed
+``foreachBatch`` writes), so a live Signal can be reloaded at
 any time with ``Signal.load_from_directory`` after a manifest refresh.
+Each micro-batch lands in a ``__batch=N`` subdir, whose files the
+store's load reads as plain (timestamp, value) files, as it reads a
+batch save's flat files beside them.
 
 This is the ingestion edge of the engine: sensors → Structured
 Streaming → per-series Parquet dirs → the same lineage-tracked Signal

@@ -129,7 +129,11 @@ class TimeSeries:
         """Collect (ordered by index, then value) and rebuild the pandas
         Series.  The sort runs on the driver (``collect_sorted``), so
         the collect is one job with no range-partition sampling."""
-        pdf = collect_sorted([self.df])[0]
+        return self.pandas_from_sorted(collect_sorted([self.df])[0])
+
+    def pandas_from_sorted(self, pdf: pd.DataFrame) -> pd.Series:
+        """The pandas Series rebuilt from this series' frame as
+        ``collect_sorted`` returns it (no job)."""
         index = reconstruct_index(pdf[INDEX_COL], self.index_metadata)
         values = pdf[VALUE_COL].values
         dtype = self.values_dtype if self.values_dtype != "str" else "object"

@@ -2,6 +2,9 @@
 (reference tests/test_serialization.py + save/load round-trip at
 test_metEAUdata.py:183-201)."""
 
+import atexit
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -34,6 +37,26 @@ def test_signal_zip_roundtrip(spark, processed_signal, tmp_path):
     store.save_signal_zip(processed_signal, zp)
     loaded = store.load_signal_zip(spark, zp)
     assert loaded == processed_signal
+
+
+def test_zip_extraction_dir_removed_at_exit(
+    spark, processed_signal, tmp_path, monkeypatch
+):
+    registered = []
+    monkeypatch.setattr(
+        atexit, "register", lambda fn, *a, **kw: registered.append((fn, a, kw))
+    )
+    zp = str(tmp_path / "sig.zip")
+    store.save_signal_zip(processed_signal, zp)
+    loaded = store.load_signal_zip(spark, zp)
+    # the loaded Signal reads the extraction dir lazily: it must still be there
+    assert loaded == processed_signal
+    [(fn, args, kwargs)] = registered
+    extracted = args[0]
+    assert os.path.basename(extracted).startswith("meteaudata_zip_")
+    assert os.path.isdir(extracted)
+    fn(*args, **kwargs)
+    assert not os.path.exists(extracted)
 
 
 def test_signal_csv_roundtrip(spark, processed_signal, tmp_path):
@@ -94,20 +117,6 @@ def test_nan_survives_roundtrip(spark, provenance, tmp_path):
     loaded = store.load_signal(spark, sig_dir)
     got = loaded.time_series["N#1_RAW#1"].to_pandas()
     assert np.allclose(got.values, ser.values, equal_nan=True)
-
-
-def test_time_partitioned_roundtrip(spark, processed_signal, tmp_path):
-    sig_dir = store.save_signal(
-        processed_signal, str(tmp_path), partition_by_time="D"
-    )
-    import os
-
-    series_dir = os.path.join(
-        sig_dir, "data", sorted(os.listdir(os.path.join(sig_dir, "data")))[0]
-    )
-    assert any(p.startswith("__tpart=") for p in os.listdir(series_dir))
-    loaded = store.load_signal(spark, sig_dir)
-    assert loaded == processed_signal
 
 
 def test_dataset_long_store_roundtrip(spark, provenance, tmp_path):

@@ -41,22 +41,45 @@ def _jobs(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _roundtrip_jobs(spark, sig, path, tag):
-    sig_dir, save = _jobs(spark, f"save-{tag}", lambda: store.save_signal(sig, path))
+def _roundtrip_jobs(spark, sig, path, tag, data_format="parquet"):
+    sig_dir, save = _jobs(
+        spark, f"save-{tag}", lambda: store.save_signal(sig, path, data_format)
+    )
     loaded, load = _jobs(spark, f"load-{tag}", lambda: store.load_signal(spark, sig_dir))
     equal, eq = _jobs(spark, f"eq-{tag}", lambda: loaded == sig)
     assert equal
     return save, load, eq
 
 
+def _small_and_large_jobs(spark, provenance, tmp_path, data_format):
+    """The (save, load, ==) job counts of a 2- and a 6-series Signal."""
+    return [
+        _roundtrip_jobs(
+            spark,
+            _signal(spark, provenance, columns),
+            str(tmp_path / f"{data_format}{len(columns)}"),
+            f"{data_format}{len(columns)}",
+            data_format,
+        )
+        for columns in (["A", "B"], ["A", "B", "C", "D", "E", "F"])
+    ]
+
+
 def test_job_counts_do_not_grow_with_series(spark, provenance, tmp_path):
-    small = _signal(spark, provenance, ["A", "B"])
-    large = _signal(spark, provenance, ["A", "B", "C", "D", "E", "F"])
-    counts_small = _roundtrip_jobs(spark, small, str(tmp_path / "s"), "2")
-    counts_large = _roundtrip_jobs(spark, large, str(tmp_path / "l"), "6")
+    counts_small, counts_large = _small_and_large_jobs(
+        spark, provenance, tmp_path, "parquet"
+    )
     assert counts_small == counts_large
     # the manifest's schemas spare the load its inference jobs
     assert counts_large[1] == 0
+
+
+def test_job_counts_do_not_grow_with_series_csv(spark, provenance, tmp_path):
+    # the CSV save collects all the Signal's series in one job per schema
+    counts_small, counts_large = _small_and_large_jobs(
+        spark, provenance, tmp_path, "csv"
+    )
+    assert counts_small == counts_large
 
 
 def test_mixed_dtypes_roundtrip(spark, provenance, tmp_path):

@@ -1,5 +1,10 @@
 """Streaming ingestion into the native store: stream → Parquet series
-dir → Signal.load round trip, with exactly-once restart semantics."""
+dir → Signal.load round trip, with exactly-once restart semantics, and
+the series-dir layouts a load reads: flat files, stream ``__batch=``
+dirs and the time-partitioned dirs of older saves, alone or mixed."""
+
+import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -42,6 +47,61 @@ def test_stream_ingest_then_load(spark, provenance, tmp_path):
     assert q2.awaitTermination(120)
     again = store.load_signal(spark, sig_dir)
     assert again.time_series["LIVE#1_RAW#1"].count() == 30
+
+
+def _time_partition(spark, series_dir):
+    """Rewrite a saved series dir as older time-partitioned saves laid
+    it out: ``__tpart=yyyy-MM-dd`` Hive dirs and no root files."""
+    from pyspark.sql import functions as F
+
+    staged = series_dir + ".tpart"
+    (
+        spark.read.parquet(series_dir)
+        .withColumn("__tpart", F.date_format("timestamp", "yyyy-MM-dd"))
+        .write.partitionBy("__tpart")
+        .parquet(staged)
+    )
+    shutil.rmtree(series_dir)
+    os.rename(staged, series_dir)
+    names = os.listdir(series_dir)
+    assert not [n for n in names if n.endswith(".parquet")]
+    assert len([n for n in names if n.startswith("__tpart=")]) == 3
+
+
+def _three_day_signal(spark, provenance, name):
+    idx = pd.date_range("2024-01-01", freq="6h", periods=12)
+    seed = pd.Series(np.arange(12.0), index=idx, name="RAW")
+    return Signal(
+        input_data=seed, name=name, units="x", provenance=provenance, spark=spark
+    )
+
+
+def test_legacy_time_partitioned_dir_loads(spark, provenance, tmp_path):
+    from meteaudata_spark.operators.univariate import resample
+
+    sig = _three_day_signal(spark, provenance, "OLD")
+    sig.process(["OLD#1_RAW#1"], resample, "12h")
+    sig_dir = store.save_signal(sig, str(tmp_path))
+    for name in sig.all_time_series:
+        _time_partition(spark, os.path.join(sig_dir, "data", store._enc(name)))
+    assert store.load_signal(spark, sig_dir) == sig
+
+
+def test_stream_append_into_time_partitioned_dir_loads(spark, provenance, tmp_path):
+    sig = _three_day_signal(spark, provenance, "MIX")
+    sig_dir = store.save_signal(sig, str(tmp_path))
+    _time_partition(spark, os.path.join(sig_dir, "data", store._enc("MIX#1_RAW#1")))
+
+    src = str(tmp_path / "incoming")
+    later = pd.date_range("2024-01-04", freq="6h", periods=4)
+    pdf = pd.DataFrame({"timestamp": later, "value": np.arange(12.0, 16.0)})
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = stream_to_series_store(stream, sig_dir, "MIX#1_RAW#1")
+    assert q.awaitTermination(120)
+
+    got = store.load_signal(spark, sig_dir).time_series["MIX#1_RAW#1"].to_pandas()
+    assert got.values.tolist() == list(map(float, range(16)))
 
 
 def test_dataset_plot_spec(spark, provenance):
