@@ -1,43 +1,287 @@
-"""Benchmark runner: times every queries() entry at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
+"""Benchmark runner and gate-row timer: times queries() entries at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints TWO JSON lines, the full payload
+and a compact summary:
 
     {"metric": "total_query_sec", "value": N, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+     "queries": {"q1": sec, ...}, "per_query_split": {...}, "sf": 0.1}
 
-Materialization is a noop-format write (full column evaluation on
-executors, nothing collected to the driver).
+Usage: python bench.py [query ...] [--plans DIR]
+
+Each row runs SPARK_GRAFT_BENCH_RUNS times (default 3). Run 1 times
+the build, forces the plan with one formatted explain, then times the
+noop-format write (full column evaluation on executors, nothing
+collected to the driver); later runs time the build and the write.
+Per row:
+
+  bench_s  — min over runs of build + write (the ``queries`` value)
+  build_s  — Python-side DataFrame construction of run 1
+  plan_s   — Catalyst analysis + optimization + physical planning
+             (run 1's first executedPlan access, no execution)
+  exec_s   — min over runs of the write alone
+  n_*      — plan features counted in the formatted explain
+
+Named rows are timed alone: their run is written to
+bench_results/rows_<stamp>_sf<sf>.json and the full-pass
+bench_results/latest.json is left as it is. ``--plans DIR`` writes
+each row's formatted plan to DIR/<query>.txt. The per-row table,
+sorted by bench_s, goes to stderr.
 """
 
 from __future__ import annotations
 
+import argparse
+import glob
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+OUTDIR = os.path.join(ROOT, "bench_results")
+
+import __spark_entry__ as entrymod  # noqa: E402
+
+# plan feature -> the node names counted for it in the formatted explain
+PLAN_FEATURES = {
+    "n_exchange": ("Exchange",),
+    "n_reused_exchange": ("ReusedExchange",),
+    "n_python": ("EvalPython", "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas"),
+    "n_smj": ("SortMergeJoin",),
+    "n_bhj": ("BroadcastHashJoin",),
+    "n_window": ("Window",),
+    "n_wgl": ("WindowGroupLimit",),
+    "n_scans": ("Scan parquet",),
+    "n_inmem": ("InMemoryTableScan",),
+}
+TOP_QUERIES = 40
+
+
+def pick_rows(names=()) -> dict:
+    """queries() restricted to ``names`` (every row when empty), in
+    queries() order; ValueError names each unknown row."""
+    rows = entrymod.queries()
+    unknown = [n for n in names if n not in rows]
+    if unknown:
+        raise ValueError(f"unknown queries() row(s): {', '.join(unknown)}")
+    return {k: fn for k, fn in rows.items() if not names or k in names}
+
+
+def time_row(spark, fn, sf_dir: str, n_runs: int, plan_path=None) -> dict:
+    """One row's min-of-``n_runs`` loop and its build/plan/exec split."""
+    builds, writes = [], []
+    for run in range(n_runs):
+        start = time.perf_counter()
+        df = fn(spark, sf_dir)
+        builds.append(time.perf_counter() - start)
+        if run == 0:
+            start = time.perf_counter()
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            plan_s = time.perf_counter() - start
+            if plan_path:
+                with open(plan_path, "w") as f:
+                    f.write(plan)
+        start = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        writes.append(time.perf_counter() - start)
+    split = {
+        "bench_s": round(min(b + w for b, w in zip(builds, writes)), 3),
+        "build_s": round(builds[0], 3),
+        "plan_s": round(plan_s, 3),
+        "exec_s": round(min(writes), 3),
+    }
+    for key, nodes in PLAN_FEATURES.items():
+        split[key] = sum(plan.count(n) for n in nodes)
+    split["plan_chars"] = len(plan)
+    return split
+
+
+def time_rows(spark, sf_dir: str, rows: dict, n_runs: int, plans_dir=None):
+    """Time every row; a failed row reads -1.0 in ``timings`` and has
+    no split. Returns (timings, splits, loadavgs)."""
+    if plans_dir:
+        os.makedirs(plans_dir, exist_ok=True)
+    timings: dict[str, float] = {}
+    splits: dict[str, dict] = {}
+    loadavgs: dict[str, float] = {}
+    for name, fn in rows.items():
+        try:
+            splits[name] = time_row(
+                spark, fn, sf_dir, n_runs,
+                plans_dir and os.path.join(plans_dir, f"{name}.txt"),
+            )
+            timings[name] = splits[name]["bench_s"]
+        except Exception as exc:  # noqa: BLE001 - record and continue
+            timings[name] = -1.0
+            print(f"# ERROR {name}: {type(exc).__name__}: {exc}", file=sys.stderr)
+        # 1-min loadavg at row end: round-over-round regressions on a
+        # shared host adjudicate against this instead of re-probing by
+        # hand (r4's apparent regressions were all external load)
+        loadavgs[name] = round(os.getloadavg()[0], 2)
+    return timings, splits, loadavgs
+
+
+def tree_rev() -> str:
+    """Short git rev of the checkout, ``-dirty`` when a tracked source
+    file is modified; bench output (untracked run files and the
+    tracked latest.json) cannot change code behavior, so it does not
+    count."""
+    try:
+        rev = subprocess.run(
+            ["git", "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, cwd=ROOT, timeout=10,
+        ).stdout.strip() or "unknown"
+        dirty = subprocess.run(
+            ["git", "status", "--porcelain", "--untracked-files=no",
+             "--", ":!bench_results"],
+            capture_output=True, text=True, cwd=ROOT, timeout=10,
+        ).stdout.strip()
+        return rev + "-dirty" if dirty else rev
+    except Exception:  # noqa: BLE001 - rev tag is best-effort
+        return "unknown"
+
+
+def fold_prior_min(timings: dict, git_rev: str, sf: float):
+    """Cross-run per-row MIN, folded over earlier full passes of the
+    SAME tree at the same SF: ambient host load only ever inflates
+    timings, so the min across runs is the row's real cost (VERDICT
+    r11 #7). A dirty tree never matches a clean one. Returns
+    (per_query_min, number of prior runs folded)."""
+    per_query_min = {k: v for k, v in timings.items() if v >= 0}
+    n_prior = 0
+    if git_rev.endswith("-dirty"):
+        return per_query_min, n_prior
+    try:
+        for path in glob.glob(os.path.join(OUTDIR, "bench_*.json")):
+            with open(path) as f:
+                prior = json.load(f)
+            if prior.get("git_rev") != git_rev or prior.get("sf") != sf:
+                continue
+            n_prior += 1
+            for q, sec in (prior.get("queries") or {}).items():
+                if sec >= 0 and q in per_query_min:
+                    per_query_min[q] = min(per_query_min[q], sec)
+    except Exception as exc:  # noqa: BLE001 - fold is best-effort
+        print(f"# WARN per_query_min fold failed: {exc}", file=sys.stderr)
+    return per_query_min, n_prior
+
+
+def _avg(values) -> float:
+    return round(sum(values) / len(values), 3) if values else -1.0
+
+
+def make_payload(timings, splits, loadavgs, warm_builds, *, sf, n_runs,
+                 loadavg_start) -> dict:
+    ok = [t for t in timings.values() if t >= 0]
+    warm_total = round(sum(warm_builds.values()), 3)
+    git_rev = tree_rev()
+    per_query_min, n_prior = fold_prior_min(timings, git_rev, sf)
+    pqm_ok = list(per_query_min.values())
+    return {
+        "metric": "total_query_sec",
+        # the honest full-session cost (one-time builds + marginal
+        # rows), comparable with the pre-warm-mode rounds, where the
+        # builds hid inside whichever rows ran first
+        "value": round(sum(ok) + warm_total, 3),
+        "unit": "sec",
+        "queries": timings,
+        "per_query_split": splits,
+        "n_queries": len(ok),
+        "marginal_query_sec_total": round(sum(ok), 3),
+        "warm_build_sec": warm_builds,
+        "warm_build_sec_total": warm_total,
+        "mode": "warm" if warm_builds else "cold",
+        "avg_query_sec": _avg(ok),
+        "git_rev": git_rev,
+        "per_query_min": per_query_min,
+        "per_query_min_total": round(sum(pqm_ok), 3),
+        "per_query_min_avg": _avg(pqm_ok),
+        "per_query_min_prior_runs": n_prior,
+        "sf": sf,
+        "bench_runs": n_runs,
+        "loadavg_1m": {
+            "start": loadavg_start,
+            "end": round(os.getloadavg()[0], 2),
+            "per_query": loadavgs,
+        },
+    }
+
+
+def summary_line(payload: dict, queries_file: str) -> str:
+    """The COMPACT final stdout line, picked from ``payload``: the
+    driver's BENCH artifact keeps only the last ~2000 chars of stdout,
+    so the line carries no full per-row dict (r14's embedded two, and
+    the driver could parse neither round's output, VERDICT r14 #5),
+    only the ``TOP_QUERIES`` costliest rows by bench_s, and is written
+    without spaces after separators."""
+    ok = {k: v for k, v in payload["queries"].items() if v >= 0}
+    top = sorted(ok.items(), key=lambda kv: -kv[1])[:TOP_QUERIES]
+    line = {k: payload[k] for k in (
+        "metric", "value", "unit", "marginal_query_sec_total",
+        "warm_build_sec_total", "avg_query_sec", "per_query_min_total",
+        "per_query_min_avg", "per_query_min_prior_runs", "git_rev",
+        "n_queries", "sf",
+    )}
+    line.update(
+        total_query_sec=payload["value"],
+        n_errors=len(payload["queries"]) - payload["n_queries"],
+        loadavg_1m_start=payload["loadavg_1m"]["start"],
+        loadavg_1m_end=payload["loadavg_1m"]["end"],
+        queries_file=queries_file,
+        top_queries_sec=dict(top),
+    )
+    return json.dumps(line, separators=(",", ":"))
+
+
+def print_table(splits: dict) -> None:
+    print(
+        f"{'query':38s} {'bench':>7s} {'build':>6s} {'plan':>6s} "
+        f"{'exec':>6s} {'exch':>4s} {'py':>3s} {'smj':>3s} {'win':>3s} "
+        f"{'scan':>4s} {'plan_kb':>7s}",
+        file=sys.stderr,
+    )
+    for k, v in sorted(splits.items(), key=lambda kv: -kv[1]["bench_s"]):
+        print(
+            f"{k:38s} {v['bench_s']:7.3f} {v['build_s']:6.3f} "
+            f"{v['plan_s']:6.3f} {v['exec_s']:6.3f} "
+            f"{v['n_exchange']:4d} {v['n_python']:3d} {v['n_smj']:3d} "
+            f"{v['n_window']:3d} {v['n_scans']:4d} "
+            f"{v['plan_chars'] / 1024:7.1f}",
+            file=sys.stderr,
+        )
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Time queries() gate rows.")
+    ap.add_argument("queries", nargs="*", help="rows to time (default: all)")
+    ap.add_argument("--plans", metavar="DIR",
+                    help="write each row's formatted plan to DIR/<query>.txt")
+    args = ap.parse_args()
+    try:
+        rows = pick_rows(args.queries)
+    except ValueError as exc:
+        ap.error(str(exc))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = -1.0
 
-    import __spark_entry__ as entrymod
     from meteaudata_spark.ext.warm import warm_pair_relations, warm_session
     from meteaudata_spark.session import get_spark
 
     spark = get_spark("meteaudata-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # the first measured query must not pay the session's one-time costs
+    # the first measured row must not pay the session's one-time costs
     warm_session(spark, sf_dir)
 
     # Prewarm the session-memoized shared relations (LSH pairs,
     # MinHash pairs, clusters, ...) and record their one-time build
-    # cost EXPLICITLY, so per-query numbers below are marginal cost —
+    # cost EXPLICITLY, so per-row numbers below are marginal cost —
     # not "whoever ran first paid the corpus mining" (VERDICT r9 #4).
     # SPARK_GRAFT_BENCH_WARM=0 restores the cold mode.
     warm_builds: dict[str, float] = {}
@@ -47,158 +291,33 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 - fall back to cold
             print(f"# WARN prewarm failed: {exc}", file=sys.stderr)
 
-    # min of N runs per query: the host shows intermittent external
-    # load, and min-of-N measures the query, not the neighbors
+    # min of N runs per row: the host shows intermittent external
+    # load, and min-of-N measures the row, not the neighbors
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     loadavg_start = round(os.getloadavg()[0], 2)
-    timings: dict[str, float] = {}
-    loadavgs: dict[str, float] = {}
-    for name, fn in entrymod.queries().items():
-        best = -1.0
-        try:
-            for _ in range(n_runs):
-                start = time.perf_counter()
-                df = fn(spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                elapsed = round(time.perf_counter() - start, 3)
-                best = elapsed if best < 0 else min(best, elapsed)
-        except Exception as exc:  # noqa: BLE001 - record and continue
-            best = -1.0
-            print(f"# ERROR {name}: {type(exc).__name__}: {exc}", file=sys.stderr)
-        timings[name] = best
-        # 1-min loadavg at query end: round-over-round regressions on a
-        # shared host adjudicate against this instead of re-probing by
-        # hand (r4's apparent regressions were all external load)
-        loadavgs[name] = round(os.getloadavg()[0], 2)
-
-    ok = [t for t in timings.values() if t >= 0]
-    warm_total = round(sum(warm_builds.values()), 3)
-    # Cross-run per-query MIN, folded over earlier persisted runs of
-    # the SAME tree (git rev) at the same SF: ambient host load only
-    # ever inflates timings, so the min across runs is the query's
-    # real cost — first-class here so round notes stop re-deriving it
-    # (VERDICT r11 #7). A dirty tree never matches a clean one.
-    git_rev = "unknown"
-    try:
-        import subprocess
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        git_rev = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd=here, timeout=10,
-        ).stdout.strip() or "unknown"
-        # bench output (untracked run files AND the tracked
-        # latest.json pointer a previous run rewrote) cannot change
-        # code behavior — only modified tracked SOURCE files make a
-        # tree non-comparable
-        dirty = subprocess.run(
-            ["git", "status", "--porcelain", "--untracked-files=no",
-             "--", ":!bench_results"],
-            capture_output=True, text=True, cwd=here, timeout=10,
-        ).stdout.strip()
-        if dirty:
-            git_rev += "-dirty"
-    except Exception:  # noqa: BLE001 - rev tag is best-effort
-        pass
-    per_query_min = {k: v for k, v in timings.items() if v >= 0}
-    n_prior_runs = 0
-    try:
-        import glob as _glob
-
-        outdir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "bench_results"
-        )
-        for path in _glob.glob(os.path.join(outdir, "bench_*.json")):
-            with open(path) as f:
-                prior = json.load(f)
-            if (
-                prior.get("git_rev") != git_rev
-                or git_rev.endswith("-dirty")
-                or prior.get("sf") != sf
-            ):
-                continue
-            n_prior_runs += 1
-            for q, sec in (prior.get("queries") or {}).items():
-                if sec >= 0 and q in per_query_min:
-                    per_query_min[q] = min(per_query_min[q], sec)
-    except Exception as exc:  # noqa: BLE001 - fold is best-effort
-        print(f"# WARN per_query_min fold failed: {exc}", file=sys.stderr)
-    pqm_ok = list(per_query_min.values())
-    # "value" stays the honest full-session cost (one-time builds +
-    # marginal queries) so round-over-round totals remain comparable
-    # with the pre-warm-mode rounds, where the builds hid inside
-    # whichever queries ran first
-    total = round(sum(ok) + warm_total, 3)
-    payload = {
-        "metric": "total_query_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "n_queries": len(ok),
-        "marginal_query_sec_total": round(sum(ok), 3),
-        "warm_build_sec": warm_builds,
-        "warm_build_sec_total": warm_total,
-        "mode": "warm" if warm_builds else "cold",
-        "avg_query_sec": round(sum(ok) / len(ok), 3) if ok else -1.0,
-        "git_rev": git_rev,
-        "per_query_min": per_query_min,
-        "per_query_min_total": round(sum(pqm_ok), 3),
-        "per_query_min_avg": (
-            round(sum(pqm_ok) / len(pqm_ok), 3) if pqm_ok else -1.0
-        ),
-        "per_query_min_prior_runs": n_prior_runs,
-        "sf": sf,
-        "bench_runs": n_runs,
-        "loadavg_1m": {
-            "start": loadavg_start,
-            "end": round(os.getloadavg()[0], 2),
-            "per_query": loadavgs,
-        },
-    }
+    timings, splits, loadavgs = time_rows(spark, sf_dir, rows, n_runs, args.plans)
+    payload = make_payload(
+        timings, splits, loadavgs, warm_builds,
+        sf=sf, n_runs=n_runs, loadavg_start=loadavg_start,
+    )
+    print_table(splits)
     print(json.dumps(payload))
     # ALSO persist the full result in-repo: the driver's BENCH_r*.json
-    # artifact keeps only the tail of stdout, which made per-query
-    # round-over-round deltas unrecoverable (VERDICT r8 #10).  One
-    # timestamped file per run + a stable latest.json pointer.
+    # artifact keeps only the tail of stdout, which made per-row
+    # round-over-round deltas unrecoverable (VERDICT r8 #10). One
+    # timestamped file per run; a full pass also rewrites the stable
+    # latest.json pointer.
+    stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
+    run_file = f"bench_results/{'rows' if args.queries else 'bench'}_{stamp}_sf{sf}.json"
+    queries_file = run_file if args.queries else "bench_results/latest.json"
     try:
-        outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "bench_results")
-        os.makedirs(outdir, exist_ok=True)
-        stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
-        with open(os.path.join(outdir, f"bench_{stamp}_sf{sf}.json"), "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
-        with open(os.path.join(outdir, "latest.json"), "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
+        os.makedirs(OUTDIR, exist_ok=True)
+        for rel in {run_file, queries_file}:
+            with open(os.path.join(ROOT, rel), "w") as f:
+                json.dump(payload, f, indent=1, sort_keys=True)
     except OSError as exc:
         print(f"# WARN could not persist bench_results: {exc}", file=sys.stderr)
-    # FINAL stdout line = a COMPACT summary (~350 chars, no per-query
-    # dicts): the driver's BENCH artifact keeps only the last ~2000
-    # chars of stdout, and r14's final line embedded two full
-    # 231-entry dicts, so the driver could parse NEITHER round's
-    # output and PERF came back empty (VERDICT r14 #5 / next-round
-    # #2).  The full per-query record stays on the first stdout line
-    # (the driver-contract payload above) and in bench_results/.
-    print(json.dumps({
-        "metric": "total_query_sec",
-        "value": total,
-        "unit": "sec",
-        "marginal_query_sec_total": round(sum(ok), 3),
-        "warm_build_sec_total": warm_total,
-        "total_query_sec": total,
-        "avg_query_sec": round(sum(ok) / len(ok), 3) if ok else -1.0,
-        "per_query_min_total": round(sum(pqm_ok), 3),
-        "per_query_min_avg": (
-            round(sum(pqm_ok) / len(pqm_ok), 3) if pqm_ok else -1.0
-        ),
-        "per_query_min_prior_runs": n_prior_runs,
-        "git_rev": git_rev,
-        "n_queries": len(ok),
-        "n_errors": len(timings) - len(ok),
-        "loadavg_1m_start": loadavg_start,
-        "loadavg_1m_end": round(os.getloadavg()[0], 2),
-        "queries_file": "bench_results/latest.json",
-        "sf": sf,
-    }))
+    print(summary_line(payload, queries_file))
 
 
 if __name__ == "__main__":

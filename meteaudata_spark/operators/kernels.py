@@ -47,6 +47,16 @@ def _win(partition_cols: Sequence[str], order_col: str):
     return w
 
 
+def nan_to_null(df: DataFrame, val_col: str):
+    """``val_col`` with NaN mapped to null, so ``avg``/``count``/``last``
+    skip it as pandas does (``skipna``); non-float columns pass
+    through."""
+    col = F.col(val_col)
+    if dict(df.dtypes)[val_col] in ("double", "float"):
+        return F.when(F.isnan(col), F.lit(None)).otherwise(col)
+    return col
+
+
 # ----------------------------------------------------------------------
 # resample: tumbling-window mean with an empty-bucket spine
 # ----------------------------------------------------------------------
@@ -148,9 +158,7 @@ def resample_mean(
             ts_dtype,
         )
     # avg must skip NaN like pandas: NaN→null before aggregating
-    clean_val = F.when(F.isnan(F.col(val_col)), F.lit(None)).otherwise(
-        F.col(val_col)
-    ) if dict(df.dtypes)[val_col] in ("double", "float") else F.col(val_col)
+    clean_val = nan_to_null(df, val_col)
 
     if exact_micros:
         q = F.lit(float(exact_micros))
@@ -351,12 +359,7 @@ def rolling_mean(
     w = _win(list(partition_cols), ts_col).rowsBetween(
         -(window_rows - 1), Window.currentRow
     )
-    clean = (
-        F.when(F.isnan(F.col(val_col)), F.lit(None)).otherwise(F.col(val_col))
-        if dict(df.dtypes)[val_col] in ("double", "float")
-        else F.col(val_col)
-    )
-    return df.withColumn(val_col, F.avg(clean).over(w))
+    return df.withColumn(val_col, F.avg(nan_to_null(df, val_col)).over(w))
 
 
 def locf(
@@ -376,12 +379,9 @@ def locf(
     """
     pcols = list(partition_cols)
     w = _win(pcols, ts_col).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    clean = (
-        F.when(F.isnan(F.col(val_col)), F.lit(None)).otherwise(F.col(val_col))
-        if dict(df.dtypes)[val_col] in ("double", "float")
-        else F.col(val_col)
+    return df.withColumn(
+        val_col, F.last(nan_to_null(df, val_col), ignorenulls=True).over(w)
     )
-    return df.withColumn(val_col, F.last(clean, ignorenulls=True).over(w))
 
 
 # ----------------------------------------------------------------------
@@ -452,11 +452,8 @@ def aligned_agg(
     """
     fn = {"avg": F.avg, "mean": F.avg, "sum": F.sum, "min": F.min,
           "max": F.max, "count": F.count}[agg]
-    clean = F.when(F.isnan(F.col(val_col)), F.lit(None)).otherwise(F.col(val_col)) \
-        if dict(df_long.dtypes)[val_col] in ("double", "float") else F.col(val_col)
-    return (
-        df_long.groupBy(ts_col)
-        .agg(fn(clean).alias(val_col))
+    return df_long.groupBy(ts_col).agg(
+        fn(nan_to_null(df_long, val_col)).alias(val_col)
     )
 
 

@@ -43,7 +43,6 @@ from __future__ import annotations
 import os
 import stat
 from collections import OrderedDict
-from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -126,7 +125,7 @@ def memo_relation(spark, source, key: tuple, build) -> DataFrame:
     return df
 
 
-def cache_intermediate(df: DataFrame, max_active: Optional[int] = None) -> DataFrame:
+def cache_intermediate(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for bounded-lifetime cleanup.
 
     Inside a ``pin_caches()`` block the entry is registered PINNED —
@@ -137,9 +136,8 @@ def cache_intermediate(df: DataFrame, max_active: Optional[int] = None) -> DataF
     if _pin_mode:
         _pinned[id(df)] = df
         return df
-    cap = _MAX_ACTIVE if max_active is None else max_active
     _active[id(df)] = df
-    while len(_active) > cap:
+    while len(_active) > _MAX_ACTIVE:
         _release(_active.popitem(last=False)[1])
     return df
 

@@ -16,15 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from meteaudata_spark.functions.freq import to_spark_interval
-
-
-def _nan_to_null(df: DataFrame, val_col: str):
-    """``val_col`` with NaN mapped to null, so ``avg``/``count`` skip it
-    as the batch/pandas semantics do; non-float columns pass through."""
-    col = F.col(val_col)
-    if dict(df.dtypes)[val_col] in ("double", "float"):
-        return F.when(F.isnan(col), F.lit(None)).otherwise(col)
-    return col
+from meteaudata_spark.operators.kernels import nan_to_null
 
 
 def stream_resample_mean(
@@ -43,7 +35,7 @@ def stream_resample_mean(
     null so the mean skips them, matching the batch/pandas semantics.
     """
     interval = to_spark_interval(freq)
-    clean = _nan_to_null(stream_df, val_col)
+    clean = nan_to_null(stream_df, val_col)
     grouped = (
         stream_df.withWatermark(ts_col, watermark)
         .groupBy(
@@ -75,7 +67,7 @@ def stream_sliding_mean(
     order to frame over)."""
     w = to_spark_interval(window)
     s = to_spark_interval(slide)
-    clean = _nan_to_null(stream_df, val_col)
+    clean = nan_to_null(stream_df, val_col)
     return (
         stream_df.withWatermark(ts_col, watermark)
         .groupBy(
